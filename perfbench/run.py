@@ -57,9 +57,7 @@ def start_spark(run_dir: Path, tmp: Path):
     # after the between-op System.gc(), so RSS is not a shrink-regrow cycle
     java = ("-XX:ParallelGCThreads=2 -XX:ConcGCThreads=1 "
             "-XX:CICompilerCount=2 -XX:-UseDynamicNumberOfCompilerThreads "
-            "-XX:MaxHeapFreeRatio=100 "
-            "-XX:-UsePerfData "
-            f"-Djava.io.tmpdir={tmp}")
+            f"-XX:MaxHeapFreeRatio=100 -Djava.io.tmpdir={tmp}")
     spark = get_spark(
         app_name="perfbench", master=f"local[{CORES}]",
         shuffle_partitions=CORES,
@@ -113,6 +111,10 @@ def main(argv=None) -> int:
     tmp = run_dir / "tmp"
     tmp.mkdir(parents=True)
     os.environ["TMPDIR"] = str(tmp)
+    # every JVM, Spark's launcher too: no perf-data file under /tmp
+    os.environ["JAVA_TOOL_OPTIONS"] = " ".join(
+        p for p in ("-XX:-UsePerfData", os.environ.get("JAVA_TOOL_OPTIONS"))
+        if p)
     os.environ["PYTHONPATH"] = os.pathsep.join(
         p for p in (str(ROOT), os.environ.get("PYTHONPATH")) if p)
     os.environ["PYSPARK_PYTHON"] = sys.executable

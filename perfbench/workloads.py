@@ -253,8 +253,8 @@ def build_query(ctx: Context, wh: str, name: str, p: dict):
 
 
 def run_query(ctx: Context, wh: str, name: str, p: dict,
-              jvm_gc: bool = True) -> tuple[float, float]:
-    """(latency, process-tree CPU seconds) of one query."""
+              jvm_gc: bool = True) -> None:
+    """Run one query; log its latency and process-tree CPU seconds."""
     group = ctx.group(f"q.{name}")
     cpu0 = host.tree_cpu()["total"]
     t0 = time.perf_counter()
@@ -265,17 +265,18 @@ def run_query(ctx: Context, wh: str, name: str, p: dict,
     cpu = host.tree_cpu()["total"] - cpu0
     ctx.query_log.append((name, group, dt, cpu))
     ctx.hygiene(jvm_gc)
-    return dt, cpu
 
 
 def query_pass(ctx: Context, wh: str, repeats: int = 2,
-               jvm_gc: bool = True) -> list[tuple[float, float]]:
+               jvm_gc: bool = True) -> list:
     """Each selective query under ``repeats`` seeded parameter sets and
-    each scan once, in seeded order."""
+    each scan once, in seeded order; returns the (query, params) run."""
     mix = [(q, query_params(ctx)) for q in SELECTIVE for _ in range(repeats)]
     mix += [(q, query_params(ctx)) for q in SCANS]
     ctx.rng.shuffle(mix)
-    return [run_query(ctx, wh, q, p, jvm_gc) for q, p in mix]
+    for q, p in mix:
+        run_query(ctx, wh, q, p, jvm_gc)
+    return mix
 
 
 def capture_summary_reference(ctx: Context, freq: float) -> dict:
@@ -328,8 +329,6 @@ class WarehouseQueries:
 
     def __init__(self, ctx: Context):
         self.ctx = ctx
-        self.latencies: list[float] = []
-        self.cpu = 0.0
         self.wh = ctx.warehouse("wh")
 
     def setup(self) -> None:
@@ -340,22 +339,19 @@ class WarehouseQueries:
         self.ctx.query_log.clear()
 
     def run_op(self) -> int:
-        done = query_pass(self.ctx, self.wh)
-        self.latencies.extend(dt for dt, _ in done)
-        self.cpu += sum(cpu for _, cpu in done)
-        return len(done)
+        return len(query_pass(self.ctx, self.wh))
 
     def verify(self) -> None:
         check_queries(self.ctx, self.wh)
 
     def metrics(self) -> dict:
-        n = len(self.latencies)
-        return {"throughput": n / sum(self.latencies),
-                "cpu_s_per_item": self.cpu / n,
-                "latency_p50_s": statistics.median(self.latencies),
+        log = self.ctx.query_log            # the timed passes' queries
+        lat = [dt for _, _, dt, _ in log]
+        return {"throughput": len(lat) / sum(lat),
+                "cpu_s_per_item": sum(cpu for *_, cpu in log) / len(lat),
+                "latency_p50_s": statistics.median(lat),
                 "first_rows_s": statistics.median(
-                    dt for q, _, dt, _ in self.ctx.query_log
-                    if q == "first_rows"),
+                    dt for q, _, dt, _ in log if q == "first_rows"),
                 "stored_bytes_per_input_byte": stored_ratio(self.ctx,
                                                             self.wh)}
 
