@@ -117,11 +117,12 @@ def rss_mb(pids: list[int]) -> float:
 class RssSampler:
     """Background sampler of the process tree's summed RSS; ``peak``
     covers the samples taken since the last ``reset``. The tree is
-    re-listed once a second, its members' RSS read every ``interval``."""
+    re-listed once a second, its members' RSS read five times a second."""
 
-    def __init__(self, interval: float = 0.2, relist_every: int = 5):
-        self.interval = interval
-        self.relist_every = relist_every
+    INTERVAL = 0.2
+    RELIST_EVERY = 5
+
+    def __init__(self):
         self.peak = 0.0
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
@@ -130,8 +131,8 @@ class RssSampler:
     def _run(self) -> None:
         n = 0
         pids: list[int] = []
-        while not self._stop.wait(self.interval):
-            if n % self.relist_every == 0:
+        while not self._stop.wait(self.INTERVAL):
+            if n % self.RELIST_EVERY == 0:
                 pids = tree_pids()
             n += 1
             self.peak = max(self.peak, rss_mb(pids))
