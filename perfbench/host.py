@@ -64,6 +64,11 @@ def _ticks(st: list[str]) -> int:
     return sum(int(v) for v in st[11:15])
 
 
+def _thread_ticks(st: list[str]) -> int:
+    # fields 14-15 only: a thread's cutime and cstime are its process's
+    return int(st[11]) + int(st[12])
+
+
 def _jit_ticks(pid: int) -> int:
     """CPU of the JVM's JIT compiler threads (a fixed set: the session
     turns dynamic compiler threads off, so none exits mid-run)."""
@@ -76,7 +81,7 @@ def _jit_ticks(pid: int) -> int:
         except OSError:
             continue
         st = _stat(f"{pid}/task/{tid}")
-        total += _ticks(st) if st else 0
+        total += _thread_ticks(st) if st else 0
     return total
 
 

@@ -6,6 +6,7 @@ and every file's payload; archives are cached per seed and geometry."""
 from __future__ import annotations
 
 import os
+import shutil
 import zipfile
 from multiprocessing import get_context
 
@@ -16,7 +17,8 @@ N_CHANNELS = 15
 GEOMETRY = (625, 400, 560, 151)     # psd, pvt, pfp, apd lengths
 TRACES_PER_CHANNEL = 11             # 2 psd + 2 pvt + 6 pfp + 1 apd
 INTERVAL_S = 90
-KEEP_CACHED = 4                     # archives kept in the cache
+KEEP_CACHED = 4                     # inputs of each kind kept in the cache
+GEN_PROCS = os.cpu_count() or 1     # generation is not timed: use every core
 
 
 def day_start(seed: int) -> str:
@@ -34,7 +36,7 @@ def _build(job: tuple) -> tuple[str, bytes]:
     return f"sweep_{i + 1:04d}.sigmf", raw
 
 
-def archive(cache_dir: str, seed: int, procs: int = 3) -> str:
+def archive(cache_dir: str, seed: int) -> str:
     """Path of the seed's archive, generated on first use."""
     geo = "x".join(map(str, GEOMETRY))
     path = os.path.join(cache_dir, f"day_s{seed}_{N_FILES}f_{N_CHANNELS}c"
@@ -46,7 +48,7 @@ def archive(cache_dir: str, seed: int, procs: int = 3) -> str:
     # fork, not spawn: no thread has started in this process yet, and a
     # spawn pool leaves multiprocessing's resource tracker running past
     # the run
-    pool = get_context("fork").Pool(procs)
+    pool = get_context("fork").Pool(GEN_PROCS)
     try:
         blobs = pool.map(_build, [(seed, i) for i in range(N_FILES)],
                          chunksize=8)
@@ -58,11 +60,21 @@ def archive(cache_dir: str, seed: int, procs: int = 3) -> str:
         for name, raw in blobs:
             z.writestr(name, raw)
     os.replace(tmp, path)
-    cached = sorted((os.path.join(cache_dir, f) for f in os.listdir(cache_dir)
-                     if f.endswith(".zip")), key=os.path.getmtime)
-    for old in cached[:-KEEP_CACHED]:
-        os.remove(old)
+    prune(cache_dir, "day_")
     return path
+
+
+def prune(cache_dir: str, prefix: str) -> None:
+    """Drop all but the ``KEEP_CACHED`` most recently used cached inputs
+    whose names start with ``prefix``."""
+    cached = sorted((os.path.join(cache_dir, f) for f in os.listdir(cache_dir)
+                     if f.startswith(prefix) and not f.endswith(".tmp")),
+                    key=os.path.getmtime)
+    for old in cached[:-KEEP_CACHED]:
+        if os.path.isdir(old):
+            shutil.rmtree(old)
+        else:
+            os.remove(old)
 
 
 def members(path: str) -> list[tuple[str, bytes]]:

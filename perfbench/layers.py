@@ -4,7 +4,9 @@ Every workload reports the same set: after its timed window the probe
 times single-process decode, one traced ``ingest()`` (its span tree and
 job counts), the decode stages alone through the noop sink, one cold
 first-rows read, and the query mix (the timed passes of
-``warehouse_queries``, or one pass over the probe warehouse)."""
+``warehouse_queries``, or one pass over the probe warehouse): per
+warehouse query its latency and the bytes and files it read, per corpus
+query its build and action times and its job count."""
 
 from __future__ import annotations
 
@@ -14,11 +16,13 @@ import time
 
 from nasctn_sea_ingest_spark import api, functions
 from nasctn_sea_ingest_spark import operators as ops
+from nasctn_sea_ingest_spark.operators import dedup, graph, similarity
 from nasctn_sea_ingest_spark.sources import ingest as ingest_mod
 from nasctn_sea_ingest_spark.sources import sigmf
 
-from . import host, inputs
-from .workloads import QUERIES, TABLES, first_rows, parquet_files, query_pass
+from . import corpus, host, inputs
+from .workloads import (QUERIES, TABLES, first_rows, parquet_files,
+                        query_mix, query_pass)
 
 # window metrics too noisy on a shared host for an end-to-end bound; the
 # traced run reports them as ``wall.<name>``
@@ -33,6 +37,9 @@ TRACED = (
     (functions, ("trace",)),
     (ops, ("capture_summary", "pfp_frame_sync", "roll_pfp", "ul_dl_split",
            "apd_series", "stitch_psd")),
+    (graph, ("betweenness",)),
+    (similarity, ("cosine_pairs",)),
+    (dedup, ("jaccard_pairs", "dup_clusters")),
 )
 
 
@@ -41,6 +48,9 @@ def install(tracer, spark) -> None:
         for name in names:
             tracer.wrap(module, name, f"{module.__name__.split('.')[-1]}"
                                       f".{name}")
+    # the declared corpus queries' builders
+    for name in corpus.DECLARED:
+        tracer.wrap(corpus.declared(name), "spark", f"plans.{name}")
     # the session's concrete classes: their methods override the base ones
     df = spark.range(1)
     tracer.wrap(type(df.write), "parquet", "write.parquet")
@@ -111,17 +121,22 @@ def probe(ctx, cores: int) -> dict:
     m["api.first_rows_tasks"] = counts["tasks"]
 
     if not ctx.query_log:
-        query_pass(ctx, wh)
+        query_pass(ctx, wh, query_mix(ctx))
     log = ctx.query_log
-    io = host.group_inputs(ctx.spark, [g for _, g, _, _ in log])
+    io = host.group_inputs(ctx.spark, [g for _, g, _, _, _ in log])
+    med = statistics.median
     for q in QUERIES:
-        mine = [(g, dt) for name, g, dt, _ in log if name == q]
-        m[f"wh.{q}_s"] = statistics.median(dt for _, dt in mine)
-        m[f"wh.{q}_bytes_read"] = statistics.median(
-            io[g]["bytes"] for g, _ in mine)
-        m[f"wh.{q}_files_read"] = statistics.median(
-            io[g]["files"] for g, _ in mine)
-    lat = sorted(dt for _, _, dt, _ in log)
+        mine = [(g, dt) for name, g, dt, _, _ in log if name == q]
+        m[f"wh.{q}_s"] = med(dt for _, dt in mine)
+        m[f"wh.{q}_bytes_read"] = med(io[g]["bytes"] for g, _ in mine)
+        m[f"wh.{q}_files_read"] = med(io[g]["files"] for g, _ in mine)
+    for q in corpus.CORPUS_QUERIES:
+        mine = [(g, dt, build) for name, g, dt, _, build in log if name == q]
+        m[f"corpus.{q}_build_s"] = med(b for _, _, b in mine)
+        m[f"corpus.{q}_action_s"] = med(dt - b for _, dt, b in mine)
+        m[f"corpus.{q}_jobs"] = med(host.group_counts(ctx.sc, g)["jobs"]
+                                    for g, _, _ in mine)
+    lat = sorted(dt for _, _, dt, _, _ in log)
     # highest percentile with at least 10 samples beyond it (p50 below 20)
     p = max(0.5, 1 - 10 / len(lat))
     m["wh.query_tail_s"] = lat[min(len(lat) - 1, int(p * len(lat)))]

@@ -1,15 +1,15 @@
-"""Benchmark of the sensor-day ingest and the warehouse queries.
+"""Benchmark of the sensor-day ingest and the warehouse and corpus queries.
 
     python3 perfbench/run.py --workload ingest_day --seed 1 --seconds 8 \\
         --trace 0
 
 Run from the root of a checkout. The run generates (or reuses) the seed's
-archive under ``.perfbench_work/inputs``, starts a pinned ``local[3]``
-Spark session, runs the workload's set-up and one untimed warm-up, then
-closed-loop ops for ``--seconds`` seconds (and at least the workload's
-minimum number of ops), checks the outputs, and prints
-one JSON object as the last line of stdout. ``--trace 0`` reports the
-end-to-end metrics; ``--trace 1`` records spans around the package's
+archive and corpus tables under ``.perfbench_work/inputs``, starts a
+pinned ``local[3]`` Spark session, runs the workload's set-up and one
+untimed warm-up, then closed-loop ops for ``--seconds`` seconds (and at
+least the workload's minimum number of ops), checks the outputs, and
+prints one JSON object as the last line of stdout. ``--trace 0`` reports
+the end-to-end metrics; ``--trace 1`` records spans around the package's
 public calls, writes them to ``.perfbench_work/records`` and reports the
 per-layer metrics instead. Latencies are those of the host it runs on."""
 
@@ -53,10 +53,14 @@ def start_spark(run_dir: Path, tmp: Path):
     from nasctn_sea_ingest_spark import get_spark
     from perfbench import host
     # fixed GC and JIT thread counts (a fixed set of compiler threads, so
-    # host.tree_cpu can leave their CPU out); a heap that never shrinks
+    # host.tree_cpu can leave their CPU out); the C1 compiler only: with C2
+    # the compiler threads burned about a core through every timed window
+    # and the ops' CPU moved with when compilation finished, while C1-only
+    # runs set up faster and repeat closer; a heap that never shrinks
     # after the between-op System.gc(), so RSS is not a shrink-regrow cycle
     java = ("-XX:ParallelGCThreads=2 -XX:ConcGCThreads=1 "
             "-XX:CICompilerCount=2 -XX:-UseDynamicNumberOfCompilerThreads "
+            "-XX:TieredStopAtLevel=1 "
             f"-XX:MaxHeapFreeRatio=100 -Djava.io.tmpdir={tmp}")
     spark = get_spark(
         app_name="perfbench", master=f"local[{CORES}]",
@@ -129,11 +133,11 @@ def main(argv=None) -> int:
 def run(args, run_dir: Path, tmp: Path) -> int:
     import tempfile
     tempfile.tempdir = str(tmp)
-    from perfbench import host, inputs, spans
+    from perfbench import corpus, host, inputs, spans
     t0 = time.perf_counter()
     canary_start = host.cpu_canary()
-    zip_path = inputs.archive(str(WORK / "inputs"), args.seed,
-                              procs=os.cpu_count() or CORES)
+    zip_path = inputs.archive(str(WORK / "inputs"), args.seed)
+    corpus_dir = corpus.tables(str(WORK / "inputs"), args.seed)
     excluded = time.perf_counter() - t0     # canary + input generation
 
     from perfbench import layers, workloads
@@ -146,16 +150,18 @@ def run(args, run_dir: Path, tmp: Path) -> int:
     try:
         if args.trace:
             layers.install(tracer, spark)
-        ctx = workloads.Context(spark, zip_path, str(run_dir), args.seed,
-                                tracer)
+        ctx = workloads.Context(spark, zip_path, corpus_dir, str(run_dir),
+                                args.seed, tracer)
         wl = workloads.WORKLOADS[args.workload](ctx)
         t0 = time.perf_counter()
-        wl.setup()
+        phases.update(wl.setup())
         phases["warmup_s"] = time.perf_counter() - t0
         setup_s = since_process_start() - excluded
 
         # closed loop, one client: ops until --seconds have passed, and at
-        # least the workload's minimum, so every run times the same work
+        # least the workload's minimum; every op of a workload is the same
+        # work (one ingest, or one pass of the same query mix), so the
+        # per-item metrics do not depend on how many ops fit
         attempted = failed = ops = 0
         sampler.reset()
         gc0 = host.jvm_gc_s(ctx.sc)
@@ -200,6 +206,7 @@ def run(args, run_dir: Path, tmp: Path) -> int:
         stop_spark(spark)
     canary_end = host.cpu_canary()
 
+    import pyarrow.parquet as pq
     units = json.loads((ROOT / "BENCHMARK.json").read_text())
     if args.trace:
         per_layer["host.canary_end"] = canary_end
@@ -218,7 +225,10 @@ def run(args, run_dir: Path, tmp: Path) -> int:
                   "geometry": inputs.GEOMETRY,
                   "archive_bytes": os.path.getsize(zip_path),
                   "trace_rows": inputs.N_FILES * inputs.N_CHANNELS
-                  * inputs.TRACES_PER_CHANNEL},
+                  * inputs.TRACES_PER_CHANNEL,
+                  "corpus_rows": {t: pq.ParquetFile(os.path.join(
+                      corpus_dir, f"{t}.parquet")).metadata.num_rows
+                      for t in corpus.TABLES}},
         "phases": phases, "canary_start": canary_start, "canary_end": canary_end,
         "attempted": attempted, "failed": failed, "failures": ctx.failures,
         "ops": wl.detail(), "end_to_end": e2e, "per_layer": per_layer if args.trace else None,

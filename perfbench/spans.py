@@ -50,11 +50,11 @@ class Tracer:
         return [s["end"] - s["start"] - c if "end" in s else 0.0
                 for s, c in zip(self.spans, child)]
 
-    def dump(self, path: str, extra: dict | None = None) -> None:
+    def dump(self, path: str) -> None:
         rows = [dict(s, id=i, self_s=st) for i, (s, st)
                 in enumerate(zip(self.spans, self.self_times()))]
         with open(path, "w") as f:
-            json.dump({"spans": rows, **(extra or {})}, f, indent=1)
+            json.dump({"spans": rows}, f, indent=1)
 
 
 class _Span:

@@ -4,11 +4,12 @@
 fresh warehouse plus one cold ``read_seamf_zipfile_as_sdf(zip)["psd"]
 .limit(10).collect()``.
 
-``warehouse_queries``: one op is one query of a seeded mix over the
-warehouse that ``ingest()`` writes during set-up, sent to the noop sink.
-A pass runs each selective query under two seeded parameter sets and each
-whole-table scan once, in seeded order; the timed window runs whole
-passes.
+``warehouse_queries``: one op is one query of a seeded mix, sent to the
+noop sink: queries over the warehouse that ``ingest()`` writes during
+set-up, and the corpus queries of ``perfbench.corpus`` over the seed's
+corpus tables. A pass runs every query once, the selective warehouse
+queries under seeded parameters, in seeded order; every pass runs the
+same mix, and the timed window runs whole passes.
 
 Between ops, outside the timed spans, the cache is cleared and both the
 Python and the JVM garbage collectors run."""
@@ -23,6 +24,7 @@ import statistics
 import time
 
 import numpy as np
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 
 from nasctn_sea_ingest_spark import api, functions
@@ -30,29 +32,30 @@ from nasctn_sea_ingest_spark import operators as ops
 from nasctn_sea_ingest_spark.sources import ingest as ingest_mod
 from nasctn_sea_ingest_spark.sources import sigmf
 
-from . import host, inputs
+from . import corpus, host, inputs
 
 TABLES = ("traces", "channel_metadata", "sweep_metadata")
 SELECTIVE = ("pvt_range_1m", "trace_xsec", "meta_rollup", "apd_series",
              "first_rows")
 SCANS = ("capture_summary", "stitch_psd", "frame_sync")   # whole-table reads
-QUERIES = SELECTIVE + SCANS
+QUERIES = SELECTIVE + SCANS                               # warehouse queries
 WARMUP_FILES = 24           # the ingest_day warm-up op reads this prefix
 
 
 class Context:
-    def __init__(self, spark, zip_path: str, run_dir: str, seed: int,
-                 tracer):
+    def __init__(self, spark, zip_path: str, corpus_dir: str, run_dir: str,
+                 seed: int, tracer):
         self.spark = spark
         self.sc = spark.sparkContext
         self.zip = zip_path
+        self.corpus_dir = corpus_dir
         self.run_dir = run_dir
         self.seed = seed
         self.tracer = tracer
-        self.rng = random.Random(seed)
         self.n_files = inputs.N_FILES
         self.failures: list[str] = []
-        self.query_log: list[tuple[str, str, float, float]] = []
+        # (query, job group, latency, process-tree CPU by kind, build time)
+        self.query_log: list[tuple[str, str, float, dict, float]] = []
         self.day = inputs.day_start(seed)[:10]
         self._groups = 0
 
@@ -97,13 +100,14 @@ def first_rows(ctx: Context, allow: int | None = None) -> list:
 
 
 def check_counts(ctx: Context, wh: str, n_files: int) -> None:
-    read = ctx.spark.read.parquet
+    """Row counts of the warehouse tables, from the parquet footers."""
     per_ch = n_files * inputs.N_CHANNELS
     want = {"traces": per_ch * inputs.TRACES_PER_CHANNEL,
             "channel_metadata": per_ch, "sweep_metadata": n_files,
             "quarantine": 0}
     for table, n in want.items():
-        got = read(os.path.join(wh, table)).count()
+        got = sum(pq.ParquetFile(f).metadata.num_rows
+                  for f in parquet_files(os.path.join(wh, table)))
         ctx.check(got == n, f"{table}: {got} rows, want {n}")
 
 
@@ -162,10 +166,11 @@ class IngestDay:
         self.ops: list[dict] = []
         self.last_wh: str | None = None
 
-    def setup(self) -> None:
+    def setup(self) -> dict:
         # a full-size warm-up op leaves the first timed op as much slower
         # than the second as this prefix does, at 1.4 times the cost
         shutil.rmtree(ingest_op(self.ctx, 0, allow=WARMUP_FILES)["wh"])
+        return {}
 
     def run_op(self) -> int:
         if self.last_wh:
@@ -173,10 +178,10 @@ class IngestDay:
         op = ingest_op(self.ctx, len(self.ops) + 1)
         self.ops.append(op)
         self.last_wh = op["wh"]
+        check_counts(self.ctx, op["wh"], self.ctx.n_files)
         return 1
 
     def verify(self) -> None:
-        check_counts(self.ctx, self.last_wh, self.ctx.n_files)
         check_sampled_files(self.ctx, self.last_wh)
 
     def metrics(self) -> dict:
@@ -198,8 +203,7 @@ class IngestDay:
 # warehouse_queries
 # --------------------------------------------------------------------------
 
-def query_params(ctx: Context) -> dict:
-    rng = ctx.rng
+def query_params(ctx: Context, rng: random.Random) -> dict:
     minute = rng.randrange(ctx.n_files * inputs.INTERVAL_S // 60)
     start = np.datetime64(ctx.day) + np.timedelta64(minute, "m")
     return {"t0": str(start).replace("T", " "),
@@ -209,6 +213,8 @@ def query_params(ctx: Context) -> dict:
 
 def build_query(ctx: Context, wh: str, name: str, p: dict):
     spark = ctx.spark
+    if name in corpus.CORPUS_QUERIES:
+        return corpus.build(spark, ctx.corpus_dir, name)
 
     def product(table):
         return ingest_mod.read_product(spark, wh, table)
@@ -254,29 +260,36 @@ def build_query(ctx: Context, wh: str, name: str, p: dict):
 
 def run_query(ctx: Context, wh: str, name: str, p: dict,
               jvm_gc: bool = True) -> None:
-    """Run one query; log its latency and process-tree CPU seconds."""
+    """Run one query; log its latency, process-tree CPU seconds and build
+    time (the eager jobs of iterative corpus queries run in the build)."""
     group = ctx.group(f"q.{name}")
-    cpu0 = host.tree_cpu()["total"]
+    cpu0 = host.tree_cpu()
     t0 = time.perf_counter()
     with ctx.tracer.span(f"query.{name}"):
-        build_query(ctx, wh, name, p).write.format("noop") \
-            .mode("overwrite").save()
+        df = build_query(ctx, wh, name, p)
+        t1 = time.perf_counter()
+        df.write.format("noop").mode("overwrite").save()
     dt = time.perf_counter() - t0
-    cpu = host.tree_cpu()["total"] - cpu0
-    ctx.query_log.append((name, group, dt, cpu))
+    cpu1 = host.tree_cpu()
+    ctx.query_log.append((name, group, dt,
+                          {k: cpu1[k] - cpu0[k] for k in cpu0}, t1 - t0))
     ctx.hygiene(jvm_gc)
 
 
-def query_pass(ctx: Context, wh: str, repeats: int = 2,
-               jvm_gc: bool = True) -> list:
-    """Each selective query under ``repeats`` seeded parameter sets and
-    each scan once, in seeded order; returns the (query, params) run."""
-    mix = [(q, query_params(ctx)) for q in SELECTIVE for _ in range(repeats)]
-    mix += [(q, query_params(ctx)) for q in SCANS]
-    ctx.rng.shuffle(mix)
+def query_mix(ctx: Context,
+              queries: tuple = QUERIES + corpus.CORPUS_QUERIES) -> list:
+    """Each query once, with parameters and order drawn from the seed."""
+    rng = random.Random(ctx.seed)
+    mix = [(q, query_params(ctx, rng)) for q in queries]
+    rng.shuffle(mix)
+    return mix
+
+
+def query_pass(ctx: Context, wh: str, mix: list,
+               jvm_gc: bool = True) -> int:
     for q, p in mix:
         run_query(ctx, wh, q, p, jvm_gc)
-    return mix
+    return len(mix)
 
 
 def capture_summary_reference(ctx: Context, freq: float) -> dict:
@@ -296,7 +309,7 @@ def capture_summary_reference(ctx: Context, freq: float) -> dict:
 
 
 def check_queries(ctx: Context, wh: str) -> None:
-    p = query_params(ctx)
+    p = query_params(ctx, random.Random(-ctx.seed))
     n, nch = ctx.n_files, inputs.N_CHANNELS
     # pvt rows in the minute: 2 per channel capture whose time falls in it
     t0, t1 = (np.datetime64(p[k].replace(" ", "T")) for k in ("t0", "t1"))
@@ -324,39 +337,51 @@ def check_queries(ctx: Context, wh: str) -> None:
 
 class WarehouseQueries:
     name = "warehouse_queries"
-    op_size = 2 * len(SELECTIVE) + len(SCANS)   # queries in one pass
     min_ops = 1
 
     def __init__(self, ctx: Context):
         self.ctx = ctx
         self.wh = ctx.warehouse("wh")
+        self.mix = query_mix(ctx)
+        self.op_size = len(self.mix)        # queries in one pass
 
-    def setup(self) -> None:
-        ingest_mod.ingest(self.ctx.spark, self.ctx.zip, self.wh)
-        self.ctx.hygiene()
-        query_pass(self.ctx, self.wh, repeats=1, jvm_gc=False)   # warm-up
-        self.ctx.hygiene()
-        self.ctx.query_log.clear()
+    def setup(self) -> dict:
+        ctx = self.ctx
+        t0 = time.perf_counter()
+        ingest_mod.ingest(ctx.spark, ctx.zip, self.wh)
+        ctx.hygiene()
+        t1 = time.perf_counter()
+        # warm-up: each warehouse query once; the corpus queries warm up
+        # in their oracle check, which is run once per run
+        query_pass(ctx, self.wh, query_mix(ctx, QUERIES), jvm_gc=False)
+        t2 = time.perf_counter()
+        corpus.check(ctx, ctx.corpus_dir)
+        ctx.hygiene()
+        ctx.query_log.clear()
+        return {"build_warehouse_s": t1 - t0, "warmup_queries_s": t2 - t1,
+                "check_corpus_s": time.perf_counter() - t2}
 
     def run_op(self) -> int:
-        return len(query_pass(self.ctx, self.wh))
+        return query_pass(self.ctx, self.wh, self.mix)
 
     def verify(self) -> None:
         check_queries(self.ctx, self.wh)
 
     def metrics(self) -> dict:
         log = self.ctx.query_log            # the timed passes' queries
-        lat = [dt for _, _, dt, _ in log]
+        lat = [dt for _, _, dt, _, _ in log]
         return {"throughput": len(lat) / sum(lat),
-                "cpu_s_per_item": sum(cpu for *_, cpu in log) / len(lat),
+                "cpu_s_per_item": sum(cpu["total"] for _, _, _, cpu, _ in log)
+                / len(lat),
                 "latency_p50_s": statistics.median(lat),
                 "first_rows_s": statistics.median(
-                    dt for q, _, dt, _ in log if q == "first_rows"),
+                    dt for q, _, dt, _, _ in log if q == "first_rows"),
                 "stored_bytes_per_input_byte": stored_ratio(self.ctx,
                                                             self.wh)}
 
     def detail(self) -> list:
-        return [(name, dt, cpu) for name, _, dt, cpu in self.ctx.query_log]
+        return [(name, dt, cpu, build)
+                for name, _, dt, cpu, build in self.ctx.query_log]
 
 
 WORKLOADS = {w.name: w for w in (IngestDay, WarehouseQueries)}
