@@ -15,6 +15,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from .graph import link_scores, star_components
+
 __all__ = [
     "exact_duplicates", "drop_exact_duplicates", "shingle",
     "jaccard_pairs", "minhash_signatures", "lsh_candidates",
@@ -298,92 +300,26 @@ def simhash_pairs(sigs: DataFrame, max_hamming: int = 3,
 
 
 def dup_clusters(pairs: DataFrame, d1: str = "d1", d2: str = "d2",
-                 max_iter: int = 20,
                  local_graph_rows: int = 200_000) -> DataFrame:
     """Connected components over near-dup PAIRS → dedup CLUSTERS.
 
     Candidate generators (LSH bands, simhash buckets, cosine blocks) emit
     pairwise edges; keeping "one doc per duplicate *group*" needs the
     transitive closure — A~B, B~C ⇒ {A,B,C} is one cluster even if (A,C)
-    never collided. Min-label propagation: every node starts labeled with
-    its own id; each round takes the min over itself and its neighbors;
-    fixpoint = every node carries its component's min id (the cluster
+    never collided.  Returns (node, cluster): every id that appears in
+    any pair, labeled with its component's min id (the cluster
     representative).
 
-    Scale shape: per round one equi-join (edges ⋈ labels, both keyed by
-    node id) + one groupBy-min — all shuffles on the node key, label state
-    is one row per node. Rounds needed = graph diameter; duplicate
-    clusters are near-cliques (diameter ≤ ~3 in practice), and the loop
-    exits as soon as a round changes nothing. ``localCheckpoint`` truncates
-    the growing lineage each round (an iterative algorithm, so there is no
-    single declarative plan — this is the documented Pregel-style pattern).
-
-    DIAMETER CONTRACT: labels crawl ONE hop per round, so a component
-    wider than ``max_iter`` hops cannot converge here (near-dup cliques
-    never are; CDC revision chains A~B~C~... can be).  Non-convergence
-    is DETECTED (the fixpoint aggregate still moved after ``max_iter``
-    rounds) and the call escalates to ``graph.star_components`` — same
-    (node, cluster) output, O(log n) rounds regardless of diameter — so
-    the result is correct on any topology; ``max_iter`` only bounds how
-    long the cheap path is tried first.  Callers expecting chain-shaped
-    graphs should call ``star_components`` directly and skip the wasted
-    rounds.
-
-    Returns (node, cluster): every id that appears in any pair, labeled
-    with its component's min id. Not SQL-expressible without recursion —
-    library-tested against pure-Python union-find.
+    This is :func:`graph.star_components` under the dedup name: O(log n)
+    rounds whatever the component diameter, so CDC revision chains
+    (A~B~C~... where only consecutive revisions pair) merge as fully as
+    near-dup cliques, and candidate graphs under ``local_graph_rows``
+    run its driver union-find kernel (``0`` forces the distributed
+    loop).  Not SQL-expressible without recursion — library-tested
+    against pure-Python union-find.
     """
-    e = pairs.select(F.col(d1).alias("a"), F.col(d2).alias("b"))
-    edges = e.unionByName(e.select(F.col("b").alias("a"),
-                                   F.col("a").alias("b"))).distinct()
-    edges = edges.localCheckpoint()
-    # Size the iteration to the GRAPH, not the session: every round pays
-    # (tasks × scheduling) per shuffle, so a 1000-pair candidate graph on
-    # 32 shuffle partitions spends its whole wall-clock on empty tasks.
-    # The edge count is free (edges just materialized); ~2M edges per
-    # partition keeps rounds single-digit-task locally while a 100 TB run
-    # (billions of edges) keeps its full parallelism.
-    n_e = edges.count()
-    p = max(1, -(-n_e // 2_000_000))
-    if p < edges.rdd.getNumPartitions():
-        edges = edges.coalesce(p)  # narrow — no shuffle, no re-materialize
-    labels = (edges.select(F.col("a").alias("node")).distinct()
-                   .withColumn("label", F.col("node")))
-    # convergence check: labels only ever DECREASE under min-propagation,
-    # so an unchanged sum(label) proves a fixpoint — one cheap aggregate
-    # per round instead of a join-and-count
-    prev_sum = None
-    converged = False
-    for _ in range(max_iter):
-        neigh = (edges.join(labels.withColumnRenamed("node", "b"), "b")
-                      .groupBy("a").agg(F.min("label").alias("nmin"))
-                      .withColumnRenamed("a", "node"))
-        labels = (labels.join(neigh, "node", "left")
-                  .select("node",
-                          F.least("label", F.coalesce("nmin", "label"))
-                           .alias("label"))).localCheckpoint()
-        cur = labels.agg(F.sum("label")).first()[0]
-        if cur == prev_sum:
-            converged = True
-            break
-        prev_sum = cur
-    if not converged:
-        # The last round still moved labels: the graph has diameter >
-        # max_iter (chain-shaped — e.g. CDC revision chains where only
-        # consecutive revisions pair).  Returning here would silently
-        # under-merge, so escalate to the O(log n)-round star algorithm
-        # (round-8 verdict: the flagship pipelines feed exactly this
-        # topology through here).  Costs one recompute from the raw
-        # pairs; non-convergence is the rare path.
-        from .graph import star_components
-        # local_graph_rows forwards star's size gate (its driver
-        # union-find kernel vs the distributed star loop) — 0 pins the
-        # escalation to the distributed path, which is how the
-        # chain-regression test keeps the escalated+distributed
-        # combination covered
-        return star_components(pairs, d1, d2,
-                               local_graph_rows=local_graph_rows)
-    return labels.select("node", F.col("label").alias("cluster"))
+    return star_components(pairs, d1, d2,
+                           local_graph_rows=local_graph_rows)
 
 
 def drop_near_duplicates(df: DataFrame, pairs: DataFrame,
@@ -539,7 +475,6 @@ def prune_hub_edges(pairs: DataFrame, d1: str = "d1", d2: str = "d2",
     free left join back; output-proportional, no new shuffle shape.
     Hub pre-screens for pathological degree live on
     ``link_scores(max_center_degree=...)``."""
-    from .graph import link_scores
     e = (pairs.select(F.least(d1, d2).alias("u"),
                       F.greatest(d1, d2).alias("v"))
          .where(F.col("u").isNotNull() & F.col("v").isNotNull()

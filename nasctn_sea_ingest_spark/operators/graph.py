@@ -1,21 +1,40 @@
-"""Iterative graph analytics on DataFrames: PageRank.
+"""Iterative graph analytics on DataFrames.
 
-The companion of ``dedup.dup_clusters`` (min-label propagation): where
-clustering converges in diameter-many rounds, PageRank runs a fixed-point
-power iteration. Each round is ONE equi-join (ranks x edges on src) and
-ONE aggregate (contributions by dst) — the standard distributed PageRank
-shape. Edges are repartitioned by ``src`` once up front so every round's
-join reuses that partitioning; per-round ``localCheckpoint`` truncates
-the growing lineage (same discipline as ``dup_clusters``).
+Every iterative operator here runs its rounds through ONE loop,
+:func:`_rounds`.  A round builds the next state frame, records round
+1's plan with ``stage_digest`` BEFORE the ``localCheckpoint`` that
+truncates its lineage (the Pregel-style pattern — there is no single
+declarative plan for a fixpoint), checkpoints it (eager, or lazy when
+the round's probe is an action that materializes it anyway — one job
+per round instead of two), then probes for the fixpoint.  When the
+round cap runs out, operators with a true fixpoint (components,
+shortest paths, cores, BFS) RAISE instead of returning silently
+under-converged results; fixed budgets (the PageRank family) and the
+LPA heuristic return.
 
-Driver-side state per round is three scalars (node count, dangling mass,
-L1 delta) — bounded and documented, never a data collect.
+Small graphs skip the distributed loops: :func:`_driver_gate` is the one
+size gate in front of the driver kernels (a row cap, the wide-id byte
+guard, then a collect) and :func:`_union_find` the one driver
+union-find — star_components labels components with it, the BFS
+centralities bound their work with it.  ``local_graph_rows=0`` forces
+the distributed side.
+
+The four PageRank faces share one power-iteration body
+(:func:`_power_iteration`): the global forms are the personalized ones
+with every node a seed, and the exact forms swap the float update for
+BIGINT floor division.  Driver-side state per round is a bounded probe
+scalar, never a data collect.
 """
 
 from __future__ import annotations
 
+from collections import Counter, deque
+from functools import reduce
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.types import (BinaryType, DoubleType, LongType,
+                               StringType, StructField, StructType)
 
 from ..querylog import stage_digest
 
@@ -27,6 +46,241 @@ __all__ = ["pagerank", "pagerank_exact", "star_components",
            "label_propagation", "temporal_edges", "link_scores",
            "hits_exact", "betweenness", "assortativity",
            "closeness"]
+
+
+def _rounds(state, step, done, *, max_iter: int, tag: str,
+            eager: bool = False, exhausted: "str | None" = None):
+    """The round loop of every iterative operator in this module.
+
+    Up to ``max_iter`` times: ``new = step(state)``; record its plan as
+    stage ``tag`` (the collector keeps round 1's — later rounds differ
+    only in the checkpoint scan they start from); ``localCheckpoint``
+    it, eagerly or lazily (lazy only when ``done`` runs an action that
+    reads every partition of ``new``); stop once ``done(state, new)``.
+    Returns the last state.  Running out of rounds raises
+    ``RuntimeError(exhausted)``, or returns the last state when
+    ``exhausted`` is None."""
+    for _ in range(max_iter):
+        new = step(state)
+        stage_digest(tag, new)
+        new = new.localCheckpoint(eager=eager)
+        stop = done(state, new)
+        state = new
+        if stop:
+            return state
+    if exhausted is not None:
+        raise RuntimeError(exhausted)
+    return state
+
+
+def _empty(df: DataFrame) -> bool:
+    """Fixpoint probe: ``df`` has no rows (one small job)."""
+    return not df.limit(1).count()
+
+
+def _repeats(value):
+    """Fixpoint probe for monotone states: stop once ``value(new)`` — a
+    one-row aggregate — equals the previous round's."""
+    last = [None]
+
+    def done(_, new):
+        v = value(new)
+        stop, last[0] = v == last[0], v
+        return stop
+    return done
+
+
+def _driver_gate(cap: int, edges: DataFrame,
+                 nodes: "DataFrame | None" = None,
+                 n_e: "int | None" = None):
+    """The size gate in front of every driver graph kernel (the
+    ``train_bpe`` precedent: when a distributed loop's per-round cost is
+    pure planning and scheduling, run the bounded driver algorithm).
+
+    The edge frame — and the node frame when given — must each fit
+    ``cap`` rows, counted on materialized frames so the gate cannot
+    race the collect (``n_e`` passes an edge count the caller already
+    has).  For STRING/BINARY ids the row budget alone under-prices the
+    collect (a 128-char doc id costs ~10x a bigint on the driver), so
+    the cap shrinks by the mean id width over the last frame,
+    ``cap * 16 / avg_len``: a 160-byte-id graph passes only up to ~20k
+    rows and the collected bytes stay in the numeric default's few-MB
+    envelope.  Returns the collected rows of each frame, or None when
+    the graph takes the distributed loop (``cap=0`` always does)."""
+    if not cap:
+        return None
+    frames = [edges] if nodes is None else [edges, nodes]
+    sizes = [edges.count() if n_e is None else n_e]
+    if nodes is not None and sizes[0] <= cap:
+        sizes.append(nodes.count())
+    if max(sizes) > cap:
+        return None
+    probe = frames[-1]
+    if isinstance(probe.schema[0].dataType, (StringType, BinaryType)):
+        widths = probe.agg(*[F.avg(F.length(c))
+                             for c in probe.columns]).first()
+        width = sum(w or 0.0 for w in widths) / len(widths)
+        if max(sizes) > int(cap * 16 // max(16.0, width)):
+            return None
+    return [f.collect() for f in frames]
+
+
+def _union_find(nodes, edges) -> dict:
+    """Driver union-find (path halving, union by attachment): maps
+    every node to its component's root."""
+    parent = {n: n for n in nodes}
+
+    def find(x):
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:
+            parent[x], x = r, parent[x]
+        return r
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[ra] = rb
+    return {n: find(n) for n in parent}
+
+
+def _driver_frame(spark, node_field, rows, *fields) -> DataFrame:
+    """A driver kernel's result frame: ``node`` typed like the input
+    ids, then ``fields``."""
+    return spark.createDataFrame(rows, StructType([
+        StructField("node", node_field.dataType, node_field.nullable),
+        *fields]))
+
+
+def _is_materialized(df: DataFrame) -> bool:
+    """True when ``df``'s optimized plan is only projections and
+    filters over an existing-RDD scan (a checkpoint, or rows handed in
+    from the driver): re-checkpointing such a frame would copy it in
+    one extra job for nothing.  Checked on the plan's node classes."""
+    kinds, todo = set(), [df._jdf.queryExecution().optimizedPlan()]
+    while todo:
+        node = todo.pop()
+        kinds.add(node.getClass().getSimpleName())
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return "LogicalRDD" in kinds and kinds <= {"LogicalRDD", "Project",
+                                               "Filter"}
+
+
+def _power_iteration(edges: DataFrame, src: str, dst: str, sources,
+                     rounds: int, tag: str, out: str,
+                     tol: "float | None" = None, damping: float = 0.85,
+                     scale: "int | None" = None, num: int = 85,
+                     den: int = 100) -> DataFrame:
+    """The one PageRank body behind all four faces.  ``sources=None``
+    is the global form: every node a seed through a literal column
+    (never a collect), so n_s = n.  Otherwise teleport and dangling
+    mass return only to the seeds, typed from the edge schema.
+    ``scale=None`` runs the float update (damping ``damping``, stop
+    early once the L1 delta < ``tol``); a ``scale`` runs the exact
+    BIGINT one (damping num/den, floor division, exactly ``rounds``
+    rounds), with tp = scale div n_s:
+
+        r0(v)  = seed(v) * tp
+        share(u) = r(u) div outdeg(u)             (outdeg > 0)
+        D      = sum of r(u) over dangling u      (outdeg = 0)
+        r'(v)  = seed(v) * ( ((den-num) * tp) div den
+                             + (num * (D div n_s)) div den )
+               + (num * sum of incoming shares) div den
+
+    Per round: ONE equi-join of ranks against the once-repartitioned
+    edge list, ONE map-side-combinable sum by dst, the dangling mass as
+    a 1-row broadcast FRAME (never a collected scalar, so a round is
+    exactly one action: the eager checkpoint), plus the delta join when
+    ``tol`` is set.  Out-degree and the seed flag are static: attached
+    to the node frame once instead of re-joined every round."""
+    exact = scale is not None
+    rc = "r" if exact else "rank"
+    e = (edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+         .where(F.col("s").isNotNull() & F.col("d").isNotNull())
+         .distinct()
+         .repartition("s"))
+    stage_digest(f"{tag}.edges", e)  # pre-checkpoint (r12 verdict #1)
+    e = e.localCheckpoint(eager=True)
+    nodes = (e.select(F.col("s").alias("node"))
+             .union(e.select(F.col("d").alias("node"))))
+    deg = e.groupBy("s").agg(F.count("*").alias("deg"))
+    if sources is None:
+        nodes = nodes.distinct().localCheckpoint(eager=True)
+        n_s = nodes.count()  # driver scalar: node count (bounded)
+        if n_s == 0:
+            return nodes.withColumn(out, F.lit(0).cast("long") if exact
+                                    else F.lit(0.0))
+        nodes = nodes.join(deg, nodes.node == deg.s, "left")
+        extra, seed = [], F.lit(1)
+    else:
+        seeds = (edges.sparkSession.createDataFrame(
+            [(x,) for x in sorted(set(sources))], e.select("s").schema)
+            .toDF("node"))
+        n_s = len(set(sources))
+        nodes = (nodes.union(seeds.select("node")).distinct()
+                 .localCheckpoint(eager=True))
+        nodes = (nodes.join(deg, nodes.node == deg.s, "left")
+                 .join(seeds.withColumn("__is", F.lit(1)), "node", "left"))
+        extra = [F.coalesce("__is", F.lit(0)).cast("long").alias("seed")]
+        seed = F.col("seed")
+    nodes = (nodes.select("node", F.coalesce("deg", F.lit(0)).cast("long")
+                          .alias("deg"), *extra)
+             .localCheckpoint(eager=True))
+    if exact:
+        tp = scale // n_s
+        r0 = (seed * F.lit(tp)).cast("long")
+        dmass = F.coalesce(F.sum(rc), F.lit(0)).cast("long")
+        share = F.expr(f"{rc} div deg")
+        inflow = F.sum("__sh").cast("long")
+        update = (seed * (F.lit(((den - num) * tp) // den).cast("long")
+                          + F.expr(f"({num} * (__dm div {n_s})) "
+                                   f"div {den}"))
+                  + F.expr(f"({num} * coalesce(__in, 0)) div {den}")
+                  ).cast("long")
+    else:
+        r0 = tp = seed * F.lit(1.0 / n_s)
+        dmass = F.coalesce(F.sum(rc), F.lit(0.0))
+        share = F.col(rc) / F.col("deg")
+        inflow = F.sum("__sh")
+        update = ((1.0 - damping) * tp + damping * F.col("__dm") * tp
+                  + damping * F.coalesce(F.col("__in"), F.lit(0.0)))
+
+    def step(ranks):
+        dang = ranks.where(F.col("deg") == 0).agg(dmass.alias("__dm"))
+        contrib = (ranks.where(F.col("deg") > 0)
+                   .select("node", share.alias("__sh"))
+                   .join(e, F.col("node") == e.s)
+                   .groupBy(F.col("d").alias("node"))
+                   .agg(inflow.alias("__in")))
+        return (nodes.join(contrib, "node", "left")
+                .crossJoin(F.broadcast(dang))
+                .select(*nodes.columns, update.alias(rc)))
+
+    def converged(old, new):
+        if tol is None:
+            return False
+        delta = (new.alias("a").join(old.alias("b"), "node")
+                 .agg(F.sum(F.abs(F.col(f"a.{rc}") - F.col(f"b.{rc}"))))
+                 .first()[0])
+        return delta is not None and delta < tol
+
+    # r16 NEGATIVE RESULTS on this loop, both measured with interleaved
+    # q115 probe pairs (guide §1.6):
+    # - pinning the edge checkpoint at defaultParallelism partitions
+    #   (repartition(par, "s")) to widen the per-round 4-task scan:
+    #   6.35/7.47 s -> 9.13/9.80 s — tiny-task dispatch cost exceeds the
+    #   parallelism gain (the r15 persist-experiment lesson again);
+    # - fusing k rounds per materialization for the fixed-budget path:
+    #   k=2 a wash (7.91/7.14 -> 7.78/7.04), k=5 a 25% REGRESSION
+    #   (9.32/9.54) — each round references the rank vector TWICE
+    #   (dangling mass + contributions), so the lazy chain doubles the
+    #   plan per fused round and analysis/codegen outgrow the saved job
+    #   overhead.  The one-eager-checkpoint-per-round shape stays.
+    ranks = _rounds(nodes.withColumn(rc, r0), step, converged,
+                    max_iter=rounds, tag=f"{tag}.round", eager=True)
+    return ranks.select("node", F.col(rc).alias(out))
 
 
 def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
@@ -43,118 +297,32 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     per-round delta join+aggregate — the fixed-budget form, ~2x fewer
     jobs per round when the iteration count is chosen up front.
 
-    Scale shape per round: ranks(join)edges shuffles ranks on the node
-    id against the ONCE-repartitioned edge list, contributions aggregate
-    on dst (map-side combinable), and the new vector localCheckpoints —
+    Scale shape per round (:func:`_power_iteration`, every node a
+    seed): ranks(join)edges shuffles ranks on the node id against the
+    ONCE-repartitioned edge list, contributions aggregate on dst
+    (map-side combinable), and the new vector localCheckpoints —
     memory bounded by the rank vector, lineage bounded by one round.
     Rounds to tol=1e-6 at damping 0.85 ≈ 85 worst-case; real graphs
     converge in 10-30.
     """
-    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-              .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-              .distinct()
-              .repartition("src"))
-    stage_digest("pagerank.edges", e)  # pre-checkpoint (r12 verdict #1)
-    e = e.localCheckpoint(eager=True)
-    nodes = (e.select(F.col("src").alias("node"))
-              .union(e.select(F.col("dst").alias("node")))
-              .distinct()
-              .localCheckpoint(eager=True))
-    n = nodes.count()  # driver scalar: node count (bounded, documented)
-    if n == 0:
-        return nodes.withColumn("rank", F.lit(0.0))
-    deg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    # out-degree is STATIC: attach it to the node frame once and carry it
-    # through the iterated state, instead of re-joining deg every round
-    # (round 5: one join + its shuffle per round saved; measured ~15% of
-    # q115's wall at bench scale, and one fewer stage barrier per round
-    # on a cluster)
-    nodes = (nodes.join(deg, nodes.node == deg.src, "left")
-                  .select("node", F.coalesce("deg", F.lit(0)).alias("deg"))
-                  .localCheckpoint(eager=True))
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    teleport = (1.0 - damping) / n
-    # r16 NEGATIVE RESULTS on this loop, both measured with interleaved
-    # q115 probe pairs (guide §1.6):
-    # - pinning the edge checkpoint at defaultParallelism partitions
-    #   (repartition(par, "src")) to widen the per-round 4-task scan:
-    #   6.35/7.47 s -> 9.13/9.80 s — tiny-task dispatch cost exceeds the
-    #   parallelism gain (the r15 persist-experiment lesson again);
-    # - fusing k rounds per materialization for the fixed-budget path:
-    #   k=2 a wash (7.91/7.14 -> 7.78/7.04), k=5 a 25% REGRESSION
-    #   (9.32/9.54) — each round references the rank vector TWICE
-    #   (dangling mass + contributions), so the lazy chain doubles the
-    #   plan per fused round and analysis/codegen outgrow the saved job
-    #   overhead.  The one-checkpoint-per-round shape stays.
-    for _ in range(max_iter):
-        # dangling mass (rank on nodes with no out-edges) stays a 1-row
-        # FRAME broadcast into the update — never a collected scalar, so
-        # each round is exactly ONE action (the eager checkpoint)
-        dang = (ranks.where(F.col("deg") == 0)
-                .agg(F.coalesce(F.sum("rank"), F.lit(0.0))
-                      .alias("__dmass")))
-        contrib = (ranks.where(F.col("deg") > 0)
-                   .select("node", (F.col("rank") / F.col("deg"))
-                           .alias("share"))
-                   .join(e, F.col("node") == e.src)
-                   .groupBy(F.col("dst").alias("node"))
-                   .agg(F.sum("share").alias("inflow")))
-        new_ranks = (nodes.join(contrib, "node", "left")
-                     .crossJoin(F.broadcast(dang))
-                     .select("node", "deg",
-                             (F.lit(teleport)
-                              + damping * F.col("__dmass") / n
-                              + damping
-                              * F.coalesce(F.col("inflow"), F.lit(0.0)))
-                             .alias("rank")))
-        stage_digest("pagerank.round", new_ranks)  # first round's plan
-        new_ranks = new_ranks.localCheckpoint(eager=True)
-        if tol is not None:
-            delta = (new_ranks.alias("a")
-                     .join(ranks.alias("b"), "node")
-                     .agg(F.sum(F.abs(F.col("a.rank") - F.col("b.rank"))))
-                     .first()[0])
-            if delta is not None and delta < tol:
-                ranks = new_ranks
-                break
-        ranks = new_ranks
-    return ranks.select("node", "rank")
+    return _power_iteration(edges, src, dst, None, max_iter, "pagerank",
+                            "rank", tol=tol, damping=damping)
 
 
 def _components_local(spark, node_rows, edge_rows, node_field):
-    """Driver union-find over a SIZE-GATED edge list (see
-    ``star_components``' ``local_graph_rows``): path-halving find +
-    union by attachment, then per-root min label — exact and identical
-    to the distributed fixpoint's (node, component-min) contract."""
-    parent: dict = {}
-
-    def find(x):
-        r = x
-        while parent[r] != r:
-            r = parent[r]
-        while parent[x] != r:
-            parent[x], x = r, parent[x]
-        return r
-
-    nodes = [r[0] for r in node_rows]
-    for n in nodes:
-        parent[n] = n
-    for a, b in edge_rows:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[ra] = rb
-    comp: dict = {}
-    for n in nodes:
-        r = find(n)
-        if r not in comp or n < comp[r]:
-            comp[r] = n
-    from pyspark.sql.types import StructField, StructType
-    schema = StructType([
-        StructField("node", node_field.dataType, node_field.nullable),
-        StructField("cluster", node_field.dataType,
-                    node_field.nullable)])
-    return spark.createDataFrame(
-        [(n, comp[find(n)]) for n in nodes], schema)
+    """star_components' driver kernel over the gated, collected graph:
+    :func:`_union_find`, then each component labeled with its min node
+    id — exact and identical to the distributed fixpoint's
+    (node, component-min) contract."""
+    root = _union_find([r[0] for r in node_rows], edge_rows)
+    low: dict = {}
+    for n, r in root.items():
+        if r not in low or n < low[r]:
+            low[r] = n
+    return _driver_frame(spark, node_field,
+                         [(n, low[r]) for n, r in root.items()],
+                         StructField("cluster", node_field.dataType,
+                                     node_field.nullable))
 
 
 def star_components(pairs: DataFrame, d1: str = "d1", d2: str = "d2",
@@ -163,17 +331,16 @@ def star_components(pairs: DataFrame, d1: str = "d1", d2: str = "d2",
     """Connected components by alternating large-star / small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
     SoCC'14) — converges in O(log n) ROUNDS REGARDLESS OF DIAMETER,
-    where ``dedup.dup_clusters``' min-label propagation needs
-    diameter-many rounds (fine for near-clique duplicate groups,
-    silently WRONG past ``max_iter`` hops on chain-shaped graphs: CDC
-    dedup chains A~B~C~... where consecutive revisions pair but distant
-    ones don't).  Returns ``(node, cluster)`` with cluster = the
-    component's min node id, same contract as ``dup_clusters``.
+    where min-label propagation needs diameter-many rounds (silently
+    WRONG past its round cap on chain-shaped graphs: CDC dedup chains
+    A~B~C~... where consecutive revisions pair but distant ones
+    don't).  Returns ``(node, cluster)``: every id that appears in any
+    pair, labeled with its component's min id (``dedup.dup_clusters``
+    is this operator).
 
     Per round each operation is one groupBy-min + one equi-join on the
-    node key (the same shuffle shape as a label round), but the edge
-    set CONTRACTS toward the star form (v, min) instead of labels
-    crawling one hop per round:
+    node key, but the edge set CONTRACTS toward the star form (v, min)
+    instead of labels crawling one hop per round:
 
     - large-star: for each node u, hang every LARGER neighbor off
       m = min(N(u) ∪ {u})  — halves tree heights;
@@ -181,82 +348,47 @@ def star_components(pairs: DataFrame, d1: str = "d1", d2: str = "d2",
 
     Fixpoint (edge multiset stops changing — checked by a cheap
     order-independent hash-sum aggregate, the table_fingerprint trick)
-    means every edge is (v, component-min).  localCheckpoint truncates
-    lineage per round, the documented Pregel-style pattern.
+    means every edge is (v, component-min).  ``max_iter`` exhaustion
+    RAISES rather than return under-merged clusters.
 
-    Graphs at or under ``local_graph_rows`` distinct edges and nodes
-    (default 200k — a few MB for NUMERIC ids) run driver union-find
-    instead (:func:`_components_local`, the ``train_bpe`` size-gate
-    pattern): identical output, parity-pinned by pytest, milliseconds
-    instead of ~6 fixpoint rounds of job overhead.  For STRING/BINARY
-    node ids the row budget alone under-prices the collect (a 128-char
-    doc id costs ~10x a bigint on the driver — round-10 advisor
-    finding), so the gate additionally probes the mean id width over
-    the already-size-bounded node set and scales the row cap down by
-    ``avg_len / 16`` — a 160-byte-id graph takes the driver kernel
-    only up to ~20k rows, keeping the collected bytes in the same
-    envelope as the numeric default.  ``local_graph_rows=0`` forces
-    the distributed loop."""
+    Graphs whose distinct edges and nodes pass :func:`_driver_gate`
+    at ``local_graph_rows`` (default 200k rows — a few MB for NUMERIC
+    ids, fewer rows for wide string ids) run driver union-find instead
+    (:func:`_components_local`): identical output, parity-pinned by
+    pytest, milliseconds instead of ~6 fixpoint rounds of job
+    overhead.  ``local_graph_rows=0`` forces the distributed loop."""
     e = pairs.select(F.col(d1).alias("a"), F.col(d2).alias("b"))
     # r16: materialize the caller's pair lineage ONCE — the node and
     # edge checkpoints below each re-executed the full upstream plan
     # (for semdedup_exact's verified pairs that was the whole
     # candidate+verify pipeline, twice; for q168 the co-purchase
     # build, twice).  SKIP both the digest and the checkpoint when the
-    # caller already hands in a materialized frame (a trivial plan
-    # terminating at a checkpoint scan, e.g. dbscan's bounded-regime
-    # edge set): re-checkpointing it would copy the data in one extra
-    # job for nothing, and the recorded "pre-checkpoint" digest would
-    # be a blind `Scan ExistingRDD` (the r12 stage-digest contract).
-    _ptxt = e._jdf.queryExecution().executedPlan().toString()
-    _nlines = len([ln for ln in _ptxt.strip().split("\n") if ln.strip()])
-    if not ("Scan ExistingRDD" in _ptxt and _nlines <= 4
-            and "Exchange" not in _ptxt):
+    # caller already hands in a materialized frame (e.g. dbscan's
+    # bounded-regime edge set): the recorded "pre-checkpoint" digest
+    # would be a blind `Scan ExistingRDD` (the r12 stage-digest
+    # contract).
+    if not _is_materialized(e):
         stage_digest("star_components.base", e)
         e = e.localCheckpoint(eager=True)
     sym = e.unionByName(e.select(F.col("b").alias("a"),
                                  F.col("a").alias("b")))
     # node set from the RAW pairs (both endpoints), BEFORE the self-loop
     # filter: a node appearing only in (x, x) pairs is still "every id
-    # that appears in any pair" (the dup_clusters contract) and must
-    # come back labeled with itself.
+    # that appears in any pair" and must come back labeled with itself.
     nodes = sym.select(F.col("a").alias("node")).distinct()
     stage_digest("star_components.nodes", nodes)
     nodes = nodes.localCheckpoint()
     edges = sym.where(F.col("a") != F.col("b")).distinct()
     stage_digest("star_components.edges", edges)
     edges = edges.localCheckpoint()
-    # size rounds to the graph, not the session (the dup_clusters rule)
+    # size rounds to the graph, not the session: ~2M edges per
+    # partition keeps small graphs' rounds single-task while a 100 TB
+    # run keeps its full parallelism
     n_e = edges.count()
-    # Size-gated DRIVER kernel (the train_bpe precedent: when the
-    # distributed loop's per-round cost is pure planning + scheduling,
-    # not data, run the bounded driver algorithm instead).  A graph at
-    # or under ``local_graph_rows`` distinct edges AND nodes — a few MB
-    # collected, counted on the CHECKPOINTED frames so the gate cannot
-    # race the collect — runs union-find on the driver: the ~6-round
-    # star fixpoint over a small graph costs seconds of job/codegen
-    # overhead per call (measured: the dbscan cell graph at bench
-    # scale), while union-find costs milliseconds.  Web-scale graphs
-    # (near-dup clusters over a 100 TB crawl) take the distributed
-    # star loop below, unchanged; ``local_graph_rows=0`` forces it.
-    if local_graph_rows and n_e <= local_graph_rows:
-        n_n = nodes.count()
-        if n_n <= local_graph_rows:
-            cap = local_graph_rows
-            from pyspark.sql.types import BinaryType, StringType
-            if isinstance(nodes.schema["node"].dataType,
-                          (StringType, BinaryType)):
-                # wide-id guard: probe mean id bytes over the node set
-                # (already counted <= local_graph_rows rows, so this
-                # agg is cheap) and shrink the row cap so collected
-                # bytes stay in the numeric default's few-MB envelope
-                avg_len = (nodes.agg(F.avg(F.length("node")))
-                           .first()[0]) or 0.0
-                cap = int(local_graph_rows * 16 // max(16.0, avg_len))
-            if n_e <= cap and n_n <= cap:
-                return _components_local(
-                    pairs.sparkSession, nodes.collect(),
-                    edges.collect(), nodes.schema["node"])
+    rows = _driver_gate(local_graph_rows, edges, nodes, n_e=n_e)
+    if rows is not None:
+        return _components_local(pairs.sparkSession, rows[1], rows[0],
+                                 nodes.schema["node"])
     p = max(1, -(-n_e // 2_000_000))
     if p < edges.rdd.getNumPartitions():
         edges = edges.coalesce(p)
@@ -282,29 +414,21 @@ def star_components(pairs: DataFrame, d1: str = "d1", d2: str = "d2",
                    .unionByName(m.select("a", F.col("m").alias("b"))))
         return out.where(F.col("a") != F.col("b")).distinct()
 
-    prev = None
-    for _ in range(max_iter):
-        # ONE checkpoint per round (after both phases), not one per
-        # phase: each eager checkpoint is a job, and on small graphs
-        # the loop cost is jobs × (codegen + scheduling), not data.
-        # The checkpoint cannot be deferred further: each star phase
-        # references its input 2-4 times (the re-symmetrize union +
-        # the min join), so un-truncated lineage grows the logical
-        # plan EXPONENTIALLY per round — a persist-chain variant hung
-        # the 3000-node-chain test in the analyzer (measured, round
-        # 9).  Lineage depth of two phases is the safe maximum.
-        edges = _star(_star(edges, large=True), large=False)
-        stage_digest("star_components.round", edges)  # round 1's plan
-        # lazy checkpoint: the fixpoint digest right after is a full
-        # aggregate, so it materializes every partition — one job per
-        # round instead of two (the _bfs_sigma pattern)
-        edges = edges.localCheckpoint(eager=False)
-        # order-independent multiset digest: sum of per-edge hashes
-        cur = edges.agg(
-            F.sum(F.xxhash64("a", "b").cast("decimal(38,0)"))).first()[0]
-        if cur == prev:
-            break
-        prev = cur
+    # ONE checkpoint per round (after both phases), not one per phase:
+    # on small graphs the loop cost is jobs × (codegen + scheduling).
+    # It cannot be deferred further: each star phase references its
+    # input 2-4 times, so un-truncated lineage grows the logical plan
+    # EXPONENTIALLY per round (a persist-chain variant hung the
+    # 3000-node-chain test in the analyzer, round 9).  Lazy: the
+    # order-independent multiset digest (sum of per-edge hashes) is a
+    # full aggregate that materializes every partition.
+    edges = _rounds(
+        edges, lambda ed: _star(_star(ed, large=True), large=False),
+        _repeats(lambda ed: ed.agg(F.sum(
+            F.xxhash64("a", "b").cast("decimal(38,0)"))).first()[0]),
+        max_iter=max_iter, tag="star_components.round",
+        exhausted=f"star_components did not converge in {max_iter} "
+                  "rounds; raise max_iter")
     # at fixpoint every surviving edge is (node, component-min); nodes
     # that ARE their component's min have no outgoing edge left
     lab = edges.groupBy("a").agg(F.min("b").alias("cluster")) \
@@ -499,9 +623,8 @@ def shortest_paths(edges: DataFrame, sources: "list",
     exact fixpoint, no digest needed).  Rounds needed = the longest
     shortest path in EDGES (hops), so ``max_iter`` bounds work on
     adversarial chains; unconverged exits raise rather than return
-    silently short distances (the dup_clusters round-9 lesson:
-    iterative operators must not under-report on chain-shaped
-    inputs)."""
+    silently short distances (the round-9 lesson: iterative operators
+    must not under-report on chain-shaped inputs)."""
     e = (edges.select(F.col(src).alias("s"), F.col(dst).alias("d"),
                       F.col(weight).cast("double").alias("w"))
          .where(F.col("s").isNotNull() & F.col("d").isNotNull()
@@ -518,35 +641,31 @@ def shortest_paths(edges: DataFrame, sources: "list",
                                   e.select("s").schema)
             .toDF("node").withColumn("dist", F.lit(0.0)).distinct()
             .localCheckpoint())
-    frontier = dist
-    converged = False
-    for _ in range(max_iter):
-        relax = (frontier.join(e, frontier.node == e.s)
-                 .groupBy(F.col("d").alias("node"))
-                 .agg(F.min(F.col("dist") + F.col("w")).alias("cand")))
-        merged = (dist.join(relax, "node", "full")
-                  .select("node",
-                          F.least(F.coalesce("dist", F.lit(float("inf"))),
-                                  F.coalesce("cand", F.lit(float("inf"))))
-                          .alias("dist"),
-                          (F.col("dist").isNull()
-                           | (F.col("cand") < F.col("dist")))
-                          .alias("__improved")))
-        stage_digest("shortest_paths.round", merged)
-        # lazy checkpoint; the emptiness probe materializes it — one
-        # job per round instead of two (the _bfs_sigma pattern)
-        merged = merged.localCheckpoint(eager=False)
+
+    def relax(merged):
+        # only nodes whose distance IMPROVED relax their out-edges
         frontier = merged.where("__improved").select("node", "dist")
-        dist = merged.select("node", "dist")
-        if not frontier.limit(1).count():
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"shortest_paths did not converge in {max_iter} rounds — "
-            "the graph has shortest paths longer than max_iter hops; "
-            "raise max_iter")
-    return dist
+        cand = (frontier.join(e, frontier.node == e.s)
+                .groupBy(F.col("d").alias("node"))
+                .agg(F.min(F.col("dist") + F.col("w")).alias("cand")))
+        return (merged.select("node", "dist").join(cand, "node", "full")
+                .select("node",
+                        F.least(F.coalesce("dist", F.lit(float("inf"))),
+                                F.coalesce("cand", F.lit(float("inf"))))
+                        .alias("dist"),
+                        (F.col("dist").isNull()
+                         | (F.col("cand") < F.col("dist")))
+                        .alias("__improved")))
+
+    # lazy checkpoint: the frontier-emptiness probe materializes it
+    merged = _rounds(dist.withColumn("__improved", F.lit(True)), relax,
+                     lambda _, m: _empty(m.where("__improved")),
+                     max_iter=max_iter, tag="shortest_paths.round",
+                     exhausted=f"shortest_paths did not converge in "
+                               f"{max_iter} rounds — the graph has "
+                               "shortest paths longer than max_iter "
+                               "hops; raise max_iter")
+    return merged.select("node", "dist")
 
 
 def bounded_hop_distances(edges: DataFrame, sources: "list",
@@ -633,7 +752,7 @@ def pagerank_exact(edges: DataFrame, src: str = "src",
 
     run for EXACTLY ``n_iter`` rounds (a fixed budget is part of the
     semantics — no convergence question, so no under-convergence risk;
-    the dup_clusters/shortest_paths rule is satisfied by construction).
+    the shortest_paths raise rule is satisfied by construction).
     Truncation leaks a little mass per round, which is fine for a
     witness: the returned ``(node, rank_scaled)`` is deterministic,
     engine-independent, and order-equivalent to the float ranks
@@ -643,52 +762,13 @@ def pagerank_exact(edges: DataFrame, src: str = "src",
     Scale shape per round: identical to :func:`pagerank` — one
     equi-join of ranks against the once-repartitioned edge list, one
     map-side-combinable sum by dst, a 1-row broadcast dangling frame,
-    one eager checkpoint."""
+    one eager checkpoint (:func:`_power_iteration`, every node a
+    seed)."""
     if n_iter < 1:
         raise ValueError("n_iter must be >= 1")
-    e = (edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-         .where(F.col("s").isNotNull() & F.col("d").isNotNull())
-         .distinct()
-         .repartition("s"))
-    stage_digest("pagerank_exact.edges", e)
-    e = e.localCheckpoint(eager=True)
-    nodes = (e.select(F.col("s").alias("node"))
-             .union(e.select(F.col("d").alias("node")))
-             .distinct()
-             .localCheckpoint(eager=True))
-    n = nodes.count()  # driver scalar: node count (bounded, documented)
-    if n == 0:
-        return nodes.withColumn("rank_scaled", F.lit(0).cast("long"))
-    deg = e.groupBy("s").agg(F.count("*").alias("deg"))
-    nodes = (nodes.join(deg, nodes.node == deg.s, "left")
-             .select("node",
-                     F.coalesce("deg", F.lit(0)).cast("long")
-                     .alias("deg"))
-             .localCheckpoint(eager=True))
-    r0 = scale // n
-    teleport = ((damping_den - damping_num) * r0) // damping_den
-    ranks = nodes.withColumn("r", F.lit(r0).cast("long"))
-    for _ in range(n_iter):
-        dang = (ranks.where(F.col("deg") == 0)
-                .agg(F.coalesce(F.sum("r"), F.lit(0)).cast("long")
-                     .alias("__dm")))
-        contrib = (ranks.where(F.col("deg") > 0)
-                   .select("node", F.expr("r div deg").alias("__sh"))
-                   .join(e, F.col("node") == e.s)
-                   .groupBy(F.col("d").alias("node"))
-                   .agg(F.sum("__sh").cast("long").alias("__in")))
-        ranks = (nodes.join(contrib, "node", "left")
-                 .crossJoin(F.broadcast(dang))
-                 .select("node", "deg",
-                         (F.lit(teleport).cast("long")
-                          + F.expr(f"({damping_num} * (__dm div {n})) "
-                                   f"div {damping_den}")
-                          + F.expr(f"({damping_num} * coalesce(__in, "
-                                   f"0)) div {damping_den}"))
-                         .cast("long").alias("r")))
-        stage_digest("pagerank_exact.round", ranks)  # first round's plan
-        ranks = ranks.localCheckpoint(eager=True)
-    return ranks.select("node", F.col("r").alias("rank_scaled"))
+    return _power_iteration(edges, src, dst, None, n_iter,
+                            "pagerank_exact", "rank_scaled", scale=scale,
+                            num=damping_num, den=damping_den)
 
 
 def k_core(pairs: DataFrame, k: int, d1: str = "d1", d2: str = "d2",
@@ -710,7 +790,7 @@ def k_core(pairs: DataFrame, k: int, d1: str = "d1", d2: str = "d2",
     is small on real graphs (degeneracy ordering removes whole
     layers) but O(n) on adversarial chains, so ``max_iter`` exhaustion
     RAISES instead of returning a silently-unpeeled graph (the
-    dup_clusters/shortest_paths convergence rule)."""
+    shortest_paths convergence rule)."""
     if k < 1:
         raise ValueError("k must be >= 1")
     e = (pairs.select(F.col(d1).alias("a"), F.col(d2).alias("b"))
@@ -721,27 +801,29 @@ def k_core(pairs: DataFrame, k: int, d1: str = "d1", d2: str = "d2",
            .distinct())
     stage_digest("k_core.sym", sym)
     sym = sym.localCheckpoint(eager=True)
-    for _ in range(max_iter):
-        deg = sym.groupBy("a").agg(F.count("*").alias("degree"))
-        bad = deg.where(F.col("degree") < k).select("a")
-        stage_digest("k_core.peel", bad)  # first peel round's plan
+
+    def peel(bad):
+        # the previous round's removal set leaves both edge endpoints;
         # lazy checkpoints (r16): the emptiness probe materializes the
-        # removal set, and the next round's first action materializes
-        # the peeled edge list — one job each instead of two
-        bad = bad.localCheckpoint(eager=False)
-        if not bad.limit(1).count():
-            return deg.withColumnRenamed("a", "node")
-        sym = (sym.join(bad, "a", "left_anti")
-               .join(bad.withColumnRenamed("a", "b"), "b", "left_anti")
-               .localCheckpoint(eager=False))
-    # one more degree pass: if the LAST peel already reached the
-    # fixpoint, max_iter was exactly the peel depth — accept it
-    deg = sym.groupBy("a").agg(F.count("*").alias("degree"))
-    if deg.where(F.col("degree") < k).limit(1).count():
-        raise RuntimeError(
-            f"k_core did not reach its fixpoint in {max_iter} rounds "
-            "(adversarial chain-like peel depth); raise max_iter")
-    return deg.withColumnRenamed("a", "node")
+        # removal set, and the next probe the peeled edge list — one
+        # job per round
+        nonlocal sym
+        if bad is not None:
+            sym = (sym.join(bad, "a", "left_anti")
+                   .join(bad.withColumnRenamed("a", "b"), "b", "left_anti")
+                   .localCheckpoint(eager=False))
+        return (sym.groupBy("a").agg(F.count("*").alias("degree"))
+                .where(F.col("degree") < k).select("a"))
+
+    # max_iter counts peels; the round after the last one only has to
+    # observe an empty removal set (max_iter was exactly the peel depth)
+    _rounds(None, peel, lambda _, bad: _empty(bad), max_iter=max_iter + 1,
+            tag="k_core.peel",
+            exhausted=f"k_core did not reach its fixpoint in {max_iter} "
+                      "rounds (adversarial chain-like peel depth); raise "
+                      "max_iter")
+    return (sym.groupBy("a").agg(F.count("*").alias("degree"))
+            .withColumnRenamed("a", "node"))
 
 
 def core_numbers(pairs: DataFrame, d1: str = "d1", d2: str = "d2",
@@ -769,8 +851,8 @@ def core_numbers(pairs: DataFrame, d1: str = "d1", d2: str = "d2",
     (node, value) count aggregate, a per-node descending-value running
     sum (window keyed by node — rows per node = that node's DISTINCT
     neighbor values, bounded and hub-safe), and a max.  Values only
-    decrease, so an unchanged sum is an exact fixpoint (the
-    dup_clusters trick); ``max_rounds`` exhaustion RAISES (chains
+    decrease, so an unchanged sum is an exact fixpoint;
+    ``max_rounds`` exhaustion RAISES (chains
     propagate one hop per round — the usual adversarial case), never
     returns a partial decomposition.  Nodes appearing only in
     self-loop pairs get core 0."""
@@ -802,9 +884,8 @@ def core_numbers(pairs: DataFrame, d1: str = "d1", d2: str = "d2",
     zero = (allnodes.join(vals.select("node"), "node", "left_anti")
             .withColumn("core", F.lit(0).cast("int")))
     w = Window.partitionBy("node").orderBy(F.desc("__cn"))
-    prev = None
-    converged = False
-    for _ in range(max_rounds):
+
+    def h_index(vals):
         h = (cur.join(vals.select(F.col("node").alias("b"),
                                   F.col("c").alias("__cn")), "b")
              .groupBy(F.col("a").alias("node"), F.col("__cn"))
@@ -814,22 +895,17 @@ def core_numbers(pairs: DataFrame, d1: str = "d1", d2: str = "d2",
              .agg(F.max(F.least(F.col("__cn"),
                                 F.col("__cum").cast("int")))
                   .alias("__h")))
-        vals = (vals.join(h, "node")
+        return (vals.join(h, "node")
                 .select("node", F.least("c", F.col("__h")).alias("c")))
-        stage_digest("core_numbers.round", vals)
-        # lazy checkpoint: the convergence probe right after is a full
-        # aggregate, so it materializes every partition — one job per
-        # round instead of two (the _bfs_sigma pattern)
-        vals = vals.localCheckpoint(eager=False)
-        cursum = vals.agg(F.sum("c")).first()[0]
-        if cursum == prev:
-            converged = True
-            break
-        prev = cursum
-    if not converged:
-        raise RuntimeError(
-            f"core_numbers did not reach its fixpoint in {max_rounds} "
-            "rounds (chain-shaped value propagation); raise max_rounds")
+
+    # lazy checkpoint: the sum(c) probe is a full aggregate that
+    # materializes every partition
+    vals = _rounds(vals, h_index,
+                   _repeats(lambda v: v.agg(F.sum("c")).first()[0]),
+                   max_iter=max_rounds, tag="core_numbers.round",
+                   exhausted=f"core_numbers did not reach its fixpoint in "
+                             f"{max_rounds} rounds (chain-shaped value "
+                             "propagation); raise max_rounds")
     return zero.unionByName(
         vals.select("node", F.col("c").alias("core")))
 
@@ -844,72 +920,20 @@ def personalized_pagerank(edges: DataFrame, sources: "list",
     seed-expansion retrieval, related-item ranking, trust propagation.
     Returns ``(node, rank)`` summing to ~1 over reachable nodes.
 
-    A separate function rather than a ``pagerank`` parameter so the
-    global operator's plan (benched as q115) stays byte-identical.
-    Same per-round shape: one equi-join against the once-repartitioned
-    edge list, one map-side-combinable aggregate, a 1-row broadcast
-    dangling frame, an eager checkpoint; ``tol=None`` runs the fixed
-    budget without the delta action.  ``sources`` is a bounded driver
-    list (the shortest_paths convention), seeded through a typed
-    createDataFrame — never a collect."""
+    :func:`pagerank` is this operator with every node a seed (both run
+    :func:`_power_iteration`).  Same per-round shape: one equi-join
+    against the once-repartitioned edge list, one map-side-combinable
+    aggregate, a 1-row broadcast dangling frame, an eager checkpoint;
+    ``tol=None`` runs the fixed budget without the delta action.
+    ``sources`` is a bounded driver list (the shortest_paths
+    convention), seeded through a typed createDataFrame — never a
+    collect."""
     if not sources:
         raise ValueError("personalized_pagerank needs at least one "
                          "source node")
-    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-              .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-              .distinct()
-              .repartition("src")
-              .localCheckpoint(eager=True))
-    spark = edges.sparkSession
-    seeds = (spark.createDataFrame([(x,) for x in set(sources)],
-                                   e.select("src").schema)
-             .toDF("node"))
-    nodes = (e.select(F.col("src").alias("node"))
-              .union(e.select(F.col("dst").alias("node")))
-              .union(seeds.select("node"))
-              .distinct()
-              .localCheckpoint(eager=True))
-    n_s = len(set(sources))
-    deg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    nodes = (nodes.join(deg, nodes.node == deg.src, "left")
-             .join(seeds.withColumn("__tp", F.lit(1.0 / n_s)), "node",
-                   "left")
-             .select("node", F.coalesce("deg", F.lit(0)).alias("deg"),
-                     F.coalesce("__tp", F.lit(0.0)).alias("tp"))
-             .localCheckpoint(eager=True))
-    # init at the teleport vector (the standard PPR start)
-    ranks = nodes.withColumn("rank", F.col("tp"))
-    for _ in range(max_iter):
-        dang = (ranks.where(F.col("deg") == 0)
-                .agg(F.coalesce(F.sum("rank"), F.lit(0.0))
-                     .alias("__dm")))
-        contrib = (ranks.where(F.col("deg") > 0)
-                   .select("node", (F.col("rank") / F.col("deg"))
-                           .alias("share"))
-                   .join(e, F.col("node") == e.src)
-                   .groupBy(F.col("dst").alias("node"))
-                   .agg(F.sum("share").alias("inflow")))
-        new_ranks = (nodes.join(contrib, "node", "left")
-                     .crossJoin(F.broadcast(dang))
-                     .select("node", "deg", "tp",
-                             ((1.0 - damping) * F.col("tp")
-                              + damping * F.col("__dm") * F.col("tp")
-                              + damping
-                              * F.coalesce(F.col("inflow"), F.lit(0.0)))
-                             .alias("rank")))
-        stage_digest("personalized_pagerank.round", new_ranks)
-        new_ranks = new_ranks.localCheckpoint(eager=True)
-        if tol is not None:
-            delta = (new_ranks.alias("a")
-                     .join(ranks.alias("b"), "node")
-                     .agg(F.sum(F.abs(F.col("a.rank")
-                                      - F.col("b.rank"))))
-                     .first()[0])
-            if delta is not None and delta < tol:
-                ranks = new_ranks
-                break
-        ranks = new_ranks
-    return ranks.select("node", "rank")
+    return _power_iteration(edges, src, dst, sources, max_iter,
+                            "personalized_pagerank", "rank", tol=tol,
+                            damping=damping)
 
 
 def personalized_pagerank_exact(edges: DataFrame, sources: "list",
@@ -952,58 +976,9 @@ def personalized_pagerank_exact(edges: DataFrame, sources: "list",
     if not sources:
         raise ValueError("personalized_pagerank_exact needs at least "
                          "one source node")
-    e = (edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-         .where(F.col("s").isNotNull() & F.col("d").isNotNull())
-         .distinct()
-         .repartition("s"))
-    stage_digest("personalized_pagerank_exact.edges", e)
-    e = e.localCheckpoint(eager=True)
-    spark = edges.sparkSession
-    seeds = (spark.createDataFrame([(x,) for x in sorted(set(sources))],
-                                   e.select("s").schema)
-             .toDF("node"))
-    nodes = (e.select(F.col("s").alias("node"))
-             .union(e.select(F.col("d").alias("node")))
-             .union(seeds.select("node"))
-             .distinct()
-             .localCheckpoint(eager=True))
-    n_s = len(set(sources))
-    tp = scale // n_s
-    teleport = ((damping_den - damping_num) * tp) // damping_den
-    deg = e.groupBy("s").agg(F.count("*").alias("deg"))
-    nodes = (nodes.join(deg, nodes.node == deg.s, "left")
-             .join(seeds.withColumn("__is", F.lit(1)), "node", "left")
-             .select("node",
-                     F.coalesce("deg", F.lit(0)).cast("long")
-                     .alias("deg"),
-                     F.coalesce("__is", F.lit(0)).cast("long")
-                     .alias("seed"))
-             .localCheckpoint(eager=True))
-    ranks = nodes.withColumn(
-        "r", (F.col("seed") * F.lit(tp)).cast("long"))
-    for _ in range(n_iter):
-        dang = (ranks.where(F.col("deg") == 0)
-                .agg(F.coalesce(F.sum("r"), F.lit(0)).cast("long")
-                     .alias("__dm")))
-        contrib = (ranks.where(F.col("deg") > 0)
-                   .select("node", F.expr("r div deg").alias("__sh"))
-                   .join(e, F.col("node") == e.s)
-                   .groupBy(F.col("d").alias("node"))
-                   .agg(F.sum("__sh").cast("long").alias("__in")))
-        ranks = (nodes.join(contrib, "node", "left")
-                 .crossJoin(F.broadcast(dang))
-                 .select("node", "deg", "seed",
-                         (F.col("seed")
-                          * (F.lit(teleport).cast("long")
-                             + F.expr(
-                                 f"({damping_num} * (__dm div {n_s})) "
-                                 f"div {damping_den}"))
-                          + F.expr(f"({damping_num} * coalesce(__in, "
-                                   f"0)) div {damping_den}"))
-                         .cast("long").alias("r")))
-        stage_digest("personalized_pagerank_exact.round", ranks)
-        ranks = ranks.localCheckpoint(eager=True)
-    return ranks.select("node", F.col("r").alias("rank_scaled"))
+    return _power_iteration(edges, src, dst, sources, n_iter,
+                            "personalized_pagerank_exact", "rank_scaled",
+                            scale=scale, num=damping_num, den=damping_den)
 
 
 def label_propagation(pairs: DataFrame, d1: str = "d1",
@@ -1101,22 +1076,18 @@ def label_propagation(pairs: DataFrame, d1: str = "d1",
         return (labels.unionByName(iso)
                 .select("node", F.col("label").alias("community")))
 
-    labels = allnodes.localCheckpoint(eager=True) \
-        .withColumn("label", F.col("node"))
-    for _ in range(max_iter):
-        top = _argmax(labels)
-        upd = (labels.join(top, "node", "left")
-               .select("node",
-                       F.coalesce("__new", F.col("label"))
-                       .alias("label"),
-                       (F.coalesce("__new", F.col("label"))
-                        != F.col("label")).alias("__chg")))
-        stage_digest("label_propagation.round", upd)
-        upd = upd.localCheckpoint(eager=False)
-        changed = upd.where("__chg").limit(1).count()
-        labels = upd.select("node", "label")
-        if not changed:
-            break
+    def vote(labels):
+        labels = labels.select("node", "label")
+        new = F.coalesce("__new", F.col("label"))
+        return (labels.join(_argmax(labels), "node", "left")
+                .select("node", new.alias("label"),
+                        (new != F.col("label")).alias("__chg")))
+
+    # the budget is the semantics: running out of rounds returns
+    labels = _rounds(allnodes.localCheckpoint(eager=True)
+                     .withColumn("label", F.col("node")), vote,
+                     lambda _, upd: _empty(upd.where("__chg")),
+                     max_iter=max_iter, tag="label_propagation.round")
     return labels.select("node", F.col("label").alias("community"))
 
 
@@ -1402,93 +1373,62 @@ def hits_exact(edges: DataFrame, src: str = "src", dst: str = "dst",
 _LOCAL_BFS_WORK = 5_000_000
 
 
-def _local_bfs_graph(pairs: DataFrame, d1: str, d2: str,
-                     cap: int, sources: "list | None", tag: str):
-    """Size-gate for the BFS-centrality family (the ``star_components``
-    driver-kernel pattern): build the canonical undirected edge frame
-    once, and if it fits the row cap (with the wide-id byte guard),
-    the component-aware WORK cap, and the source budget, collect it.
+def _bfs_graph(pairs: DataFrame, d1: str, d2: str, sources, cap: int,
+               tag: str):
+    """Front half of the BFS centralities: the canonical undirected
+    edge frame, materialized ONCE so the caller's upstream lineage
+    executes exactly once on either side of the gate, then
+    :func:`_driver_gate` plus the component-aware BFS work bound.
 
-    Returns ``("local", nodes, adj, node_field)`` when the driver
-    kernel applies, else ``("dist", e)`` where ``e`` is the
-    eagerly-checkpointed canonical edge frame (handed to
-    :func:`_bfs_sigma` so the caller's upstream lineage executes
-    exactly once either way — the r16 star_components/core_numbers
-    discipline)."""
+    Returns ``(e, seed, local)``: ``local`` is ``(nodes, adj)`` when
+    the driver kernel applies, else None.  ``seed`` is the typed
+    source frame (None = every node), built BEFORE anything
+    materializes — a source list that does not fit the id type raises
+    with nothing checkpointed or cached."""
+    if sources is not None and not sources:
+        raise ValueError("sources must be None (all nodes) or a "
+                         "non-empty list")
     e = (pairs.select(F.least(d1, d2).alias("a"),
                       F.greatest(d1, d2).alias("b"))
          .where(F.col("a").isNotNull() & F.col("b").isNotNull()
                 & (F.col("a") != F.col("b")))
          .distinct())
+    seed = None if sources is None else (
+        pairs.sparkSession.createDataFrame([(x,) for x in sources],
+                                           e.select("a").schema)
+        .toDF("src").distinct())
     stage_digest(f"{tag}.base", e)
     e = e.localCheckpoint(eager=True)
-    if not cap:
-        return "dist", e
-    n_e = e.count()
-    if n_e > cap:
-        return "dist", e
-    row_cap = cap
-    from pyspark.sql.types import BinaryType, StringType
-    if isinstance(e.schema["a"].dataType, (StringType, BinaryType)):
-        # wide-id guard (star_components round-10 rule): scale the row
-        # cap down so collected bytes stay in the numeric envelope
-        avg_len = (e.agg((F.avg(F.length("a"))
-                          + F.avg(F.length("b"))) / 2.0).first()[0]) or 0.0
-        row_cap = int(cap * 16 // max(16.0, avg_len))
-        if n_e > row_cap:
-            return "dist", e
-    rows = e.collect()
+    rows = _driver_gate(cap, e)
+    if rows is None:
+        return e, seed, None
     adj: dict = {}
-    for r in rows:
-        a, b = r[0], r[1]
+    for a, b in rows[0]:
         adj.setdefault(a, []).append(b)
         adj.setdefault(b, []).append(a)
-    if len(adj) > row_cap:
-        return "dist", e
-    # component-aware work bound: union-find over the collected edges,
-    # then sum |sources in C| * (2|E_C| + |V_C|) per component
-    parent = {n: n for n in adj}
-
-    def find(x):
-        r = x
-        while parent[r] != r:
-            r = parent[r]
-        while parent[x] != r:
-            parent[x], x = r, parent[x]
-        return r
-
-    for r in rows:
-        ra, rb = find(r[0]), find(r[1])
-        if ra != rb:
-            parent[ra] = rb
-    comp_nodes: dict = {}
-    for n in adj:
-        comp_nodes[find(n)] = comp_nodes.get(find(n), 0) + 1
-    comp_edges: dict = {}
-    for r in rows:
-        rr = find(r[0])
-        comp_edges[rr] = comp_edges.get(rr, 0) + 1
-    if sources is None:
-        srcs_by_comp = comp_nodes
-    else:
-        srcs_by_comp = {}
-        for s in set(sources):
-            if s in adj:
-                rr = find(s)
-                srcs_by_comp[rr] = srcs_by_comp.get(rr, 0) + 1
-    work = sum(ns * (2 * comp_edges.get(c, 0) + comp_nodes[c])
+    # sum |sources in C| * (2|E_C| + |V_C|) over components C
+    root = _union_find(adj, rows[0])
+    comp_nodes = Counter(root.values())
+    comp_edges = Counter(root[a] for a, _ in rows[0])
+    srcs_by_comp = comp_nodes if sources is None else Counter(
+        root[s] for s in set(sources) if s in adj)
+    work = sum(ns * (2 * comp_edges[c] + comp_nodes[c])
                for c, ns in srcs_by_comp.items())
     if work > _LOCAL_BFS_WORK:
-        return "dist", e
-    nodes = sorted(adj)
-    return "local", nodes, adj, e.schema["a"]
+        return e, seed, None
+    return e, seed, (sorted(adj), adj)
+
+
+def _bfs_exhausted(tag: str, max_iter: int) -> str:
+    return (f"{tag} forward BFS did not exhaust in {max_iter} levels — "
+            "the graph's eccentricity from the sources exceeds max_iter; "
+            "raise it")
 
 
 def _local_bfs_from(s, adj, max_iter, tag):
     """One BFS from ``s`` over the collected adjacency: returns
     ``(order, dist, sigma)`` with sigma = shortest-path counts; raises
     the family's max_iter error if the eccentricity exceeds it."""
-    from collections import deque
     sigma = {s: 1}
     dist = {s: 0}
     order = []
@@ -1508,33 +1448,26 @@ def _local_bfs_from(s, adj, max_iter, tag):
         # the distributed loop needs iteration ecc+1 to OBSERVE the
         # empty frontier, so it raises whenever ecc >= max_iter —
         # match that exactly (>=, not >)
-        raise RuntimeError(
-            f"{tag} forward BFS did not exhaust in {max_iter} "
-            "levels — the graph's eccentricity from the sources "
-            "exceeds max_iter; raise it")
+        raise RuntimeError(_bfs_exhausted(tag, max_iter))
     return order, dist, sigma
 
 
-def _bfs_sigma(pairs: DataFrame, d1: str, d2: str,
-               sources: "list | None", max_iter: int, tag: str,
-               e: "DataFrame | None" = None):
+def _bfs_sigma(e: DataFrame, seed: "DataFrame | None", max_iter: int,
+               tag: str):
     """Shared level-synchronous multi-source BFS carrying shortest-
-    path counts: returns ``(sym_edges, nodes, levels, depth)`` where
-    ``levels[d]`` holds one row (src, node, dist, sigma) per pair
-    reached at exactly distance ``d`` (each level its own
-    checkpointed frame).  The forward half of Brandes, also the
-    distance table closeness aggregates — factored so both
-    centralities ride one audited loop.  All sources advance in ONE
-    wavefront (level count = the eccentricity from the sources);
+    path counts over the canonical edge frame ``e``: returns
+    ``(sym_edges, nodes, levels)`` where ``levels[d]`` holds one row
+    (src, node, dist, sigma) per pair reached at exactly distance
+    ``d`` (each level its own checkpointed frame).  The forward half of
+    Brandes, also the distance table closeness aggregates — factored so
+    both centralities ride one audited loop.  All sources advance in
+    ONE wavefront (level count = the eccentricity from the sources);
     ``max_iter`` exhaustion RAISES (the shortest_paths rule).
 
-    UNDIRECTED + UNWEIGHTED ONLY: the input pair list is symmetrized
-    here and every hop costs 1.  The two-level visited-set dedup
-    below is CORRECT ONLY under that contract — do not reuse this
-    loop for directed or weighted traversal (see the ``seen`` note).
-    On any exit, normal or raised, the persisted edge list is
-    released unless the caller takes ownership of the returned
-    ``sym`` (both callers unpersist it in their own try/finally).
+    UNDIRECTED + UNWEIGHTED ONLY: the edge list is symmetrized here and
+    every hop costs 1.  The two-level visited-set dedup below is
+    CORRECT ONLY under that contract — do not reuse this loop for
+    directed or weighted traversal (see the ``seen`` note).
 
     r15 shape (the job-overhead profile: 191 jobs / 13 s wall on the
     q184 forest, most of it scheduling + re-reading a growing union):
@@ -1545,88 +1478,68 @@ def _bfs_sigma(pairs: DataFrame, d1: str, d2: str,
       the FULL edge list wherever AQE declined to broadcast — at
       scale that is one whole-graph exchange per level for nothing
       (guide §2.4 "share one exchange").  The cached InMemoryRelation
-      keeps hashpartitioning(c), so only the frontier moves.  The
-      CALLER must unpersist it (betweenness after its backward pass,
+      keeps hashpartitioning(c), so only the frontier moves.  Every
+      raise after the persist releases it; on a return the CALLER
+      must unpersist it (betweenness after its backward pass,
       closeness immediately).
     - visited-set maintenance is per-LEVEL: a proposal from the
       depth-d frontier has true distance in {d-1, d, d+1} (level-
       synchronous BFS invariant), so the dedup anti-join needs only
-      the last TWO level frames — not the whole growing history,
-      which the previous shape both re-materialized (one eager
-      checkpoint per level) and re-scanned per level.
+      the last TWO level frames — not the whole growing history.
     - each level's checkpoint is LAZY; the emptiness probe right
       after it materializes it — one job per level instead of two.
     """
-    if e is None:
-        e = (pairs.select(F.least(d1, d2).alias("a"),
-                          F.greatest(d1, d2).alias("b"))
-             .where(F.col("a").isNotNull() & F.col("b").isNotNull()
-                    & (F.col("a") != F.col("b")))
-             .distinct())
     sym = (e.select(F.col("a").alias("c"), F.col("b").alias("n"))
            .unionByName(e.select(F.col("b").alias("c"),
                                  F.col("a").alias("n"))))
     stage_digest(f"{tag}.edges", sym)
     sym = sym.repartition("c").persist()
-    nodes = sym.select(F.col("c").alias("node")).distinct() \
-        .localCheckpoint(eager=True)
-    spark = pairs.sparkSession
-    if sources is None:
-        seed = nodes.select(F.col("node").alias("src"))
-    else:
-        if not sources:
-            raise ValueError("sources must be None (all nodes) or a "
-                             "non-empty list")
-        seed = (spark.createDataFrame([(x,) for x in sources],
-                                      nodes.schema)
-                .toDF("src").distinct()
-                .join(nodes, F.col("src") == F.col("node"), "left_semi"))
-    vis0 = (seed.select("src", F.col("src").alias("node"))
-            .withColumn("dist", F.lit(0))
-            .withColumn("sigma", F.lit(1).cast("long"))
-            .localCheckpoint(eager=True))
-    levels = [vis0]
-    frontier = vis0
-    depth, converged = 0, False
+
+    def expand(frontier):
+        nxt = (frontier.join(sym, frontier.node == sym.c)
+               .groupBy("src", F.col("n").alias("node"))
+               .agg(F.sum("sigma").cast("long").alias("sigma")))
+        # level-synchronous invariant: a proposal from the depth-d
+        # frontier has true distance in {d-1, d, d+1}, so only the
+        # last TWO levels can collide with it.  This holds ONLY
+        # because `sym` is the symmetrized (undirected) edge list
+        # built above and every hop costs 1 — on directed or
+        # weighted inputs a proposal could collide with depth
+        # <= d-2 and nodes would re-enter with wrong dist/sigma
+        # (the function-contract note in the docstring).
+        seen = levels[-1].select("src", "node")
+        if len(levels) > 1:
+            seen = seen.unionByName(levels[-2].select("src", "node"))
+        return (nxt.join(seen, ["src", "node"], "left_anti")
+                .withColumn("dist", F.lit(len(levels)))
+                .select("src", "node", "dist", "sigma"))
+
+    def last_level(_, new):
+        # probe: an empty level ends the BFS; a non-empty one is kept
+        if _empty(new):
+            return True
+        levels.append(new)
+        return False
+
     try:
-        for _ in range(max_iter):
-            nxt = (frontier.join(sym, frontier.node == sym.c)
-                   .groupBy("src", F.col("n").alias("node"))
-                   .agg(F.sum("sigma").cast("long").alias("sigma")))
-            # level-synchronous invariant: a proposal from the depth-d
-            # frontier has true distance in {d-1, d, d+1}, so only the
-            # last TWO levels can collide with it.  This holds ONLY
-            # because `sym` is the symmetrized (undirected) edge list
-            # built above and every hop costs 1 — on directed or
-            # weighted inputs a proposal could collide with depth
-            # <= d-2 and nodes would re-enter with wrong dist/sigma
-            # (the function-contract note in the docstring).
-            seen = levels[-1].select("src", "node")
-            if len(levels) > 1:
-                seen = seen.unionByName(levels[-2].select("src", "node"))
-            new = (nxt.join(seen, ["src", "node"], "left_anti")
-                   .withColumn("dist", F.lit(depth + 1))
-                   .select("src", "node", "dist", "sigma"))
-            stage_digest(f"{tag}.fwd", new)
-            new = new.localCheckpoint(eager=False)
-            if not new.limit(1).count():
-                converged = True
-                break
-            levels.append(new)
-            frontier = new
-            depth += 1
-        if not converged:
-            raise RuntimeError(
-                f"{tag} forward BFS did not exhaust in {max_iter} "
-                "levels — the graph's eccentricity from the sources "
-                "exceeds max_iter; raise it")
+        nodes = sym.select(F.col("c").alias("node")).distinct() \
+            .localCheckpoint(eager=True)
+        if seed is None:
+            seed = nodes.select(F.col("node").alias("src"))
+        else:
+            seed = seed.join(nodes, F.col("src") == F.col("node"),
+                             "left_semi")
+        levels = [seed.select("src", F.col("src").alias("node"))
+                  .withColumn("dist", F.lit(0))
+                  .withColumn("sigma", F.lit(1).cast("long"))
+                  .localCheckpoint(eager=True)]
+        _rounds(levels[0], expand, last_level, max_iter=max_iter,
+                tag=f"{tag}.fwd", exhausted=_bfs_exhausted(tag, max_iter))
     except BaseException:
-        # the persisted edge list must not outlive a failed build
-        # (ADVICE r15: the convergence raise leaked the cache for the
-        # life of the session)
+        # a failed build must not keep the edge cache for the session
         sym.unpersist()
         raise
-    return sym, nodes, levels, depth
+    return sym, nodes, levels
 
 
 def betweenness(pairs: DataFrame, d1: str = "d1", d2: str = "d2",
@@ -1671,26 +1584,22 @@ def betweenness(pairs: DataFrame, d1: str = "d1", d2: str = "d2",
     case (where the arithmetic IS exact) against an analytic
     oracle.
 
-    Graphs whose canonical edge list fits ``local_graph_rows``
-    (default 200k rows, with the star_components wide-id byte guard)
+    Graphs whose canonical edge list passes :func:`_driver_gate` at
+    ``local_graph_rows`` (default 200k rows, fewer for wide string ids)
     AND whose total BFS work — sum over components of |sources in C|
     x (2|E_C| + |V_C|), bounded by a driver union-find over the
     already-collected list — fits ``_LOCAL_BFS_WORK`` run EXACT
-    driver Brandes instead (the ``star_components`` size-gate
-    pattern): identical update rule (the factored sigma_u *
+    driver Brandes instead: identical update rule (the factored sigma_u *
     sum((1+delta_v)/sigma_v) form), identical max_iter raise,
     parity-pinned by pytest on both paths; the distributed
     level-synchronous loop costs ~2 jobs x eccentricity of scheduler
     overhead, which on a small graph is the entire runtime.
     Web-scale graphs take the distributed loop below, unchanged;
     ``local_graph_rows=0`` forces it."""
-    if sources is not None and not sources:
-        raise ValueError("sources must be None (all nodes) or a "
-                         "non-empty list")
-    got = _local_bfs_graph(pairs, d1, d2, local_graph_rows, sources,
-                           "betweenness")
-    if got[0] == "local":
-        _, nodes_l, adj, node_field = got
+    e, seed, local = _bfs_graph(pairs, d1, d2, sources,
+                                local_graph_rows, "betweenness")
+    if local is not None:
+        nodes_l, adj = local
         bc = {n: 0.0 for n in nodes_l}
         srcs = nodes_l if sources is None else \
             sorted(s for s in set(sources) if s in adj)
@@ -1714,20 +1623,15 @@ def betweenness(pairs: DataFrame, d1: str = "d1", d2: str = "d2",
             denom = (n - 1) * (n - 2) / 2.0
             if denom <= 0:
                 denom = 1.0
-        from pyspark.sql.types import DoubleType, StructField, StructType
-        schema = StructType([
-            StructField("node", node_field.dataType, node_field.nullable),
-            StructField("betweenness", DoubleType(), True)])
-        out = pairs.sparkSession.createDataFrame(
-            [(n, bc[n] / 2.0 / denom) for n in nodes_l], schema)
+        out = _driver_frame(pairs.sparkSession, e.schema["a"],
+                            [(n, bc[n] / 2.0 / denom) for n in nodes_l],
+                            StructField("betweenness", DoubleType()))
         # same final projection as the distributed path (coalesce over
         # a literal), so the two paths' output schemas agree exactly
         return out.select("node",
                           F.coalesce("betweenness", F.lit(0.0))
                           .alias("betweenness"))
-    sym, nodes, levels, depth = _bfs_sigma(pairs, d1, d2, sources,
-                                           max_iter, "betweenness",
-                                           e=got[1])
+    sym, nodes, levels = _bfs_sigma(e, seed, max_iter, "betweenness")
     # backward accumulation, deepest level first.  Each round reads
     # exactly the two level frames it needs (the r15 shape — the
     # previous form filtered the full (src, node, dist, sigma) union
@@ -1744,11 +1648,11 @@ def betweenness(pairs: DataFrame, d1: str = "d1", d2: str = "d2",
     # only — the corpus pins the tree case, where both forms are
     # exact).
     try:
-        cur = (levels[depth]
+        cur = (levels[-1]
                .select("src", "node", "sigma")
                .withColumn("delta", F.lit(0.0)))
         acc = [cur.select("src", "node", "delta")]
-        for lvl in range(depth, 0, -1):
+        for lvl in range(len(levels) - 1, 0, -1):
             contrib = (cur.join(sym, cur.node == sym.c)
                        .groupBy("src", F.col("n").alias("node"))
                        .agg(F.sum((F.lit(1.0) + F.col("delta"))
@@ -1765,8 +1669,7 @@ def betweenness(pairs: DataFrame, d1: str = "d1", d2: str = "d2",
             # checkpointed frame — keep the union LAZY (a flat n-way union
             # of ExistingRDD scans), saving one eager job per level
             acc.append(cur.select("src", "node", "delta"))
-        from functools import reduce as _reduce
-        bc = (_reduce(DataFrame.unionByName, acc)
+        bc = (reduce(DataFrame.unionByName, acc)
               .where(F.col("node") != F.col("src"))
               .groupBy("node")
               .agg((F.sum("delta") / 2.0).alias("betweenness")))
@@ -1877,13 +1780,10 @@ def closeness(pairs: DataFrame, d1: str = "d1", d2: str = "d2",
     driver — identical per-source (n_reached, dist_sum, closeness)
     arithmetic, identical max_iter raise; ``local_graph_rows=0``
     forces the distributed loop."""
-    if sources is not None and not sources:
-        raise ValueError("sources must be None (all nodes) or a "
-                         "non-empty list")
-    got = _local_bfs_graph(pairs, d1, d2, local_graph_rows, sources,
-                           "closeness")
-    if got[0] == "local":
-        _, nodes_l, adj, node_field = got
+    e, seed, local = _bfs_graph(pairs, d1, d2, sources,
+                                local_graph_rows, "closeness")
+    if local is not None:
+        nodes_l, adj = local
         srcs = nodes_l if sources is None else \
             sorted(s for s in set(sources) if s in adj)
         rows = []
@@ -1897,14 +1797,10 @@ def closeness(pairs: DataFrame, d1: str = "d1", d2: str = "d2",
             else:
                 cl = (n_r / dsum) if dsum > 0 else 0.0
             rows.append((s, n_r, dsum, cl))
-        from pyspark.sql.types import (DoubleType, LongType, StructField,
-                                       StructType)
-        schema = StructType([
-            StructField("node", node_field.dataType, node_field.nullable),
-            StructField("n_reached", LongType(), True),
-            StructField("dist_sum", LongType(), True),
-            StructField("closeness", DoubleType(), True)])
-        out = pairs.sparkSession.createDataFrame(rows, schema)
+        out = _driver_frame(pairs.sparkSession, e.schema["a"], rows,
+                            StructField("n_reached", LongType()),
+                            StructField("dist_sum", LongType()),
+                            StructField("closeness", DoubleType()))
         # mirror the distributed path's final coalesce projection
         return out.select(
             "node",
@@ -1913,11 +1809,9 @@ def closeness(pairs: DataFrame, d1: str = "d1", d2: str = "d2",
             F.coalesce("dist_sum", F.lit(0).cast("long"))
             .alias("dist_sum"),
             F.coalesce("closeness", F.lit(0.0)).alias("closeness"))
-    sym, nodes, levels, _ = _bfs_sigma(pairs, d1, d2, sources,
-                                       max_iter, "closeness", e=got[1])
+    sym, nodes, levels = _bfs_sigma(e, seed, max_iter, "closeness")
     sym.unpersist()   # closeness never re-joins the edge list
-    from functools import reduce as _reduce
-    vis = _reduce(DataFrame.unionByName, levels)
+    vis = reduce(DataFrame.unionByName, levels)
     reached = vis.where(F.col("node") != F.col("src"))
     score = (F.sum(F.lit(1.0) / F.col("dist")) if harmonic
              else F.when(F.sum("dist") > 0,

@@ -345,7 +345,7 @@ def test_cosine_topk_batch(spark, emb, emb_np):
 
 
 def test_dup_clusters_union_find(spark):
-    """Label propagation == union-find, including a path graph (A-B, B-C,
+    """dup_clusters == union-find, including a path graph (A-B, B-C,
     C-D: transitive closure without a direct A-D edge)."""
     pairs = spark.createDataFrame(
         [(0, 1), (1, 2), (2, 3), (5, 6), (8, 9), (6, 7)], ["d1", "d2"])
@@ -369,10 +369,9 @@ def test_drop_near_duplicates_end_to_end(spark, docs):
 def test_drop_near_duplicates_revision_chain(spark):
     """The pipeline dedup shape on the CDC revision-chain topology the
     round-8 verdict flagged: 60 revisions where only CONSECUTIVE ones
-    pair (diameter 59 > dup_clusters' default max_iter=20).  The
-    non-convergence escalation must collapse the whole chain to the one
-    min-id representative — before round 9 this silently kept multiple
-    'representatives' of the same document."""
+    pair (diameter 59).  Clustering must collapse the whole chain to
+    the one min-id representative — before round 9 this silently kept
+    multiple 'representatives' of the same document."""
     import nasctn_sea_ingest_spark.operators.dedup as DD
 
     n = 60
@@ -1795,12 +1794,11 @@ def test_star_components_vs_union_find(spark):
 
 def test_star_components_long_chain_where_label_propagation_fails(spark):
     """A 3000-node path graph: min-label propagation moves the label
-    ONE hop per round, so it cannot converge within max_iter=5 — the
+    ONE hop per round, so it would need ~3000 rounds — the
     alternating-star algorithm converges in O(log n) rounds and labels
-    the whole chain with node 0.  Round 9: dup_clusters DETECTS its own
-    non-convergence (the fixpoint aggregate still moved after the last
-    round) and escalates to star_components, so even max_iter=5 returns
-    the CORRECT clusters instead of silently under-merged ones."""
+    the whole chain with node 0.  dup_clusters IS star_components, so
+    the round-9 chain regression (silent under-merge) stays covered on
+    both sides of the driver gate."""
     from nasctn_sea_ingest_spark.operators.dedup import dup_clusters
     from nasctn_sea_ingest_spark.operators.graph import star_components
 
@@ -1813,18 +1811,51 @@ def test_star_components_long_chain_where_label_propagation_fails(spark):
     got = star_components(chain, local_graph_rows=0).collect()
     assert len(got) == n
     assert all(r.cluster == 0 for r in got)
-    # escalated AND distributed together: local_graph_rows=0 forwards
-    # through dup_clusters' escalation, so the round-9 regression
-    # (silent under-merge on chains) stays covered on the path a
+    # the distributed side through the dedup name, i.e. the path a
     # >200k-edge graph would actually take
     lab = {r.node: r.cluster
-           for r in dup_clusters(chain, max_iter=5,
-                                 local_graph_rows=0).collect()}
+           for r in dup_clusters(chain, local_graph_rows=0).collect()}
     assert len(lab) == n and all(v == 0 for v in lab.values())
     # and the default gate (driver kernel) agrees
-    lab2 = {r.node: r.cluster
-            for r in dup_clusters(chain, max_iter=5).collect()}
+    lab2 = {r.node: r.cluster for r in dup_clusters(chain).collect()}
     assert lab2 == lab
+
+
+def test_star_components_raises_when_rounds_run_out(spark):
+    """An exhausted round cap must RAISE, never return under-merged
+    clusters (the shortest_paths/k_core rule): a 3000-node chain needs
+    more than two star rounds."""
+    from nasctn_sea_ingest_spark.operators.graph import star_components
+
+    chain = spark.range(2999).select(
+        F.col("id").alias("d1"), (F.col("id") + 1).alias("d2"))
+    with pytest.raises(RuntimeError, match="did not converge"):
+        star_components(chain, max_iter=2, local_graph_rows=0)
+
+
+def test_star_components_skips_materialized_input(spark):
+    """star_components re-checkpoints (and digests as the
+    ``star_components.base`` stage) only an input that is not already
+    materialized: projections and filters over a checkpoint count as
+    materialized, judged on the plan's node classes; a shuffle over
+    one does not."""
+    from nasctn_sea_ingest_spark.operators.graph import (
+        _is_materialized, star_components)
+    from nasctn_sea_ingest_spark.querylog import capture_stage_digests
+
+    ck = (spark.range(40).select(F.col("id").alias("d1"),
+                                 (F.col("id") % 7).alias("d2"))
+          .localCheckpoint(eager=True))
+    filt = ck.where(F.col("d1") > 3)
+    agg = ck.groupBy("d2").agg(F.min("d1").alias("d1"))
+    assert _is_materialized(ck.select("d2", "d1"))
+    assert _is_materialized(filt)
+    assert not _is_materialized(agg)
+    assert not _is_materialized(spark.range(5))
+    for df, base in ((ck, False), (filt, False), (agg, True)):
+        with capture_stage_digests() as stages:
+            star_components(df).collect()
+        assert ("star_components.base" in stages) == base
 
 
 def test_star_components_self_loop_only_node(spark):
@@ -3625,6 +3656,22 @@ def test_betweenness_python_replay(spark):
         with _pt.raises(RuntimeError, match="max_iter"):
             betweenness(spark.createDataFrame(path, "d1 long, d2 long"),
                         max_iter=3, local_graph_rows=lgr)
+
+
+def test_betweenness_bad_sources_leave_no_cache(spark):
+    """A source list that does not fit the id type raises before the
+    BFS materializes anything: no persisted RDD (edge cache or
+    checkpoint) outlives the raise — the edge cache used to leak for
+    the life of the session."""
+    from nasctn_sea_ingest_spark.operators.graph import betweenness
+
+    jsc = spark.sparkContext._jsc
+    df = spark.createDataFrame([(0, 1), (1, 2), (2, 3)],
+                               "d1 long, d2 long")
+    before = set(jsc.getPersistentRDDs().keys())
+    with pytest.raises(TypeError):
+        betweenness(df, sources=["x"], local_graph_rows=0)
+    assert set(jsc.getPersistentRDDs().keys()) - before == set()
 
 
 def test_assortativity_moment_replay(spark):

@@ -9,6 +9,10 @@ Usage:
     python tools/digest_stability.py --diff /tmp/digests_a.json /tmp/digests_b.json
     python tools/digest_stability.py --context
 
+The session is ``get_spark``'s default: ``SPARK_GRAFT_CPUS`` cores (else
+every core) and as many shuffle partitions.  Digests strip the core
+count, so the output does not depend on it.
+
 Each run mimics bench.py exactly (build DataFrame, count() it, digest
 the executed-plan string) but ALSO stores the normalized plan text, so
 --diff prints a unified diff of the first differing query — the evidence
@@ -43,11 +47,8 @@ def run(out_path: str) -> None:
                                                   plan_digest)
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", 32))
-    spark = get_spark(app_name="digest_stability", master=f"local[{cpus}]",
-                      shuffle_partitions=cpus,
-                      extra_conf={
-                          "spark.sql.legacy.parquet.nanosAsLong": "true"})
+    spark = get_spark(app_name="digest_stability", extra_conf={
+        "spark.sql.legacy.parquet.nanosAsLong": "true"})
     spark.sparkContext.setLogLevel("ERROR")
     out = {}
     for q in sorted(CORPUS, key=lambda q: int(q.name[1:].split("_")[0])):
@@ -77,11 +78,8 @@ def context() -> int:
                                                   plan_digest)
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", 32))
-    spark = get_spark(app_name="digest_context", master=f"local[{cpus}]",
-                      shuffle_partitions=cpus,
-                      extra_conf={
-                          "spark.sql.legacy.parquet.nanosAsLong": "true"})
+    spark = get_spark(app_name="digest_context", extra_conf={
+        "spark.sql.legacy.parquet.nanosAsLong": "true"})
     spark.sparkContext.setLogLevel("ERROR")
     order = sorted(CORPUS, key=lambda q: int(q.name[1:].split("_")[0]))
     passes: list[dict] = []
