@@ -18,7 +18,10 @@ reference                       here
 
 The Dask dict-of-ddf shape is kept: one lazy DataFrame per data product,
 all fed by a single shared decode scan (cached so multiple products don't
-re-decode, the analog of the reference's shared delayed graph).
+re-decode, the analog of the reference's shared delayed graph). The eager
+entry points — ``read_seamf_zipfile`` and each delayed ``compute()`` — do
+not go through that dict: they share one uncached read that collects the
+decode in a single pass.
 """
 
 from __future__ import annotations
@@ -90,10 +93,14 @@ def read_seamf_zipfile(spark: SparkSession, path: str,
                        errors: str = "raise") -> dict[str, pd.DataFrame]:
     """Eager multi-file read: decode the archive on the cluster, collect to
     a dict of pandas frames (reference ``read_seamf_zipfile`` semantics;
-    ``errors='log'`` drops failed files like the reference's log path)."""
-    sdfs = read_seamf_zipfile_as_sdf(spark, path, allow=allow, tz=tz,
-                                     errors=errors)
-    return {k: df.toPandas() for k, df in sdfs.items()}
+    ``errors='raise'`` raises on the first failed file, ``errors='log'``
+    drops failed files like the reference's log path).
+
+    It is the same eager read a ``SparkDelayed.compute`` runs: one decode
+    collected in one pass, split per table in pandas, nothing cached."""
+    if errors not in ("raise", "log"):
+        raise ValueError("errors must be 'raise' or 'log'")
+    return _collect(list_sigmf_refs(spark, path, allow=allow), tz, errors)
 
 
 def read_seamf_zipfile_as_sdf(spark: SparkSession, path: str,
@@ -211,33 +218,35 @@ class SparkDelayed:
             sdfs = _sdfs_from_refs(refs, tz=self._tz, errors=self._errors,
                                    partition_func=self._pf)
             return {k: df.toPandas() for k, df in sdfs.items()}
-        # ONE decode pass collected client-side, split per table in pandas —
-        # the reference's delayed partition materializes the whole dict the
-        # same way (ziparchive.py:265-277), and it avoids parking a .cache()
-        # per compute() call in executor memory (the lazy-sdf path caches
-        # because its consumers are lazy; here everything is consumed NOW)
-        traces = decode_traces(refs, tz=self._tz).toPandas()
-        bad = traces["error"].notnull()
-        if self._errors == "raise" and bad.any():
-            f = traces.loc[bad].iloc[0]
-            raise RuntimeError(
-                f"decode failed for {f['source_file']}: {f['error']}")
-        good = traces.loc[~bad].drop(columns=["error"])
-        out = {t: good.loc[good["table"] == t].drop(columns=["table"])
-                      .reset_index(drop=True)
-               for t in _PRODUCTS}
-        failed = set(traces.loc[bad, "source_file"])
-        for name, fn in (("channel_metadata", decode_channel_metadata),
-                         ("sweep_metadata", decode_sweep_metadata)):
-            m = fn(refs, tz=self._tz,
-                   hash_check=self._errors == "raise").toPandas()
-            m = (m.loc[m["error"].isnull()
-                       & ~m["source_file"].isin(failed)]
-                 .drop(columns=["error"]).reset_index(drop=True))
-            out[name] = m
-        out["sensor_metadata"] = \
-            out["sweep_metadata"][["source_file", "timezone"]]
-        return out
+        return _collect(refs, self._tz, self._errors)
+
+
+def _collect(refs: DataFrame, tz: str | None,
+             errors: str) -> dict[str, pd.DataFrame]:
+    """The one eager read: ONE decode pass collected client-side, split per
+    table in pandas — the reference's delayed partition materializes the
+    whole dict the same way (ziparchive.py:265-277). Nothing is cached:
+    the lazy dict caches because its consumers are lazy, here everything
+    is consumed NOW."""
+    traces = decode_traces(refs, tz=tz).toPandas()
+    bad = traces["error"].notnull()
+    if errors == "raise" and bad.any():
+        f = traces.loc[bad].iloc[0]
+        raise RuntimeError(
+            f"decode failed for {f['source_file']}: {f['error']}")
+    good = traces.loc[~bad].drop(columns=["error"])
+    out = {t: good.loc[good["table"] == t].drop(columns=["table"])
+                  .reset_index(drop=True)
+           for t in _PRODUCTS}
+    failed = set(traces.loc[bad, "source_file"])
+    for name, fn in (("channel_metadata", decode_channel_metadata),
+                     ("sweep_metadata", decode_sweep_metadata)):
+        m = fn(refs, tz=tz, hash_check=errors == "raise").toPandas()
+        m = (m.loc[m["error"].isnull() & ~m["source_file"].isin(failed)]
+             .drop(columns=["error"]).reset_index(drop=True))
+        out[name] = m
+    out["sensor_metadata"] = out["sweep_metadata"][["source_file", "timezone"]]
+    return out
 
 
 def read_seamf_zipfile_as_delayed(spark: SparkSession, path: str,

@@ -17,6 +17,12 @@ the storage-level equivalents SURVEY.md §1.5/§4 calls for:
 - per-file failures quarantine into an ``error`` column instead of killing
   the job (reference ``errors='log'``, ``ziparchive.py:424-440``).
 
+Every ``.sigmf`` reader — ``decode_traces``, ``decode_dir``, the two
+metadata stages and the streaming ingest — is the one private stage
+``_decode_stage``: it takes each file's bytes from a ref or from a
+binaryFile ``content`` column, makes one decode call per file, and turns a
+failed file into one quarantine row.
+
 At 100 TB scale the refs DataFrame is the only driver-side state (a few
 bytes per file); decode parallelism = number of ref partitions, and the
 output layout (table, date) keeps both full-table scans (one table dir) and
@@ -198,21 +204,53 @@ def _ref_name(path: str, member: str | None) -> str:
 # decode stages (mapInPandas)
 # --------------------------------------------------------------------------
 
+def _decode_stage(files: DataFrame, schema: T.StructType, decode,
+                  **kw) -> DataFrame:
+    """The one per-file decode stage behind every ``.sigmf`` reader: a
+    ``mapInPandas`` that takes each file's raw bytes — a binaryFile
+    ``content`` column, else the ``(path, member)`` ref opened here — runs
+    ``decode(raw, source=..., **kw)`` (a list of ``schema`` rows) and, when
+    that raises, emits one quarantine row instead: the source, nulls, and
+    the error text in the last column (S15)."""
+    cols = [f.name for f in schema.fields]
+    n_fill = len(cols) - 2
+    by_content = "content" in files.columns
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        zcache: dict = {}
+        for b in batches:
+            recs = []
+            for path, x in zip(b["path"],
+                               b["content" if by_content else "member"]):
+                src = path if by_content else _ref_name(path, x)
+                try:
+                    raw = bytes(x) if by_content \
+                        else _open_ref(zcache, path, x)
+                    recs.extend(decode(raw, source=src, **kw))
+                except Exception as e:  # noqa: BLE001 — quarantine
+                    recs.append((src, *([None] * n_fill),
+                                 f"{type(e).__name__}: {e}"))
+            yield pd.DataFrame(recs, columns=cols)
+
+    return files.mapInPandas(run, schema)
+
+
 def decode_dir(spark: SparkSession, path: str, tz: str | None = None,
                hash_check: bool = True) -> DataFrame:
     """Batch decode of loose ``.sigmf`` files via the ``binaryFile``
     source — the cluster-scale listing path (SCALE.md §1): file discovery
     is Spark's own distributed file index, no driver-side zip machinery,
-    and the source splits/parallelizes by file size. Output schema and
-    quarantine semantics match ``decode_traces``; the decode stage is the
-    same records-tier ``mapInPandas`` the streaming ingest runs.
+    and the source splits/parallelizes by file size. The decode is the
+    same quarantine stage ``decode_traces`` and the streaming ingest run,
+    fed the file bytes from the ``content`` column, so output schema,
+    rows and error text match ``decode_traces`` (``source_file`` is the
+    source's ``file:`` URI).
     """
-    from ..streaming import _decode_content
     raw = (spark.read.format("binaryFile")
            .option("pathGlobFilter", "*.sigmf")
            .load(path).select("path", "content"))
-    return raw.mapInPandas(
-        lambda it: _decode_content(it, tz, hash_check), TRACE_SCHEMA)
+    return _decode_stage(raw, TRACE_SCHEMA, decode_sigmf_trace_records,
+                         tz=tz, hash_check=hash_check)
 
 
 def decode_traces(refs: DataFrame, tz: str | None = None,
@@ -220,24 +258,8 @@ def decode_traces(refs: DataFrame, tz: str | None = None,
     """Full decode of every ref into long-format trace rows (one row per
     per-capture trace, ``values`` = float32 array). Failures become rows
     with ``error`` set and null payload (quarantine, S15)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        zcache: dict = {}
-        cols = [f.name for f in TRACE_SCHEMA.fields]
-        for b in batches:
-            recs = []
-            for path, member in zip(b["path"], b["member"]):
-                src = _ref_name(path, member)
-                try:
-                    raw = _open_ref(zcache, path, member)
-                    recs.extend(decode_sigmf_trace_records(
-                        raw, tz=tz, hash_check=hash_check, source=src))
-                except Exception as e:  # noqa: BLE001 — quarantine
-                    recs.append((src, None, None, None, None, None, None,
-                                 None, None, None, f"{type(e).__name__}: {e}"))
-            yield pd.DataFrame(recs, columns=cols)
-
-    return refs.mapInPandas(run, TRACE_SCHEMA)
+    return _decode_stage(refs, TRACE_SCHEMA, decode_sigmf_trace_records,
+                         tz=tz, hash_check=hash_check)
 
 
 def _decode_batch_dict(paths, members, zcache: dict, tz: str | None,
@@ -354,29 +376,30 @@ def write_partitions(df: DataFrame, write_fn, path: str) -> pd.DataFrame:
     return log.sort_values("partition_id", ignore_index=True)
 
 
-def _meta_rows(path: str, member: str | None, zcache: dict,
-               tz: str | None, hash_check: bool = False
-               ) -> tuple[list[tuple], tuple]:
-    """(channel_metadata rows, sweep_metadata row) via the payload-skipping
-    fast path (S14)."""
-    src = _ref_name(path, member)
-    raw = _open_ref(zcache, path, member)
+def _meta_rows(raw: bytes, source: str, tz: str | None, hash_check: bool,
+               sweep: bool) -> list[tuple]:
+    """The channel_metadata rows, or the one sweep_metadata row, of one
+    file via the payload-skipping fast path (S14)."""
     plan = decode_sigmf_meta(raw, tz=tz, hash_check=hash_check)["plan"]
 
     def ts(v):
         return pd.Timestamp(v) if v is not None else None
 
-    ch_rows = []
-    for row in plan.channel_meta.values():
-        core = {c: row.get(c) for c in _CH_CORE}
-        core["datetime"] = ts(core["datetime"])
-        core["cal_datetime"] = ts(core.get("cal_datetime"))
-        ov = core.get("overload")
-        core["overload"] = bool(ov) if ov is not None else None
-        pre = core.get("sigan_preamp_enable")
-        core["sigan_preamp_enable"] = bool(pre) if pre is not None else None
-        extras = {k: str(v) for k, v in row.items() if k not in _CH_CORE}
-        ch_rows.append((src, *[core[c] for c in _CH_CORE], extras or None, None))
+    if not sweep:
+        ch_rows = []
+        for row in plan.channel_meta.values():
+            core = {c: row.get(c) for c in _CH_CORE}
+            core["datetime"] = ts(core["datetime"])
+            core["cal_datetime"] = ts(core.get("cal_datetime"))
+            ov = core.get("overload")
+            core["overload"] = bool(ov) if ov is not None else None
+            pre = core.get("sigan_preamp_enable")
+            core["sigan_preamp_enable"] = \
+                bool(pre) if pre is not None else None
+            extras = {k: str(v) for k, v in row.items() if k not in _CH_CORE}
+            ch_rows.append((source, *[core[c] for c in _CH_CORE],
+                            extras or None, None))
+        return ch_rows
 
     sm = dict(plan.sweep_meta)
     sm["timezone"] = plan.timezone
@@ -394,44 +417,21 @@ def _meta_rows(path: str, member: str | None, zcache: dict,
             v = int(v)
         core[c] = v
     extras = {k: str(v) for k, v in sm.items() if k not in _SWEEP_CORE}
-    sweep_row = (src, *[core[c] for c in _SWEEP_CORE], extras or None, None)
-    return ch_rows, sweep_row
-
-
-def _meta_stage(refs: DataFrame, schema: T.StructType, pick: int,
-                tz: str | None, hash_check: bool = False) -> DataFrame:
-    cols = [f.name for f in schema.fields]
-    n_fill = len(cols) - 2
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        zcache: dict = {}
-        for b in batches:
-            recs = []
-            for path, member in zip(b["path"], b["member"]):
-                try:
-                    both = _meta_rows(path, member, zcache, tz,
-                                      hash_check)
-                    got = both[pick]
-                    recs.extend(got if pick == 0 else [got])
-                except Exception as e:  # noqa: BLE001
-                    recs.append((_ref_name(path, member),
-                                 *([None] * n_fill),
-                                 f"{type(e).__name__}: {e}"))
-            yield pd.DataFrame(recs, columns=cols)
-
-    return refs.mapInPandas(run, schema)
+    return [(source, *[core[c] for c in _SWEEP_CORE], extras or None, None)]
 
 
 def decode_channel_metadata(refs: DataFrame, tz: str | None = None,
                             hash_check: bool = False) -> DataFrame:
     """Per-capture metadata rows via metadata-only parse (no LZMA)."""
-    return _meta_stage(refs, CHANNEL_META_SCHEMA, 0, tz, hash_check)
+    return _decode_stage(refs, CHANNEL_META_SCHEMA, _meta_rows, tz=tz,
+                         hash_check=hash_check, sweep=False)
 
 
 def decode_sweep_metadata(refs: DataFrame, tz: str | None = None,
                           hash_check: bool = False) -> DataFrame:
     """One metadata row per file via metadata-only parse (no LZMA)."""
-    return _meta_stage(refs, SWEEP_META_SCHEMA, 1, tz, hash_check)
+    return _decode_stage(refs, SWEEP_META_SCHEMA, _meta_rows, tz=tz,
+                         hash_check=hash_check, sweep=True)
 
 
 # --------------------------------------------------------------------------

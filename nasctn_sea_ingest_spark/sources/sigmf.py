@@ -139,16 +139,12 @@ def _centered_psd_axis(n: int, bandwidth: float) -> tuple[float, float]:
     return (-(n // 2) * step, step)
 
 
-def _plan_v1(meta: dict, tz: str | None) -> _Plan:
+def _plan_v1(meta: dict, tz: str) -> _Plan:
     """v0.1: traces declared as SigMF annotations (seamf.py:235-359)."""
     p = _Plan(version="v0.1")
     g = meta["global"]
     sample_rate = g["core:sample_rate"]
     caps_by_start = {c["core:sample_start"]: c for c in meta["captures"]}
-
-    if tz is None:
-        raise SigmfError(
-            "v0.1-0.3 metadata has no geolocation; pass an explicit timezone")
     p.timezone = tz
 
     for ann in meta.get("annotations", []):
@@ -223,12 +219,9 @@ _V2_TRACES = {
 }
 
 
-def _plan_v2(meta: dict, tz: str | None) -> _Plan:
+def _plan_v2(meta: dict, tz: str) -> _Plan:
     p = _Plan(version="v0.2")
     g = meta["global"]
-    if tz is None:
-        raise SigmfError(
-            "v0.1-0.3 metadata has no geolocation; pass an explicit timezone")
     p.timezone = tz
 
     cap = None
@@ -271,14 +264,11 @@ def _plan_v2(meta: dict, tz: str | None) -> _Plan:
     return p
 
 
-def _plan_v3(meta: dict, tz: str | None) -> _Plan:
+def _plan_v3(meta: dict, tz: str) -> _Plan:
     """v0.3: trace layout from global.data_products detector lists, APD as a
     variable-length raw pair per channel (seamf.py:467-603)."""
     p = _Plan(version="v0.3")
     g = meta["global"]
-    if tz is None:
-        raise SigmfError(
-            "v0.1-0.3 metadata has no geolocation; pass an explicit timezone")
     p.timezone = tz
     dp = g["data_products"]
 
@@ -390,23 +380,10 @@ def _sweep_meta_v4plus(meta: dict, p: _Plan) -> None:
         p.sweep_meta["geo_alt"] = geo[2] if len(geo) > 2 else None
 
 
-def _resolve_tz_v4plus(meta: dict, tz: str | None) -> str:
-    if tz is not None:
-        return tz
-    loc = meta["global"].get("core:geolocation", {}).get("coordinates")
-    if loc is None:
-        raise SigmfError(
-            "no geolocation in metadata; pass an explicit timezone")
-    t = timezone_from_longitude(loc[0])
-    if t is None:
-        raise SigmfError(f"no timezone bucket for longitude {loc[0]}")
-    return t
-
-
-def _plan_v4(meta: dict, tz: str | None) -> _Plan:
+def _plan_v4(meta: dict, tz: str) -> _Plan:
     p = _Plan(version="v0.4")
     g = meta["global"]
-    p.timezone = _resolve_tz_v4plus(meta, tz)
+    p.timezone = tz
     dp = g["ntia-algorithm:data_products"]
 
     rel = []
@@ -455,11 +432,11 @@ _V5_GRAPHS = {
 }
 
 
-def _plan_v5(meta: dict, tz: str | None) -> _Plan:
+def _plan_v5(meta: dict, tz: str) -> _Plan:
     """v0.5 ('v0.4.0') and v0.6.0: data products as Graph objects with
     series names and explicit x/y axes (seamf.py:759-924)."""
     p = _Plan(version=_version_of(meta))
-    p.timezone = _resolve_tz_v4plus(meta, tz)
+    p.timezone = tz
     dp = meta["global"]["ntia-algorithm:data_products"]
 
     rel = []
@@ -509,10 +486,20 @@ _PLANNERS = {
 
 
 def _plan_for(meta: dict, tz: str | None) -> _Plan:
+    """Plan one file; without an explicit ``tz`` the timezone comes from
+    the geolocation's longitude bucket (v0.1-0.3 files carry none)."""
     version = _version_of(meta)
     planner = _PLANNERS.get(version)
     if planner is None:
         raise SigmfError(f"unrecognized metadata version {version!r}")
+    if tz is None:
+        loc = meta["global"].get("core:geolocation", {}).get("coordinates")
+        if loc is None:
+            raise SigmfError(
+                "no geolocation in metadata; pass an explicit timezone")
+        tz = timezone_from_longitude(loc[0])
+        if tz is None:
+            raise SigmfError(f"no timezone bucket for longitude {loc[0]}")
     return planner(meta, tz)
 
 
@@ -613,63 +600,35 @@ def _walk_ustar(buf: bytes) -> tuple[dict, bytes] | None:
     return json.loads(meta), blob
 
 
-def _split_traces(plan, flat: np.ndarray) -> dict[str, list]:
-    """Split the flat payload at the declared trace offsets (R1 analog,
-    ``seamf.py:140-157``): table -> [(datetime, frequency, stat, det, kind,
-    values float32, x_start, x_step), ...].
-
-    Traces were emitted per capture in offset order, so the k-th block of
-    traces belongs to the k-th capture (offsets ascend within the file).
-    """
-    offsets = [t[0] for t in plan.traces]
-    bounds = offsets[1:] + [len(flat)]
-    cap_rows = _capture_order(plan)
-    n_caps = len(plan.channel_meta)
-    per_cap = len(plan.traces) // n_caps if n_caps else 0
-
-    recs: dict[str, list] = {t: [] for t in TRACE_TABLES}
-    for i, ((off, table, stat, det, kind), end) in enumerate(
-            zip(plan.traces, bounds)):
-        cap_idx = i // per_cap if per_cap else 0
-        dt, freq = cap_rows[cap_idx]
-        x_start, x_step = plan.axes.get(table, (0.0, 1.0))
-        recs[table].append((dt, freq, stat, det, kind, flat[off:end],
-                            x_start, x_step))
-    return recs
+def _verified(file, hash_check: bool) -> tuple[dict, bytes]:
+    """The tar read plus the payload integrity gate every entry point
+    shares: (parsed metadata, still-compressed payload)."""
+    meta, lzma_blob = _read_tar(file)
+    if hash_check and hashlib.sha512(lzma_blob).hexdigest() \
+            != meta["global"].get("core:sha512"):
+        raise SigmfError("payload sha512 mismatch")
+    return meta, lzma_blob
 
 
 def _capture_order(plan) -> list:
-    """(datetime, frequency) per capture, in the same sorted order
-    ``_split_traces`` assigns rows — each table's rows are this sequence
-    repeated blockwise (k identical-layout traces per capture)."""
+    """(datetime, frequency) per capture, in the order ``_trace_tuples``
+    assigns rows — each table's rows are this sequence repeated blockwise
+    (k identical-layout traces per capture)."""
     return sorted(((row["datetime"], freq)
                    for freq, row in plan.channel_meta.items()),
                   key=lambda x: x[0])
 
 
-def decode_sigmf_trace_records(file, tz: str | None = None,
-                               hash_check: bool = True,
-                               source: str = "") -> list[tuple]:
-    """Distributed-ingest hot path: one ``.sigmf`` file straight to
-    TRACE_SCHEMA-ordered tuples (source, table, datetime, frequency,
-    capture_statistic, detector, kind, values, x_start, x_step, error) —
-    no per-file pandas frames. ``decode_traces`` builds a single frame per
-    Arrow batch from these, which is what lets the Spark path beat the
-    reference's per-file eager loop (``ziparchive.py:422``).
-    """
-    meta, lzma_blob = _read_tar(file)
-    if hash_check:
-        digest = hashlib.sha512(lzma_blob).hexdigest()
-        if digest != meta["global"].get("core:sha512"):
-            raise SigmfError("payload sha512 mismatch")
-    raw_payload = lzma.decompress(lzma_blob, format=lzma.FORMAT_XZ)
-    plan = _plan_for(meta, tz if tz is not None else _try_tz(meta))
-    flat = np.frombuffer(raw_payload, dtype=np.float16).astype(np.float32)
-    # Fused split+emit: one pass over the offset plan straight to final
-    # tuples (the _split_traces intermediate built every record twice —
-    # measurably slower on a path where everything-but-lzma is ~0.8
-    # ms/file).  Timestamps stay datetime64[us] (Arrow takes them
-    # directly; per-row pd.Timestamp wrapping bought nothing).
+def _trace_tuples(plan, payload: bytes, source: str) -> dict[str, list]:
+    """Split the decompressed payload at the declared trace offsets (R1
+    analog, ``seamf.py:140-157``) straight to TRACE_SCHEMA-ordered tuples
+    (source, table, datetime, frequency, capture_statistic, detector, kind,
+    values, x_start, x_step, error), grouped by table in TRACE_TABLES order.
+
+    Traces were emitted per capture in offset order, so the k-th block of
+    traces belongs to the k-th capture (offsets ascend within the file).
+    Timestamps stay datetime64[us] (Arrow takes them directly)."""
+    flat = np.frombuffer(payload, dtype=np.float16).astype(np.float32)
     cap_rows = [(dt, float(freq)) for dt, freq in _capture_order(plan)]
     traces = plan.traces
     n = len(traces)
@@ -687,9 +646,25 @@ def decode_sigmf_trace_records(file, tz: str | None = None,
             det if table in ("pvt", "pfp") else None,
             kind if table == "apd_raw" else None,
             flat[off:end], float(x0), float(dx), None))
+    return buckets
+
+
+def decode_sigmf_trace_records(file, tz: str | None = None,
+                               hash_check: bool = True,
+                               source: str = "") -> list[tuple]:
+    """Distributed-ingest hot path: one ``.sigmf`` file straight to
+    TRACE_SCHEMA-ordered tuples (source, table, datetime, frequency,
+    capture_statistic, detector, kind, values, x_start, x_step, error) —
+    no per-file pandas frames. ``decode_traces`` builds a single frame per
+    Arrow batch from these, which is what lets the Spark path beat the
+    reference's per-file eager loop (``ziparchive.py:422``).
+    """
+    meta, lzma_blob = _verified(file, hash_check)
+    payload = lzma.decompress(lzma_blob, format=lzma.FORMAT_XZ)
+    buckets = _trace_tuples(_plan_for(meta, tz), payload, source)
     out: list[tuple] = []
-    for table in ("psd", "pvt", "pfp", "apd", "apd_raw"):
-        out.extend(buckets.get(table, ()))
+    for rows in buckets.values():
+        out.extend(rows)
     return out
 
 
@@ -703,18 +678,13 @@ def decode_sigmf_meta(file, tz: str | None = None,
     by the zipfile API's ``errors='raise'`` mode so metadata actions
     surface corrupt files instead of silently including them. Default
     off: it roughly doubles the metadata-only parse cost."""
-    meta, lzma_blob = _read_tar(file)
-    if hash_check:
-        digest = hashlib.sha512(lzma_blob).hexdigest()
-        if digest != meta["global"].get("core:sha512"):
-            raise SigmfError("payload sha512 mismatch")
-    plan = _plan_for(meta, tz if tz is not None else _try_tz(meta))
-    return {"plan": plan, "meta": meta}
+    meta, _ = _verified(file, hash_check)
+    return {"plan": _plan_for(meta, tz), "meta": meta}
 
 
-def _try_tz(meta: dict):
-    loc = meta["global"].get("core:geolocation", {}).get("coordinates")
-    return timezone_from_longitude(loc[0]) if loc else None
+# TRACE_SCHEMA tuple positions of the columns a trace frame carries
+_FIELD_IDX = {"datetime": 2, "frequency": 3, "capture_statistic": 4,
+              "detector": 5, "kind": 6}
 
 
 def decode_sigmf(file, tz: str | None = None, hash_check: bool = True,
@@ -738,79 +708,69 @@ def decode_sigmf(file, tz: str | None = None, hash_check: bool = True,
     - ``"bytes"`` — raw decompressed payload, no unpacking:
       ``{"data": float16 bytes, "meta": parsed JSON}`` (reference's
       ``force_loader_cls=None`` tier).
+
+    Both unpacked tiers are built from the records tier's tuples.
     """
     if unpack not in ("frames", "arrays", "bytes"):
         raise ValueError("unpack must be 'frames', 'arrays' or 'bytes'")
-    meta, lzma_blob = _read_tar(file)
-
-    if hash_check:
-        digest = hashlib.sha512(lzma_blob).hexdigest()
-        if digest != meta["global"].get("core:sha512"):
-            raise SigmfError("payload sha512 mismatch")
-
-    raw_payload = lzma.decompress(lzma_blob, format=lzma.FORMAT_XZ)
+    meta, lzma_blob = _verified(file, hash_check)
+    payload = lzma.decompress(lzma_blob, format=lzma.FORMAT_XZ)
     if unpack == "bytes":
-        return {"data": raw_payload, "meta": meta}
+        return {"data": payload, "meta": meta}
 
-    plan = _plan_for(meta, tz if tz is not None else _try_tz(meta))
-    flat = np.frombuffer(raw_payload, dtype=np.float16).astype(np.float32)
-    recs = _split_traces(plan, flat)
-
+    plan = _plan_for(meta, tz)
+    buckets = _trace_tuples(plan, payload, source)
     out: dict = {}
     if unpack == "arrays":
-        for table, rows in recs.items():
+        for table, rows in buckets.items():
             if rows:
-                out[table] = np.stack([r[5] for r in rows])
-        recs = {t: [] for t in TRACE_TABLES}
-    # column-wise construction: a dict of ready columns skips pandas'
-    # per-cell type inference over tuple rows (~40% of decode time in
-    # profile; the lzma call is the only bigger cost and is irreducible)
-    _FIELD_IDX = {"datetime": 0, "frequency": 1, "capture_statistic": 2,
-                  "detector": 3, "kind": 4}
-    cap_rows = _capture_order(plan)
-    n_caps = len(cap_rows)
-    base_dt = _fast_dtindex([d for d, _ in cap_rows]) if n_caps else None
-    base_freq = np.asarray([f for _, f in cap_rows], dtype=np.float64)
-    for table, rows in recs.items():
-        if not rows:
-            continue
-        keep = ["datetime", "frequency"]
-        if table in ("psd", "pfp"):
-            keep.append("capture_statistic")
-        if table in ("pvt", "pfp"):
-            keep.append("detector")
-        if table == "apd_raw":
-            keep.append("kind")
-        n_rows = len(rows)
-        data: dict = {}
-        # hand pandas ready-typed arrays: per-cell inference over plain
-        # lists (maybe_infer_to_datetimelike etc.) was ~40% of the frames
-        # tier in profile, on top of the irreducible lzma cost.  Rows are
-        # capture-grouped blocks of identical layout (k traces per capture,
-        # _split_traces contract), so key columns build as repeat/tile of
-        # the per-capture constants instead of per-row conversions —
-        # cell-for-cell parity is pinned by test_values_match_reference_dump.
-        k = n_rows // n_caps if n_caps else 0
-        if k and n_rows == k * n_caps:
-            data["datetime"] = base_dt.repeat(k)
-            data["frequency"] = np.repeat(base_freq, k)
-            for c in keep[2:]:
-                data[c] = np.tile(
-                    _obj_array([rows[j][_FIELD_IDX[c]] for j in range(k)]),
-                    n_caps)
-        else:
-            for c in keep:
-                vals = [r[_FIELD_IDX[c]] for r in rows]
-                if c == "datetime":
-                    data[c] = _fast_dtindex(vals)
-                elif c == "frequency":
-                    data[c] = np.asarray(vals, dtype=np.float64)
-                else:
-                    data[c] = _obj_array(vals)
-        data["values"] = _obj_array([r[5] for r in rows])
-        data["x_start"] = np.full(n_rows, rows[0][6])
-        data["x_step"] = np.full(n_rows, rows[0][7])
-        out[table] = _typed_frame(data, n_rows)
+                out[table] = np.stack([r[7] for r in rows])
+    else:
+        # column-wise construction: a dict of ready columns skips pandas'
+        # per-cell type inference over tuple rows (~40% of decode time in
+        # profile; the lzma call is the only bigger cost and is irreducible)
+        cap_rows = _capture_order(plan)
+        n_caps = len(cap_rows)
+        base_dt = _fast_dtindex([d for d, _ in cap_rows]) if n_caps else None
+        base_freq = np.asarray([f for _, f in cap_rows], dtype=np.float64)
+        for table, rows in buckets.items():
+            if not rows:
+                continue
+            keep = ["datetime", "frequency"]
+            if table in ("psd", "pfp"):
+                keep.append("capture_statistic")
+            if table in ("pvt", "pfp"):
+                keep.append("detector")
+            if table == "apd_raw":
+                keep.append("kind")
+            n_rows = len(rows)
+            data: dict = {}
+            # Rows are capture-grouped blocks of identical layout (k traces
+            # per capture, _trace_tuples contract), so key columns build as
+            # repeat/tile of the per-capture constants instead of per-row
+            # conversions — cell-for-cell parity with the records tier is
+            # pinned by test_decode_roundtrip_any_geometry.
+            k = n_rows // n_caps if n_caps else 0
+            if k and n_rows == k * n_caps:
+                data["datetime"] = base_dt.repeat(k)
+                data["frequency"] = np.repeat(base_freq, k)
+                for c in keep[2:]:
+                    data[c] = np.tile(
+                        _obj_array([rows[j][_FIELD_IDX[c]]
+                                    for j in range(k)]), n_caps)
+            else:
+                for c in keep:
+                    vals = [r[_FIELD_IDX[c]] for r in rows]
+                    if c == "datetime":
+                        data[c] = _fast_dtindex(vals)
+                    elif c == "frequency":
+                        data[c] = np.asarray(vals, dtype=np.float64)
+                    else:
+                        data[c] = _obj_array(vals)
+            data["values"] = _obj_array([r[7] for r in rows])
+            data["x_start"] = np.full(n_rows, rows[0][8])
+            data["x_step"] = np.full(n_rows, rows[0][9])
+            out[table] = _typed_frame(data, n_rows)
 
     out["channel_metadata"] = _frame_from_dicts(
         sorted(plan.channel_meta.values(), key=lambda d: d["datetime"]),

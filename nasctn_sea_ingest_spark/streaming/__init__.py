@@ -5,10 +5,11 @@ maintains a watermarked daily rollup for late/out-of-order arrivals.
 
 The reference is strictly batch over completed archives — streaming is the
 natural Spark extension: ``readStream.format("binaryFile")`` tails the
-landing dir (exactly-once via checkpointed file tracking), the decode is the
-same Arrow-batched ``mapInPandas`` stage as batch ingest, and
-``foreachBatch`` appends to the warehouse. At scale the landing dir lives on
-object storage and ``maxFilesPerTrigger`` bounds per-micro-batch work.
+landing dir (exactly-once via checkpointed file tracking), the decode is
+batch ingest's one quarantine stage (``sources.ingest._decode_stage``, fed
+the ``content`` column), and ``foreachBatch`` appends to the warehouse. At
+scale the landing dir lives on object storage and ``maxFilesPerTrigger``
+bounds per-micro-batch work.
 """
 
 from __future__ import annotations
@@ -25,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..functions import array_mean_db
-from ..sources.ingest import TRACE_SCHEMA
+from ..sources.ingest import TRACE_SCHEMA, _decode_stage
 from ..sources.sigmf import decode_sigmf_trace_records
 
 __all__ = ["read_sigmf_stream", "stream_to_warehouse", "daily_rollup",
@@ -47,29 +48,14 @@ __all__ = ["read_sigmf_stream", "stream_to_warehouse", "daily_rollup",
            "window_index_reproject", "semdedup_store_reproject"]
 
 
-def _decode_content(batches: Iterator[pd.DataFrame],
-                    tz: str | None, hash_check: bool) -> Iterator[pd.DataFrame]:
-    cols = [f.name for f in TRACE_SCHEMA.fields]
-    for b in batches:
-        recs = []
-        for path, content in zip(b["path"], b["content"]):
-            try:
-                recs.extend(decode_sigmf_trace_records(
-                    bytes(content), tz=tz, hash_check=hash_check,
-                    source=path))
-            except Exception as e:  # noqa: BLE001 — quarantine
-                recs.append((path, None, None, None, None, None, None,
-                             None, None, None, f"{type(e).__name__}: {e}"))
-        yield pd.DataFrame(recs, columns=cols)
-
-
 def read_sigmf_stream(spark: SparkSession, landing_dir: str,
                       tz: str | None = None, hash_check: bool = True,
                       max_files_per_trigger: int | None = None) -> DataFrame:
     """Streaming DataFrame of decoded trace rows from a landing directory.
 
     File discovery/checkpointing comes from the binaryFile streaming source;
-    decode is the same vectorized stage as batch ingest.
+    decode is the batch readers' own quarantine stage, fed the ``content``
+    column, so rows and error text match ``decode_dir``.
     """
     reader = (spark.readStream.format("binaryFile")
               .schema("path STRING, modificationTime TIMESTAMP, "
@@ -78,8 +64,8 @@ def read_sigmf_stream(spark: SparkSession, landing_dir: str,
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     raw = reader.load(landing_dir).select("path", "content")
-    return raw.mapInPandas(
-        lambda it: _decode_content(it, tz, hash_check), TRACE_SCHEMA)
+    return _decode_stage(raw, TRACE_SCHEMA, decode_sigmf_trace_records,
+                         tz=tz, hash_check=hash_check)
 
 
 def stream_to_warehouse(spark: SparkSession, landing_dir: str, out_dir: str,

@@ -45,7 +45,10 @@ def test_zipfile_as_sdf(spark, zpath):
 
 
 def test_zipfile_eager(spark, zpath):
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
     dfs = api.read_seamf_zipfile(spark, zpath, allow=2)
+    # the eager read caches nothing it would have to release
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
     assert len(dfs["psd"]) == 2 * 3 * 2
     assert np.isfinite(np.concatenate(
         [np.asarray(v) for v in dfs["psd"]["values"]])).all()
@@ -162,6 +165,15 @@ def test_zipfile_error_modes(spark, tmp_path_factory):
     sdfs = api.read_seamf_zipfile_as_sdf(spark, str(d), errors="log")
     assert sdfs["psd"].count() == 3 * 2        # bad file dropped
     assert sdfs["sweep_metadata"].count() == 1  # metadata dropped too
+    # the eager read keeps both modes
+    with pytest.raises(Exception, match="sha512"):
+        api.read_seamf_zipfile(spark, str(d))
+    dfs = api.read_seamf_zipfile(spark, str(d), errors="log")
+    assert len(dfs["psd"]) == 3 * 2
+    assert len(dfs["sweep_metadata"]) == 1
+    assert not dfs["psd"]["source_file"].str.endswith("bad.sigmf").any()
+    assert not dfs["sweep_metadata"]["source_file"] \
+        .str.endswith("bad.sigmf").any()
 
 
 @pytest.fixture(scope="module")

@@ -9,6 +9,7 @@ import pyspark.sql.functions as F
 
 from nasctn_sea_ingest_spark.sources.ingest import (
     decode_channel_metadata,
+    decode_dir,
     decode_sweep_metadata,
     decode_traces,
     ingest,
@@ -202,20 +203,26 @@ def test_backfill_partitions(spark, tmp_path_factory):
 
 def test_decode_dir_binaryfile(spark, tmp_path_factory):
     """binaryFile-source batch decode matches the ref-based decode on the
-    same loose files (same schema, same row multiset)."""
-    from nasctn_sea_ingest_spark.sources.ingest import (
-        decode_dir,
-        decode_traces,
-        list_sigmf_refs,
-    )
-
-    d = str(tmp_path_factory.mktemp("loose"))
-    build_sweep_series(d, 4)
-    via_dir = decode_dir(spark, d)
-    via_refs = decode_traces(list_sigmf_refs(spark, d))
+    same loose files (same schema, same rows and values, and the same
+    quarantine text for the poisoned files)."""
+    d = tmp_path_factory.mktemp("loose")
+    build_sweep_series(str(d), 4)
+    (d / "bad_hash.sigmf").write_bytes(build_sigmf(bad_hash=True))
+    (d / "truncated.sigmf").write_bytes(build_sigmf(truncate=True))
+    via_dir = decode_dir(spark, str(d))
+    via_refs = decode_traces(list_sigmf_refs(spark, str(d)))
     assert via_dir.schema == via_refs.schema
-    a = via_dir.where("error IS NULL") \
-        .select("table", "datetime", "frequency").collect()
-    b = via_refs.where("error IS NULL") \
-        .select("table", "datetime", "frequency").collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+
+    def rows(df):
+        return sorted(
+            (os.path.basename(r.source_file), r.table, r.datetime,
+             r.frequency, r.capture_statistic, r.detector, r.kind,
+             None if r["values"] is None else tuple(r["values"]),
+             r.x_start, r.x_step, r.error)
+            for r in df.collect())
+
+    a, b = rows(via_dir), rows(via_refs)
+    assert a == b
+    errs = {r[0]: r[-1] for r in a if r[-1] is not None}
+    assert set(errs) == {"bad_hash.sigmf", "truncated.sigmf"}
+    assert all("sha512" in e for e in errs.values())
