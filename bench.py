@@ -18,6 +18,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from nasctn_sea_ingest_spark import get_spark
 from nasctn_sea_ingest_spark.plans import CORPUS
+from nasctn_sea_ingest_spark.session import bench_driver_memory
 
 
 def digest_snapshot_diff(snap_path: str, digests: dict, sf_val,
@@ -112,8 +113,7 @@ def main() -> None:
                           # keeps late-session full-GC pauses out of the
                           # timed windows (q24/q25 measured 3-6x slower at
                           # position ~100 under the 8g default)
-                          "spark.driver.memory": os.environ.get(
-                              "SPARK_GRAFT_DRIVER_MEM", "24g"),
+                          "spark.driver.memory": bench_driver_memory(),
                       })
     spark.sparkContext.setLogLevel("ERROR")
 

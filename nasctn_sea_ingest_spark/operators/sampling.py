@@ -234,8 +234,10 @@ def leakage_safe_split(df: DataFrame, pairs: DataFrame, key_col: str,
     whole clusters move as one unit and un-paired documents split
     individually.
 
-    Scale shape: clusters = iterative min-label propagation over the
-    PAIRS (bounded by candidate count, not corpus size), then ONE
+    Scale shape: clusters = ``graph.star_components`` over the PAIRS
+    (``dup_clusters`` is that operator: a driver union-find while the
+    pair list fits its size gate, else O(log n) large-star/small-star
+    rounds — bounded by candidate count, not corpus size), then ONE
     broadcast-or-shuffle left join back to the corpus and the same
     map-side hash predicate as hash_split.  Deterministic: membership
     is a pure function of (pair graph, key bytes, salt).

@@ -55,6 +55,24 @@ _DEFAULTS = {
 }
 
 
+def bench_driver_memory() -> str:
+    """Driver heap for the single-JVM bench and tools:
+    ``SPARK_GRAFT_DRIVER_MEM`` when set, else the smaller of 24g (the
+    late-session GC headroom the bench was tuned with) and half of this
+    host's MemTotal from ``/proc/meminfo`` — 24g where that is
+    unreadable."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open("/proc/meminfo") as fh:
+            kb = next(int(line.split()[1]) for line in fh
+                      if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "24g"
+    return f"{min(24 << 10, kb // 2048)}m"
+
+
 def get_spark(app_name: str = "nasctn-sea-ingest-spark",
               master: str | None = None,
               shuffle_partitions: int | None = None,

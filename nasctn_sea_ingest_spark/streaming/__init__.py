@@ -14,7 +14,9 @@ bounds per-micro-batch work.
 
 from __future__ import annotations
 
+import json
 import os
+import tempfile
 from collections.abc import Iterator
 from functools import reduce
 from operator import or_
@@ -22,6 +24,7 @@ from operator import or_
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -68,6 +71,40 @@ def read_sigmf_stream(spark: SparkSession, landing_dir: str,
                          tz=tz, hash_check=hash_check)
 
 
+def _start(stream: DataFrame, write_batch, checkpoint_dir: str,
+           available_now: bool):
+    """Start ``stream`` into ``write_batch`` via ``foreachBatch`` — the
+    one sink every micro-batch face uses; ``available_now`` drains what
+    is there and stops."""
+    writer = (stream.writeStream.foreachBatch(write_batch)
+              .option("checkpointLocation", checkpoint_dir))
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _read_parquet_or_none(spark, path, fmt: str = "parquet"):
+    """Read a parquet (or ``fmt``) dir, or None if it does not exist or
+    holds no data files yet — the store-backed monitors' attach
+    convention (their sidecars are written before the first data).
+    Every other analysis error re-raises."""
+    try:
+        return spark.read.format(fmt).load(path)
+    except AnalysisException as e:
+        if ("PATH_NOT_FOUND" not in str(e)
+                and "UNABLE_TO_INFER_SCHEMA" not in str(e)):
+            raise
+        return None
+
+
+def _write_batch_partition(df: DataFrame, out_dir: str,
+                           batch_id: int) -> None:
+    """Write ``df`` as one file under ``out_dir/batch=<id>`` — overwrite,
+    so a crash-replayed batch rewrites its partition idempotently."""
+    df.coalesce(1).write.mode("overwrite").parquet(
+        os.path.join(out_dir, f"batch={int(batch_id)}"))
+
+
 def stream_to_warehouse(spark: SparkSession, landing_dir: str, out_dir: str,
                         checkpoint_dir: str, tz: str | None = None,
                         available_now: bool = False,
@@ -111,11 +148,7 @@ def stream_to_warehouse(spark: SparkSession, landing_dir: str, out_dir: str,
         finally:
             batch_df.unpersist()
 
-    writer = (stream.writeStream.foreachBatch(write_batch)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, write_batch, checkpoint_dir, available_now)
 
 
 def gap_monitor(trace_stream: DataFrame, expected_interval_s: float = 90.0,
@@ -424,8 +457,6 @@ def upsert_stream(updates: DataFrame, out_dir: str, checkpoint_dir: str,
     :func:`capture_summary_stream`.  It must be deterministic for a given
     (batch rows, batch_id) pair or crash-replay idempotence is lost.
     """
-    from pyspark.errors import AnalysisException
-
     from ..functions import merge_upsert
 
     key_cols = [F.col(k) for k in keys]
@@ -442,26 +473,27 @@ def upsert_stream(updates: DataFrame, out_dir: str, checkpoint_dir: str,
             touched = [r.kb for r in b.select("kb").distinct().collect()]
             if not touched:
                 return
-            try:
-                stored = spark.read.json(meta_path).collect()[0].n_buckets
+            meta = _read_parquet_or_none(spark, meta_path, "json")
+            existing = None
+            if meta is None:  # first batch: stamp the layout
+                spark.createDataFrame([(int(n_buckets),)], "n_buckets int") \
+                    .coalesce(1).write.mode("overwrite").json(meta_path)
+            else:
+                stored = meta.collect()[0].n_buckets
                 if int(stored) != int(n_buckets):
                     raise ValueError(
                         f"upsert_stream: snapshot at {out_dir} was built "
                         f"with n_buckets={stored}, got {n_buckets} — the "
                         "bucket count is part of the layout and cannot "
                         "change without rebuilding the snapshot")
-                existing = spark.read.parquet(out_dir) \
-                    .where(F.col("kb").isin(touched))
-            except AnalysisException as e:
-                # ONLY path-not-found means "first batch"; any other
-                # analysis error (corrupt footer, permissions) must fail
-                # the batch — an empty `existing` here would silently
-                # delete every untouched key in the rewritten buckets
-                if "PATH_NOT_FOUND" not in str(e):
-                    raise
-                existing = b.limit(0)
-                spark.createDataFrame([(int(n_buckets),)], "n_buckets int") \
-                    .coalesce(1).write.mode("overwrite").json(meta_path)
+                # the sidecar explains a dir with no data files yet (a
+                # crash between the stamp and the first snapshot write);
+                # any other analysis error fails the batch — an empty
+                # `existing` would delete every untouched key in the
+                # rewritten buckets
+                existing = _read_parquet_or_none(spark, out_dir)
+            existing = (b.limit(0) if existing is None
+                        else existing.where(F.col("kb").isin(touched)))
             # localCheckpoint breaks the file lineage: Spark (rightly)
             # refuses to overwrite a path that the same plan reads, and
             # the merged frame reads the buckets it is about to rewrite.
@@ -475,11 +507,7 @@ def upsert_stream(updates: DataFrame, out_dir: str, checkpoint_dir: str,
         finally:
             b.unpersist()
 
-    writer = (updates.writeStream.foreachBatch(write_batch)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(updates, write_batch, checkpoint_dir, available_now)
 
 
 def capture_summary_stream(traces: DataFrame, out_dir: str,
@@ -541,8 +569,6 @@ def sketch_rollup_stream(updates: DataFrame, out_dir: str,
     with dynamic partition overwrite of ONLY the touched buckets. Read
     the estimates with ``hll_sketch_estimate(sketch)`` over the snapshot.
     """
-    from pyspark.errors import AnalysisException
-
     key_cols = [F.col(k) for k in keys]
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -575,11 +601,7 @@ def sketch_rollup_stream(updates: DataFrame, out_dir: str,
         finally:
             b.unpersist()
 
-    writer = (updates.writeStream.foreachBatch(write_batch)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(updates, write_batch, checkpoint_dir, available_now)
 
 
 def quantile_rollup_stream(updates: DataFrame, out_dir: str,
@@ -616,8 +638,6 @@ def quantile_rollup_stream(updates: DataFrame, out_dir: str,
     replay).  Streaming drift monitoring at O(touched keys x sketch)
     per trigger, no rescan of anything.
     """
-    from pyspark.errors import AnalysisException
-
     from ..operators.sketch import (grouped_quantile_sketch,
                                     merge_sketch_rows)
 
@@ -666,17 +686,11 @@ def quantile_rollup_stream(updates: DataFrame, out_dir: str,
                     out.select(*keys, *sketch_cols),
                     baseline, keys, k=k, bins=psi_bins) \
                     .localCheckpoint(eager=True)
-                scored.coalesce(1).write.mode("overwrite").parquet(
-                    os.path.join(alerts_dir,
-                                 f"batch={int(batch_id)}"))
+                _write_batch_partition(scored, alerts_dir, batch_id)
         finally:
             b.unpersist()
 
-    writer = (updates.writeStream.foreachBatch(write_batch)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(updates, write_batch, checkpoint_dir, available_now)
 
 
 def index_stream(docs: DataFrame, out_dir: str, checkpoint_dir: str,
@@ -732,8 +746,6 @@ def _guarded_small_rollup(updates: DataFrame, out_dir: str,
     window where state and stamp disagree (the
     :func:`quantile_rollup_stream` guard, simplified to whole-table
     scope)."""
-    from pyspark.errors import AnalysisException
-
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         existing = None
@@ -754,11 +766,7 @@ def _guarded_small_rollup(updates: DataFrame, out_dir: str,
                .localCheckpoint(eager=True))
         out.coalesce(1).write.mode("overwrite").parquet(out_dir)
 
-    writer = (updates.writeStream.foreachBatch(write_batch)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(updates, write_batch, checkpoint_dir, available_now)
 
 
 def cm_rollup_stream(updates: DataFrame, out_dir: str,
@@ -826,7 +834,7 @@ def media_dedup_stream(media: DataFrame, out_dir: str,
     re-encodes, see ``dhash_np``'s invariances).
 
     Replay safety (r15, the r14-ADVICE partial-append class shared by
-    every append-mode monitor — :func:`_replay_split`): each store
+    every append-mode monitor — :func:`_store_read`): each store
     row carries the writing ``batch_id``; alerts and the known-hash
     probe run against PRIOR batches only, the skip requires EVERY
     bucket this batch would write to carry the stamp (a mid-commit
@@ -836,12 +844,14 @@ def media_dedup_stream(media: DataFrame, out_dir: str,
     single-file atomic).  Alerts are overwritten idempotently under
     ``batch=<id>``.  Cost per trigger: O(batch + touched buckets).
 
-    ``auto_compact_files`` (r13 verdict #5): per-trigger file-count probe of the just-written buckets; past the threshold :func:`compact_candidate_store` runs in-slot and stamps the geometry manifest (None = manual cadence).
+    ``auto_compact_files`` (r13 verdict #5): per-trigger file-count
+    probe of every ``kb=`` bucket; past the threshold
+    :func:`compact_candidate_store` runs in-slot and stamps the
+    geometry manifest (None = manual cadence).
     """
     from ..sources.multimodal import image_dhash
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
         from pyspark.sql import Window
         # stored kb bakes in n_buckets: a re-attach with it changed
         # would prune the wrong buckets and silently miss known hashes
@@ -857,21 +867,10 @@ def media_dedup_stream(media: DataFrame, out_dir: str,
             touched = [r.kb for r in h.select("kb").distinct().collect()]
             if not touched:
                 return
-            try:
-                store = spark.read.parquet(out_dir) \
-                    .where(F.col("kb").isin(touched)) \
-                    .localCheckpoint(eager=True)
-            except AnalysisException as e:
-                # UNABLE_TO_INFER_SCHEMA: meta-only dir (the geometry
-                # manifest is stamped before the first append)
-                if ("PATH_NOT_FOUND" not in str(e) and
-                        "UNABLE_TO_INFER_SCHEMA" not in str(e)):
-                    raise
-                store = None
             # partial-append replay contract (r15, the r14 ADVICE
             # class): alerts/probe run against PRIOR batches only, and
             # the skip requires every bucket this batch would write
-            prior, done = _replay_split(store, batch_id)
+            prior, done = _store_read(spark, out_dir, touched, batch_id)
             w = Window.partitionBy("dhash").orderBy("media_id")
             ranked = h.withColumn("rn", F.row_number().over(w))
             firsts = ranked.where(F.col("rn") == 1).drop("rn")
@@ -900,32 +899,13 @@ def media_dedup_stream(media: DataFrame, out_dir: str,
                       .unionByName(stored_dups.select(
                           "media_id", "dhash", "dup_of"))
                       .localCheckpoint(eager=True))
-            alerts.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(alerts_dir, f"batch={int(batch_id)}"))
-            (new.where(~F.col("kb").isin(done))
-             .withColumn("batch_id",
-                         F.lit(int(batch_id)).cast("long"))
-             .repartition("kb")  # one file per touched bucket, not
-             .write.mode("append")  # partitions x buckets (r13 litter fix)
-             .partitionBy("kb").parquet(out_dir))
-            # auto-compaction cadence (r13 verdict #5): <= n_buckets
-            # leaf listings per trigger; compactor runs in-slot when
-            # any leaf's file count exceeds the threshold
-            # (foreachBatch serializes triggers, so the swap cannot
-            # race this stream's next read)
-            _auto_compact_store(
-                spark, out_dir,
-                [d for d in os.listdir(out_dir)
-                 if d.startswith("kb=")],
-                batch_id, auto_compact_files)
+            _write_batch_partition(alerts, alerts_dir, batch_id)
+            _store_append(new, out_dir, done, batch_id,
+                          auto_compact_files)
         finally:
             h.unpersist()
 
-    writer = (media.writeStream.foreachBatch(write_batch)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(media, write_batch, checkpoint_dir, available_now)
 
 
 def pca_moments_stream(embeddings: DataFrame, out_dir: str,
@@ -1358,17 +1338,19 @@ def fuzzy_dedup_stream(names: DataFrame, out_dir: str,
     store rows carry the writing ``batch_id``; the probe runs
     against PRIOR batches only and a replayed batch skips only once
     EVERY bucket it would write is stamped, re-appending just the
-    missing ones otherwise (:func:`_replay_split` — the r14-ADVICE
+    missing ones otherwise (:func:`_store_read` — the r14-ADVICE
     partial-append class), and its ``batch=<id>`` alert
     partition was written atomically (idempotent overwrite).  Cost per
     trigger: O(batch x L + touched-bucket postings).
 
-    ``auto_compact_files`` (r13 verdict #5): per-trigger file-count probe of the just-written buckets; past the threshold :func:`compact_candidate_store` runs in-slot and stamps the geometry manifest (None = manual cadence).
+    ``auto_compact_files`` (r13 verdict #5): per-trigger file-count
+    probe of every ``kb=`` bucket; past the threshold
+    :func:`compact_candidate_store` runs in-slot and stamps the
+    geometry manifest (None = manual cadence).
     """
     from ..operators.dedup import _delete_variants, edit_distance_pairs
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
         # the posting store bakes in max_distance (stored rows are
         # <=max_distance deletion variants) and n_buckets (kb
         # partition): attaching with either changed would probe
@@ -1401,19 +1383,8 @@ def fuzzy_dedup_stream(names: DataFrame, out_dir: str,
         fv = fv.withColumn("kb", F.pmod(F.hash("variant"), n_buckets)) \
                .localCheckpoint(eager=True)
         touched = [r.kb for r in fv.select("kb").distinct().collect()]
-        store = None
-        try:
-            store = (spark.read.parquet(out_dir)
-                     .where(F.col("kb").isin(touched))
-                     .localCheckpoint(eager=True))
-        except AnalysisException as e:
-            # UNABLE_TO_INFER_SCHEMA: meta-only dir (the geometry
-            # manifest is stamped before the first append)
-            if ("PATH_NOT_FOUND" not in str(e)
-                    and "UNABLE_TO_INFER_SCHEMA" not in str(e)):
-                raise
         # partial-append replay contract (r15, the r14 ADVICE class)
-        prior, done = _replay_split(store, batch_id)
+        prior, done = _store_read(spark, out_dir, touched, batch_id)
         if prior is not None:
             hits = (fv.join(prior.select(F.col("variant").alias("variant"),
                                          F.col("id").alias("sid"),
@@ -1436,27 +1407,10 @@ def fuzzy_dedup_stream(names: DataFrame, out_dir: str,
             return  # replay of a fully-written batch: skip
         alerts = (in_dups.unionByName(stored_dups)
                   .localCheckpoint(eager=True))
-        alerts.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(alerts_dir, f"batch={int(batch_id)}"))
-        (new.where(~F.col("kb").isin(done))
-         .withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-         .repartition("kb")  # one file per touched bucket per trigger
-         .write.mode("append").partitionBy("kb").parquet(out_dir))
+        _write_batch_partition(alerts, alerts_dir, batch_id)
+        _store_append(new, out_dir, done, batch_id, auto_compact_files)
 
-        # auto-compaction cadence (r13 verdict #5): <= n_buckets leaf
-        # listings per trigger; compactor runs in-slot when any leaf's
-        # file count exceeds the threshold (foreachBatch serializes
-        # triggers, so the swap cannot race this stream's next read)
-        _auto_compact_store(
-            spark, out_dir,
-            [d for d in os.listdir(out_dir) if d.startswith("kb=")],
-            batch_id, auto_compact_files)
-
-    writer = (names.writeStream.foreachBatch(write_batch)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(names, write_batch, checkpoint_dir, available_now)
 
 
 def decontam_stream(docs: DataFrame, eval_df: DataFrame,
@@ -1490,7 +1444,7 @@ def decontam_stream(docs: DataFrame, eval_df: DataFrame,
 
     Replay contract: this monitor is STATELESS across batches — no
     store grows, nothing is probed against prior batches — so the
-    r14 partial-append class (``_replay_split``) structurally cannot
+    r14 partial-append class (``_store_read``) structurally cannot
     arise; the only write is the batch's own ``batch=<id>`` alert
     partition, mode("overwrite") into its own directory, so a
     crash-replayed batch rewrites the identical rows idempotently
@@ -1514,14 +1468,9 @@ def decontam_stream(docs: DataFrame, eval_df: DataFrame,
                               bloom, ev, n_bits=n_bits,
                               n_hashes=n_hashes)
                   .withColumnRenamed("id", id_col))
-        alerts.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(alerts_dir, f"batch={int(batch_id)}"))
+        _write_batch_partition(alerts, alerts_dir, batch_id)
 
-    writer = (docs.writeStream.foreachBatch(write_batch)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(docs, write_batch, checkpoint_dir, available_now)
 
 
 def kmv_rollup_stream(updates: DataFrame, out_dir: str,
@@ -1657,13 +1606,14 @@ def colocation_monitor_stream(points: DataFrame, out_dir: str,
     per-batch alert partitions.  Cost per trigger: O(batch × 9 +
     touched-bucket points).
 
-    ``auto_compact_files`` (r13 verdict #5): per-trigger file-count probe of the just-written buckets; past the threshold :func:`compact_candidate_store` runs in-slot and stamps the geometry manifest (None = manual cadence).
+    ``auto_compact_files`` (r13 verdict #5): per-trigger file-count
+    probe of every ``kb=`` bucket; past the threshold
+    :func:`compact_candidate_store` runs in-slot and stamps the
+    geometry manifest (None = manual cadence).
     """
     cell = float(radius)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
         from ..operators.spatial import grid_distance_join
         # stored cx/cy/kb bake in (radius, n_buckets): a re-attach with
         # either changed would probe the wrong cells/buckets and
@@ -1696,21 +1646,10 @@ def colocation_monitor_stream(points: DataFrame, out_dir: str,
               .withColumn("kb", F.pmod(F.hash("jx", "jy"), n_buckets))
               .localCheckpoint(eager=True))
         touched = [r.kb for r in nb.select("kb").distinct().collect()]
-        store = None
-        try:
-            store = (spark.read.parquet(out_dir)
-                     .where(F.col("kb").isin(touched))
-                     .localCheckpoint(eager=True))
-        except AnalysisException as e:
-            # UNABLE_TO_INFER_SCHEMA: meta-only dir (the geometry
-            # manifest is stamped before the first append)
-            if ("PATH_NOT_FOUND" not in str(e)
-                    and "UNABLE_TO_INFER_SCHEMA" not in str(e)):
-                raise
         # partial-append replay contract (r15, the r14 ADVICE class):
         # the probe pairs against PRIOR batches only, and the skip
         # requires every home bucket this batch writes
-        prior, done = _replay_split(store, batch_id)
+        prior, done = _store_read(spark, out_dir, touched, batch_id)
         expected = {r.kb for r in b.select("kb").distinct().collect()}
         if expected and expected <= set(done):
             return  # replay of a fully-written batch: skip
@@ -1733,33 +1672,18 @@ def colocation_monitor_stream(points: DataFrame, out_dir: str,
             vs_store = in_batch.limit(0)
         alerts = in_batch.unionByName(vs_store) \
                          .localCheckpoint(eager=True)
-        alerts.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(alerts_dir, f"batch={int(batch_id)}"))
-        (b.where(~F.col("kb").isin(done))
-         .withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-         .repartition("kb")  # one file per touched bucket per trigger
-         .write.mode("append").partitionBy("kb").parquet(out_dir))
+        _write_batch_partition(alerts, alerts_dir, batch_id)
+        _store_append(b, out_dir, done, batch_id, auto_compact_files)
 
-        # auto-compaction cadence (r13 verdict #5): <= n_buckets leaf
-        # listings per trigger; compactor runs in-slot when any leaf's
-        # file count exceeds the threshold (foreachBatch serializes
-        # triggers, so the swap cannot race this stream's next read)
-        _auto_compact_store(
-            spark, out_dir,
-            [d for d in os.listdir(out_dir) if d.startswith("kb=")],
-            batch_id, auto_compact_files)
-
-    writer = (points.writeStream.foreachBatch(write_batch)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(points, write_batch, checkpoint_dir, available_now)
 
 
-def _replay_split(store: "DataFrame | None", batch_id: int):
-    """Split a touched-bucket store read for an append-mode monitor
-    into ``(prior, done_kb)`` — the r14-ADVICE partial-append replay
-    contract shared by media/fuzzy/colocation/semdedup/window-index:
+def _store_read(spark, out_dir: str, touched, batch_id: int):
+    """Read an append-mode monitor's ``touched`` ``kb`` buckets (frozen
+    with an eager ``localCheckpoint``) and split them into ``(prior,
+    done_kb)`` — the r14-ADVICE partial-append replay contract shared
+    by media/fuzzy/colocation/semdedup/triangles (``(None, [])`` when
+    the store has no data yet):
 
     - ``prior``: rows of every batch EXCEPT this one — the frame
       alerts/probes must use, because a replay of a partially
@@ -1773,14 +1697,37 @@ def _replay_split(store: "DataFrame | None", batch_id: int):
       bucket it WOULD write is stamped (an any-row skip cements a
       mid-commit crash: some partitions promoted, others lost
       forever)."""
+    store = _read_parquet_or_none(spark, out_dir)
     if store is None:
         return None, []
+    store = (store.where(F.col("kb").isin(touched))
+             .localCheckpoint(eager=True))
     done = [r.kb for r in
             store.where(F.col("batch_id") == F.lit(int(batch_id)))
             .select("kb").distinct().collect()]
     prior = (store.where(F.col("batch_id") != F.lit(int(batch_id)))
              if done else store)
     return prior, done
+
+
+def _store_append(rows: DataFrame, out_dir: str, done, batch_id: int,
+                  max_files: "int | None") -> None:
+    """Append ``rows`` (carrying ``kb``) to an append-mode store: skip
+    the ``done`` buckets (:func:`_store_read`), stamp ``batch_id``, and
+    write one file per bucket — repartitioning on the partition key
+    keeps a trigger from fanning out shuffle partitions x buckets tiny
+    files (r13 litter fix).  Then the auto-compaction cadence (r13
+    verdict #5) probes every ``kb=`` leaf (<= n_buckets listings per
+    trigger); foreachBatch serializes triggers, so an in-slot swap
+    cannot race this stream's next read."""
+    (rows.where(~F.col("kb").isin(done))
+     .withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
+     .repartition("kb")
+     .write.mode("append").partitionBy("kb").parquet(out_dir))
+    _auto_compact_store(
+        rows.sparkSession, out_dir,
+        [d for d in os.listdir(out_dir) if d.startswith("kb=")],
+        batch_id, max_files)
 
 
 def _store_geometry_guard(store_dir: str, meta: dict) -> None:
@@ -1806,14 +1753,12 @@ def _store_geometry_guard(store_dir: str, meta: dict) -> None:
     writers re-validate against whichever stamp won, so two identical
     geometries coexist quietly and a conflicting pair raises on the
     loser's re-read instead of silently interleaving."""
-    import json as _json
-    import tempfile
     path = os.path.join(store_dir, "_store_geometry.json")
 
     def _load():
         try:
             with open(path) as fh:
-                return _json.load(fh)
+                return json.load(fh)
         except ValueError as e:
             raise ValueError(
                 f"corrupt store-geometry manifest at {path!r} "
@@ -1837,15 +1782,7 @@ def _store_geometry_guard(store_dir: str, meta: dict) -> None:
         _check(_load())
         return
     os.makedirs(store_dir, exist_ok=True)
-    fd, tmp = tempfile.mkstemp(dir=store_dir, prefix="_geom_",
-                               suffix=".tmp")
-    try:
-        with os.fdopen(fd, "w") as fh:
-            _json.dump(meta, fh)
-        os.replace(tmp, path)
-    finally:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
+    _write_json_atomic(path, meta)
     # re-read after the replace: if a concurrent first-attach won the
     # race with a DIFFERENT geometry, fail here rather than run two
     # monitors with incompatible stored keys
@@ -1858,21 +1795,26 @@ def _stamp_compaction(store_dir: str, batch_id: "int | None") -> None:
     the attach guard compares geometry keys only, so stamping never
     fails a later attach.  Same temp+``os.replace`` discipline as the
     guard's first stamp."""
-    import json as _json
-    import tempfile
     path = os.path.join(store_dir, "_store_geometry.json")
     if not os.path.exists(path):
         return
     with open(path) as fh:
-        meta = _json.load(fh)
+        meta = json.load(fh)
     meta["n_compactions"] = int(meta.get("n_compactions", 0)) + 1
     if batch_id is not None:
         meta["last_compacted_batch"] = int(batch_id)
-    fd, tmp = tempfile.mkstemp(dir=store_dir, prefix="_geom_",
-                               suffix=".tmp")
+    _write_json_atomic(path, meta)
+
+
+def _write_json_atomic(path: str, obj) -> None:
+    """Write ``obj`` as JSON to ``path`` through a temp file in the same
+    dir and ``os.replace`` — a crash mid-dump never leaves a truncated
+    manifest behind."""
+    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path),
+                               prefix="_geom_", suffix=".tmp")
     try:
         with os.fdopen(fd, "w") as fh:
-            _json.dump(meta, fh)
+            json.dump(obj, fh)
         os.replace(tmp, path)
     finally:
         if os.path.exists(tmp):
@@ -1883,10 +1825,14 @@ def _auto_compact_store(spark, store_dir: str, leaves, batch_id: int,
                         max_files: "int | None") -> bool:
     """Per-trigger compaction cadence (r13 verdict #5 — the manual
     :func:`compact_candidate_store` call the store-backed monitors
-    used to rely on, now automatic): list ONLY the leaf partitions
-    this trigger just wrote (bounded by the touched set — never a
-    full-store walk per trigger) and, when any holds more than
-    ``max_files`` parquet files, run the compactor in-slot.
+    used to rely on, now automatic): list the ``leaves`` the caller
+    passes — every ``kb=`` bucket for the append-mode stores
+    (:func:`_store_append`; <= n_buckets listings per trigger, never a
+    recursive store walk), the touched snapshot buckets plus the
+    directory/merge-log partitions for
+    :func:`components_stream_bucketed`, the one ``kb=0`` leaf of the
+    LPA edge log — and, when any holds more than ``max_files`` parquet
+    files, run the compactor in-slot.
     foreachBatch serializes triggers, so the swap cannot race this
     stream's own next read — the "run it stream-idle" rule the manual
     call needs is satisfied by construction; EXTERNAL concurrent
@@ -2008,14 +1954,15 @@ def semdedup_stream(embeddings: DataFrame, out_dir: str,
     per trigger: O(batch x 3^k + touched-bucket points), verify work
     proportional to candidates (SCALE.md section 24's measured curve).
 
-    ``auto_compact_files`` (r13 verdict #5): per-trigger file-count probe of the just-written buckets; past the threshold :func:`compact_candidate_store` runs in-slot and stamps the geometry manifest (None = manual cadence).
+    ``auto_compact_files`` (r13 verdict #5): per-trigger file-count
+    probe of every ``kb=`` bucket; past the threshold
+    :func:`compact_candidate_store` runs in-slot and stamps the
+    geometry manifest (None = manual cadence).
     """
     mu, comps, k, cell, qs, cs = _semdedup_model(mean, components,
                                                  threshold)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
         from ..operators.similarity import pca_project
         from ..operators.spatial import grid_distance_join_nd
         # BEFORE any alert is computed: stored cell/bucket keys bake in
@@ -2081,21 +2028,10 @@ def semdedup_stream(embeddings: DataFrame, out_dir: str,
                   F.hash(*[f"j{i}" for i in range(k)]), n_buckets))
               .localCheckpoint(eager=True))
         touched = [r.kb for r in nb.select("kb").distinct().collect()]
-        store = None
-        try:
-            store = (spark.read.parquet(out_dir)
-                     .where(F.col("kb").isin(touched))
-                     .localCheckpoint(eager=True))
-        except AnalysisException as e:
-            # UNABLE_TO_INFER_SCHEMA: the dir holds only the meta
-            # manifest (first batch stamps geometry before any append)
-            if ("PATH_NOT_FOUND" not in str(e)
-                    and "UNABLE_TO_INFER_SCHEMA" not in str(e)):
-                raise
         # partial-append replay contract (r15, the r14 ADVICE class):
         # probe against PRIOR batches only, skip only on the full
         # home-bucket stamp set, re-append just the missing buckets
-        prior, done = _replay_split(store, batch_id)
+        prior, done = _store_read(spark, out_dir, touched, batch_id)
         expected = {r.kb for r in b.select("kb").distinct().collect()}
         if expected and expected <= set(done):
             return  # replay of a fully-written batch: skip
@@ -2114,27 +2050,10 @@ def semdedup_stream(embeddings: DataFrame, out_dir: str,
             vs_store = in_batch.limit(0)
         alerts = in_batch.unionByName(vs_store) \
                          .localCheckpoint(eager=True)
-        alerts.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(alerts_dir, f"batch={int(batch_id)}"))
-        (b.where(~F.col("kb").isin(done))
-         .withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-         .repartition("kb")  # one file per touched bucket per trigger
-         .write.mode("append").partitionBy("kb").parquet(out_dir))
+        _write_batch_partition(alerts, alerts_dir, batch_id)
+        _store_append(b, out_dir, done, batch_id, auto_compact_files)
 
-        # auto-compaction cadence (r13 verdict #5): <= n_buckets leaf
-        # listings per trigger; compactor runs in-slot when any leaf's
-        # file count exceeds the threshold (foreachBatch serializes
-        # triggers, so the swap cannot race this stream's next read)
-        _auto_compact_store(
-            spark, out_dir,
-            [d for d in os.listdir(out_dir) if d.startswith("kb=")],
-            batch_id, auto_compact_files)
-
-    writer = (embeddings.writeStream.foreachBatch(write_batch)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(embeddings, write_batch, checkpoint_dir, available_now)
 
 
 def semdedup_store_reproject(spark: SparkSession, store_dir: str,
@@ -2438,21 +2357,10 @@ def components_stream_bucketed(pairs: DataFrame, out_dir: str,
     spans every bucket degrades to the whole-rewrite face's O(state)
     — inherent to maintaining exact components, not a design
     artifact."""
-    from pyspark.errors import AnalysisException
-
     from ..operators.graph import star_components
 
     dir_path = os.path.join(out_dir, "_directory")
     merges_path = os.path.join(out_dir, "_merges")
-
-    def _read_or_none(spark, path):
-        try:
-            return spark.read.parquet(path)
-        except AnalysisException as e:
-            if ("PATH_NOT_FOUND" not in str(e)
-                    and "UNABLE_TO_INFER_SCHEMA" not in str(e)):
-                raise
-            return None
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -2467,7 +2375,7 @@ def components_stream_bucketed(pairs: DataFrame, out_dir: str,
                     .select(F.pmod(F.hash("node"), n_buckets)
                             .alias("kb"))
                     .distinct().collect())
-        store_t0 = _read_or_none(spark, out_dir)
+        store_t0 = _read_parquet_or_none(spark, out_dir)
         if store_t0 is not None:
             store_t0 = (store_t0.where(F.col("kb").isin(t0))
                         .localCheckpoint(eager=True))
@@ -2495,7 +2403,7 @@ def components_stream_bucketed(pairs: DataFrame, out_dir: str,
             # predating the batch_id stamp read as NULL (mergeSchema)
             # and stay includable — one conservative trigger, then
             # compaction re-stamps them.
-            ml = _read_or_none(spark, merges_path)
+            ml = _read_parquet_or_none(spark, merges_path)
             if ml is not None and "batch_id" not in ml.columns:
                 ml = (spark.read.option("mergeSchema", "true")
                       .parquet(merges_path))
@@ -2544,7 +2452,7 @@ def components_stream_bucketed(pairs: DataFrame, out_dir: str,
                     .distinct().collect()]
             t1: list = []
             if dkbs:
-                d = _read_or_none(spark, dir_path)
+                d = _read_parquet_or_none(spark, dir_path)
                 if d is not None:
                     t1 = [r[0] for r in
                           d.where(F.col("dkb").isin(dkbs))
@@ -2629,11 +2537,7 @@ def components_stream_bucketed(pairs: DataFrame, out_dir: str,
         _auto_compact_store(spark, out_dir, subs, batch_id,
                             auto_compact_files)
 
-    writer = (pairs.writeStream.foreachBatch(write_batch)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(pairs, write_batch, checkpoint_dir, available_now)
 
 
 def lpa_communities_stream(pairs: DataFrame, out_dir: str,
@@ -2694,8 +2598,6 @@ def lpa_communities_stream(pairs: DataFrame, out_dir: str,
     it automatically past ``auto_compact_files`` files (the r13
     verdict #5 cadence; batch_id rows survive compaction verbatim, so
     replay dedup keeps working — None = manual)."""
-    from pyspark.errors import AnalysisException
-
     from ..operators.graph import label_propagation, star_components
 
     edges_path = out_dir.rstrip("/") + ".edges"
@@ -2729,27 +2631,17 @@ def lpa_communities_stream(pairs: DataFrame, out_dir: str,
              .distinct().localCheckpoint(eager=True))
         if not b.limit(1).count():
             return
-        snap = None
-        try:
-            snap = (spark.read.parquet(out_dir)
-                    .localCheckpoint(eager=True))
+        snap = _read_parquet_or_none(spark, out_dir)
+        if snap is not None:
+            snap = snap.localCheckpoint(eager=True)
             last = snap.agg(F.max("last_batch")).first()[0]
             if last is not None and last >= batch_id:
                 return        # replay of a fully-written batch: skip
             snap = snap.drop("last_batch")
-        except AnalysisException as e:
-            if ("PATH_NOT_FOUND" not in str(e)
-                    and "UNABLE_TO_INFER_SCHEMA" not in str(e)):
-                raise
-        logged = False
-        try:
-            logged = bool(spark.read.parquet(edges_path)
-                          .where(F.col("batch_id") == int(batch_id))
-                          .limit(1).count())
-        except AnalysisException as e:
-            if ("PATH_NOT_FOUND" not in str(e)
-                    and "UNABLE_TO_INFER_SCHEMA" not in str(e)):
-                raise
+        edge_log = _read_parquet_or_none(spark, edges_path)
+        logged = edge_log is not None and bool(
+            edge_log.where(F.col("batch_id") == int(batch_id))
+            .limit(1).count())
         if not logged:
             (b.withColumn("batch_id",
                           F.lit(int(batch_id)).cast("long"))
@@ -2793,11 +2685,7 @@ def lpa_communities_stream(pairs: DataFrame, out_dir: str,
          .localCheckpoint(eager=True)
          .coalesce(1).write.mode("overwrite").parquet(out_dir))
 
-    writer = (pairs.writeStream.foreachBatch(write_batch)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(pairs, write_batch, checkpoint_dir, available_now)
 
 
 def compact_candidate_store(spark: SparkSession, store_dir: str,
@@ -2947,9 +2835,8 @@ def compact_candidate_store(spark: SparkSession, store_dir: str,
     geom_path = os.path.join(store_dir, "_store_geometry.json")
     dir_path = os.path.join(store_dir, "_directory")
     if os.path.exists(geom_path) and os.path.isdir(dir_path):
-        import json as _json
         with open(geom_path) as fh:
-            geom = _json.load(fh)
+            geom = json.load(fh)
         if geom.get("kind") == "components":
             n_buckets = int(geom["n_buckets"])
             fresh = (spark.read.parquet(store_dir)
@@ -3013,19 +2900,6 @@ def compact_candidate_store(spark: SparkSession, store_dir: str,
                     log.append(("_merges (aged)", -1, -1, -1))
     return _pd.DataFrame(log, columns=["partition", "n_files_before",
                                        "n_files_after", "bytes"])
-
-
-def _read_parquet_or_none(spark, path):
-    """Read a parquet dir, or None if it does not exist / is empty —
-    the store-backed monitors' attach convention."""
-    from pyspark.errors import AnalysisException
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        if ("PATH_NOT_FOUND" not in str(e)
-                and "UNABLE_TO_INFER_SCHEMA" not in str(e)):
-            raise
-        return None
 
 
 def duplicate_spans_stream(docs: DataFrame, out_dir: str,
@@ -3247,30 +3121,16 @@ def duplicate_spans_stream(docs: DataFrame, out_dir: str,
                   .where(F.col("total_count") >= 2)
                   .select("doc_id", "pos", "h", "total_count")
                   .localCheckpoint(eager=True))
-        alerts.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(alerts_dir, f"batch={N}"))
-        b_missing = (b.where(~F.col("kb").isin(done_kb))
-                     if done_kb else b)
-        if not done_kb or set(done_kb) != set(touched):
-            (b_missing
-             .withColumn("batch_id", F.lit(N).cast("long"))
-             .repartition("kb")  # one file per touched bucket/trigger
-             .write.mode("append").partitionBy("kb").parquet(out_dir))
+        _write_batch_partition(alerts, alerts_dir, N)
+        if set(done_kb) != set(touched):
+            _store_append(b, out_dir, done_kb, N, auto_compact_files)
         if not counts_done:
             _append_one_file(
                 inb.select("h", F.col("__nb").alias("n"))
                 .withColumn("batch_id", F.lit(N).cast("long")), N)
         _fold_counts(spark, N)
-        _auto_compact_store(
-            spark, out_dir,
-            [d for d in os.listdir(out_dir) if d.startswith("kb=")],
-            batch_id, auto_compact_files)
 
-    writer = (docs.writeStream.foreachBatch(write_batch)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(docs, write_batch, checkpoint_dir, available_now)
 
 
 def duplicate_spans_snapshot(spark: SparkSession,
@@ -3284,11 +3144,9 @@ def duplicate_spans_snapshot(spark: SparkSession,
     duplicates — the FIRST occurrence of a window whose second copy
     arrived later — appear here (the alert stream never re-announces
     them); this is the frame a removal job consumes."""
-    import json as _json
-
     from pyspark.sql import Window as _W
     with open(os.path.join(store_dir, "_store_geometry.json")) as fh:
-        geom = _json.load(fh)
+        geom = json.load(fh)
     if geom.get("kind") != "window_index":
         raise ValueError(f"not a window index store: {geom}")
     W = int(geom["window"])
@@ -3334,15 +3192,13 @@ def window_index_reproject(spark: SparkSession, store_dir: str,
     as ``-1`` for a brand-new checkpoint lineage (the semdedup
     collision rule).  Returns the number of occurrence rows
     migrated."""
-    import json as _json
-
     if os.path.exists(new_store_dir):
         raise ValueError(
             f"window_index_reproject refuses existing target "
             f"{new_store_dir!r}: a re-bucketed index must be a NEW "
             "directory (mixed kb layouts stamp-skip wrongly)")
     with open(os.path.join(store_dir, "_store_geometry.json")) as fh:
-        geom = _json.load(fh)
+        geom = json.load(fh)
     if geom.get("kind") != "window_index":
         raise ValueError(f"not a window index store: {geom}")
     bid = (F.lit(-1).cast("long") if rebase_batch_ids
@@ -3402,7 +3258,7 @@ def triangle_count_stream(pairs: DataFrame, out_dir: str,
     Replay: store rows carry ``batch_id``; probes run against PRIOR
     batches only and a replayed batch skips only once every bucket it
     would write is stamped AND its delta-log row exists, re-appending
-    just the missing buckets otherwise (:func:`_replay_split`); the
+    just the missing buckets otherwise (:func:`_store_read`); the
     delta-log row is an idempotent per-batch overwrite.  The geometry
     manifest bakes ``n_buckets``; ``auto_compact_files`` gives the
     store the shared compaction cadence.  Scale: per-trigger cost is
@@ -3413,7 +3269,6 @@ def triangle_count_stream(pairs: DataFrame, out_dir: str,
     instead of per-job."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
         _store_geometry_guard(out_dir, {
             "kind": "triangles", "n_buckets": int(n_buckets)})
         spark = batch_df.sparkSession
@@ -3431,16 +3286,7 @@ def triangle_count_stream(pairs: DataFrame, out_dir: str,
         touched = [r.kb for r in
                    bsym.select(F.pmod(F.hash("node"), n_buckets)
                                .alias("kb")).distinct().collect()]
-        store = None
-        try:
-            store = (spark.read.parquet(out_dir)
-                     .where(F.col("kb").isin(touched))
-                     .localCheckpoint(eager=True))
-        except AnalysisException as e:
-            if ("PATH_NOT_FOUND" not in str(e)
-                    and "UNABLE_TO_INFER_SCHEMA" not in str(e)):
-                raise
-        prior, done = _replay_split(store, batch_id)
+        prior, done = _store_read(spark, out_dir, touched, batch_id)
         # new edges: batch minus already-stored (checked in ONE
         # direction — the store is symmetric, so (a,b) exists iff the
         # adjacency row under node=a does, and a's bucket is touched)
@@ -3497,30 +3343,14 @@ def triangle_count_stream(pairs: DataFrame, out_dir: str,
         row = spark.createDataFrame(
             [(int(batch_id), int(edge_delta), int(tri_delta))],
             "batch_id long, edge_delta long, tri_delta long")
-        row.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out_dir, "_totals", f"batch={int(batch_id)}"))
+        _write_batch_partition(row, os.path.join(out_dir, "_totals"),
+                               batch_id)
         if edge_delta:
-            out_rows = (new.select(F.col("a").alias("node"),
-                                   F.col("b").alias("nbr"))
-                        .unionByName(new.select(F.col("b").alias("node"),
-                                                F.col("a").alias("nbr")))
-                        .withColumn("kb", F.pmod(F.hash("node"),
-                                                 n_buckets))
-                        .where(~F.col("kb").isin(done))
-                        .withColumn("batch_id",
-                                    F.lit(int(batch_id)).cast("long")))
-            (out_rows.repartition("kb")
-             .write.mode("append").partitionBy("kb").parquet(out_dir))
-        _auto_compact_store(
-            spark, out_dir,
-            [d for d in os.listdir(out_dir) if d.startswith("kb=")],
-            batch_id, auto_compact_files)
+            _store_append(nsym.withColumn("kb", F.pmod(F.hash("node"),
+                                                       n_buckets)),
+                          out_dir, done, batch_id, auto_compact_files)
 
-    writer = (pairs.writeStream.foreachBatch(write_batch)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(pairs, write_batch, checkpoint_dir, available_now)
 
 
 def triangle_totals_snapshot(spark, out_dir: str) -> "DataFrame":

@@ -572,6 +572,38 @@ def test_upsert_stream_crash_replay_idempotent(spark, tmp_path):
     spark.conf.unset("spark.sql.streaming.metadataCache.enabled")
 
 
+def test_upsert_stream_restarts_after_meta_only_crash(spark, tmp_path):
+    """A crash between the ``_upsert_meta`` stamp and the first snapshot
+    write leaves a dir holding only the sidecar.  The replayed batch
+    must read that as an empty snapshot and land its rows — not fail
+    every restart on the parquet reader's UNABLE_TO_INFER_SCHEMA."""
+    from nasctn_sea_ingest_spark.streaming import upsert_stream
+
+    land = str(tmp_path / "land")
+    out = str(tmp_path / "snap")
+    ckpt = str(tmp_path / "ck")
+    os.makedirs(land)
+    schema = "k long, v long, payload string"
+    spark.createDataFrame(
+        [(1, 10, "a"), (2, 11, "b"), (1, 12, "c")], schema) \
+        .coalesce(1).write.mode("append").parquet(land)
+    spark.createDataFrame([(8,)], "n_buckets int").coalesce(1) \
+        .write.json(os.path.join(out, "_upsert_meta"))
+
+    stream = spark.readStream.schema(schema).parquet(land)
+    q = upsert_stream(stream, out, ckpt, keys=["k"],
+                      order_by=["v", "payload"], n_buckets=8,
+                      available_now=True)
+    try:
+        q.awaitTermination(120)
+    finally:
+        q.stop()
+        q.awaitTermination(30)
+    snap = {r.k: (r.v, r.payload)
+            for r in spark.read.parquet(out).collect()}
+    assert snap == {1: (12, "c"), 2: (11, "b")}
+
+
 def test_sketch_rollup_stream_crash_replay_bounded(spark, tmp_path):
     """Same replay window for the HLL rollup: re-unioning a batch's
     sketch into a snapshot that already contains it is a register-max

@@ -4,7 +4,7 @@
     python tools/query_probe.py q163_dbscan q184_betweenness_tree [...]
     SPARK_GRAFT_PROBE_N=3 python tools/query_probe.py q115_pagerank
 
-Fresh session, bench-identical conf (24g driver heap), one untimed
+Fresh session, bench-identical conf (host-sized driver heap), one untimed
 warm pass per query (row count), then best-of-N full-plan noop sink —
 the bench.py per-query methodology isolated from the 450-stage session
 tail, for adjudicating bench readings against host noise (SCALE.md §12/
@@ -27,6 +27,7 @@ def main() -> int:
     n_runs = int(os.environ.get("SPARK_GRAFT_PROBE_N", 2))
     from nasctn_sea_ingest_spark import get_spark
     from nasctn_sea_ingest_spark.plans import CORPUS
+    from nasctn_sea_ingest_spark.session import bench_driver_memory
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", 32))
@@ -34,8 +35,7 @@ def main() -> int:
                       shuffle_partitions=cpus,
                       extra_conf={
                           "spark.sql.legacy.parquet.nanosAsLong": "true",
-                          "spark.driver.memory": os.environ.get(
-                              "SPARK_GRAFT_DRIVER_MEM", "24g")})
+                          "spark.driver.memory": bench_driver_memory()})
     spark.sparkContext.setLogLevel("ERROR")
     out: dict[str, float] = {}
     byname = {q.name: q for q in CORPUS}

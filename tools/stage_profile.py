@@ -32,6 +32,7 @@ def main() -> int:
     names = [a for a in sys.argv[1:] if not a.startswith("-")]
     from nasctn_sea_ingest_spark import get_spark
     from nasctn_sea_ingest_spark.plans import CORPUS
+    from nasctn_sea_ingest_spark.session import bench_driver_memory
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", 32))
@@ -41,8 +42,7 @@ def main() -> int:
                           "spark.sql.legacy.parquet.nanosAsLong": "true",
                           "spark.ui.enabled": "true",
                           "spark.ui.port": "4050",
-                          "spark.driver.memory": os.environ.get(
-                              "SPARK_GRAFT_DRIVER_MEM", "24g")})
+                          "spark.driver.memory": bench_driver_memory()})
     spark.sparkContext.setLogLevel("ERROR")
     base = "http://localhost:4050/api/v1"
     app_id = spark.sparkContext.applicationId
