@@ -20,8 +20,9 @@ The Dask dict-of-ddf shape is kept: one lazy DataFrame per data product,
 all fed by a single shared decode scan (cached so multiple products don't
 re-decode, the analog of the reference's shared delayed graph). The eager
 entry points — ``read_seamf_zipfile`` and each delayed ``compute()`` — do
-not go through that dict: they share one uncached read that collects the
-decode in a single pass.
+not go through that dict: they share one uncached read that collects
+batch ingest's one-pass decode (trace, channel and sweep rows of each
+file from one decode) in a single job.
 """
 
 from __future__ import annotations
@@ -29,8 +30,13 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
+from pyspark.sql import types as T
 
 from .sources.ingest import (
+    CHANNEL_META_SCHEMA,
+    SWEEP_META_SCHEMA,
+    TRACE_SCHEMA,
+    _decode_files,
     decode_channel_metadata,
     decode_sweep_metadata,
     decode_traces,
@@ -223,30 +229,46 @@ class SparkDelayed:
 
 def _collect(refs: DataFrame, tz: str | None,
              errors: str) -> dict[str, pd.DataFrame]:
-    """The one eager read: ONE decode pass collected client-side, split per
-    table in pandas — the reference's delayed partition materializes the
-    whole dict the same way (ziparchive.py:265-277). Nothing is cached:
-    the lazy dict caches because its consumers are lazy, here everything
-    is consumed NOW."""
-    traces = decode_traces(refs, tz=tz).toPandas()
-    bad = traces["error"].notnull()
+    """The one eager read: ONE decode pass (batch ingest's one-pass stage,
+    one job) collected client-side, split per table in pandas — the
+    reference's delayed partition materializes the whole dict the same way
+    (ziparchive.py:265-277). A file that fails any step of its decode has
+    only its quarantine row, so ``errors='log'`` drops it from every table.
+    Nothing is cached: the lazy dict caches because its consumers are
+    lazy, here everything is consumed NOW."""
+    rows = _decode_files(refs, tz=tz).toPandas()
+    bad = rows["error"].notnull()
     if errors == "raise" and bad.any():
-        f = traces.loc[bad].iloc[0]
+        f = rows.loc[bad].iloc[0]
         raise RuntimeError(
             f"decode failed for {f['source_file']}: {f['error']}")
-    good = traces.loc[~bad].drop(columns=["error"])
+    good = _kind_frame(rows, "trace", TRACE_SCHEMA)
     out = {t: good.loc[good["table"] == t].drop(columns=["table"])
                   .reset_index(drop=True)
            for t in _PRODUCTS}
-    failed = set(traces.loc[bad, "source_file"])
-    for name, fn in (("channel_metadata", decode_channel_metadata),
-                     ("sweep_metadata", decode_sweep_metadata)):
-        m = fn(refs, tz=tz, hash_check=errors == "raise").toPandas()
-        m = (m.loc[m["error"].isnull() & ~m["source_file"].isin(failed)]
-             .drop(columns=["error"]).reset_index(drop=True))
-        out[name] = m
+    out["channel_metadata"] = _kind_frame(rows, "channel", CHANNEL_META_SCHEMA)
+    out["sweep_metadata"] = _kind_frame(rows, "sweep", SWEEP_META_SCHEMA)
     out["sensor_metadata"] = out["sweep_metadata"][["source_file", "timezone"]]
     return out
+
+
+_NARROW = {T.LongType: "int64", T.BooleanType: "bool"}
+
+
+def _kind_frame(rows: pd.DataFrame, kind: str,
+                schema: T.StructType) -> pd.DataFrame:
+    """One row kind of a collected one-pass frame, in ``schema``'s columns
+    less ``error``, with the dtypes collecting that table alone gives: a
+    long or boolean column, widened by the other kinds' nulls, is narrowed
+    back when this kind's rows hold no null."""
+    fields = schema.fields[:-1]
+    sub = rows.loc[rows["row_kind"] == kind, [f.name for f in fields]] \
+        .reset_index(drop=True)
+    for f in fields:
+        dtype = _NARROW.get(type(f.dataType))
+        if dtype and sub[f.name].notna().all():
+            sub[f.name] = sub[f.name].astype(dtype)
+    return sub
 
 
 def read_seamf_zipfile_as_delayed(spark: SparkSession, path: str,

@@ -18,10 +18,19 @@ the storage-level equivalents SURVEY.md §1.5/§4 calls for:
   the job (reference ``errors='log'``, ``ziparchive.py:424-440``).
 
 Every ``.sigmf`` reader — ``decode_traces``, ``decode_dir``, the two
-metadata stages and the streaming ingest — is the one private stage
-``_decode_stage``: it takes each file's bytes from a ref or from a
-binaryFile ``content`` column, makes one decode call per file, and turns a
-failed file into one quarantine row.
+metadata stages, the one-pass ingest stage and the streaming ingest — is
+the one private stage ``_decode_stage``: it takes each file's bytes from a
+ref or from a binaryFile ``content`` column, makes one decode call per
+file, and turns a failed file into one quarantine row.
+
+``ingest()`` needs every output of every file, so it decodes each file
+once: one stage emits the file's trace rows, channel rows and sweep row
+(or only its quarantine row) into one frame, which is persisted once and
+written to all four tables. A separate metadata pass is not free even
+though its parse is: every Python task pays a fixed cost of about 0.25 s
+CPU (worker set-up plus pyspark's per-task import-cache reset, which
+re-reads the zipped pyspark library), so each extra ``mapInPandas`` stage
+costs about 0.75 s CPU at three task slots however little it does.
 
 At 100 TB scale the refs DataFrame is the only driver-side state (a few
 bytes per file); decode parallelism = number of ref partitions, and the
@@ -43,8 +52,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from .sigmf import decode_sigmf, decode_sigmf_meta, \
-    decode_sigmf_trace_records
+from .sigmf import _planned, _trace_tuples, decode_sigmf, \
+    decode_sigmf_meta, decode_sigmf_trace_records
 
 # --------------------------------------------------------------------------
 # schemas
@@ -108,6 +117,18 @@ SWEEP_META_SCHEMA = T.StructType([
     T.StructField("extras", T.MapType(T.StringType(), T.StringType()), True),
     T.StructField("error", T.StringType(), True),
 ])
+
+# the one-pass ingest stage's rows: source_file, a row_kind of 'trace' |
+# 'channel' | 'sweep', every column of the three schemas once (datetime,
+# frequency and extras are shared), error. A quarantine row carries only
+# source_file and error (row_kind null).
+_PAYLOAD = {f.name: f for s in (TRACE_SCHEMA, CHANNEL_META_SCHEMA,
+                                SWEEP_META_SCHEMA)
+            for f in s.fields[1:-1]}
+_DECODE_SCHEMA = T.StructType(
+    [TRACE_SCHEMA["source_file"],
+     T.StructField("row_kind", T.StringType(), True),
+     *_PAYLOAD.values(), TRACE_SCHEMA["error"]])
 
 _CH_CORE = [f.name for f in CHANNEL_META_SCHEMA.fields
             if f.name not in ("source_file", "extras", "error")]
@@ -211,7 +232,14 @@ def _decode_stage(files: DataFrame, schema: T.StructType, decode,
     ``content`` column, else the ``(path, member)`` ref opened here — runs
     ``decode(raw, source=..., **kw)`` (a list of ``schema`` rows) and, when
     that raises, emits one quarantine row instead: the source, nulls, and
-    the error text in the last column (S15)."""
+    the error text in the last column (S15).
+
+    Each use is one Python stage, and each of its tasks costs about 0.25 s
+    CPU before the first file (worker set-up, and pyspark's per-task
+    import-cache reset re-reading the zipped library), so a caller that
+    needs several outputs of the same files takes them from one stage:
+    ``ingest()`` and the eager API read run ``_decode_files``, whose
+    per-file call returns a file's trace, channel and sweep rows at once."""
     cols = [f.name for f in schema.fields]
     n_fill = len(cols) - 2
     by_content = "content" in files.columns
@@ -376,38 +404,32 @@ def write_partitions(df: DataFrame, write_fn, path: str) -> pd.DataFrame:
     return log.sort_values("partition_id", ignore_index=True)
 
 
-def _meta_rows(raw: bytes, source: str, tz: str | None, hash_check: bool,
-               sweep: bool) -> list[tuple]:
-    """The channel_metadata rows, or the one sweep_metadata row, of one
-    file via the payload-skipping fast path (S14)."""
-    plan = decode_sigmf_meta(raw, tz=tz, hash_check=hash_check)["plan"]
+def _channel_rows(plan, source: str) -> list[tuple]:
+    """A planned file's channel_metadata rows (CHANNEL_META_SCHEMA order)."""
+    rows = []
+    for row in plan.channel_meta.values():
+        core = {c: row.get(c) for c in _CH_CORE}
+        core["datetime"] = _ts(core["datetime"])
+        core["cal_datetime"] = _ts(core.get("cal_datetime"))
+        ov = core.get("overload")
+        core["overload"] = bool(ov) if ov is not None else None
+        pre = core.get("sigan_preamp_enable")
+        core["sigan_preamp_enable"] = bool(pre) if pre is not None else None
+        extras = {k: str(v) for k, v in row.items() if k not in _CH_CORE}
+        rows.append((source, *[core[c] for c in _CH_CORE], extras or None,
+                     None))
+    return rows
 
-    def ts(v):
-        return pd.Timestamp(v) if v is not None else None
 
-    if not sweep:
-        ch_rows = []
-        for row in plan.channel_meta.values():
-            core = {c: row.get(c) for c in _CH_CORE}
-            core["datetime"] = ts(core["datetime"])
-            core["cal_datetime"] = ts(core.get("cal_datetime"))
-            ov = core.get("overload")
-            core["overload"] = bool(ov) if ov is not None else None
-            pre = core.get("sigan_preamp_enable")
-            core["sigan_preamp_enable"] = \
-                bool(pre) if pre is not None else None
-            extras = {k: str(v) for k, v in row.items() if k not in _CH_CORE}
-            ch_rows.append((source, *[core[c] for c in _CH_CORE],
-                            extras or None, None))
-        return ch_rows
-
+def _sweep_rows(plan, source: str) -> list[tuple]:
+    """A planned file's one sweep_metadata row (SWEEP_META_SCHEMA order)."""
     sm = dict(plan.sweep_meta)
     sm["timezone"] = plan.timezone
     core = {}
     for c in _SWEEP_CORE:
         v = sm.get(c)
         if c.endswith("datetime"):
-            v = ts(v)
+            v = _ts(v)
         elif c in _SWEEP_ARRAYS and v is not None:
             v = [float(x) for x in v]
         elif c in ("sample_rate", "schedule_interval", "geo_lon", "geo_lat",
@@ -418,6 +440,18 @@ def _meta_rows(raw: bytes, source: str, tz: str | None, hash_check: bool,
         core[c] = v
     extras = {k: str(v) for k, v in sm.items() if k not in _SWEEP_CORE}
     return [(source, *[core[c] for c in _SWEEP_CORE], extras or None, None)]
+
+
+def _ts(v):
+    return pd.Timestamp(v) if v is not None else None
+
+
+def _meta_rows(raw: bytes, source: str, tz: str | None, hash_check: bool,
+               sweep: bool) -> list[tuple]:
+    """The channel_metadata rows, or the one sweep_metadata row, of one
+    file via the payload-skipping fast path (S14)."""
+    plan = decode_sigmf_meta(raw, tz=tz, hash_check=hash_check)["plan"]
+    return (_sweep_rows if sweep else _channel_rows)(plan, source)
 
 
 def decode_channel_metadata(refs: DataFrame, tz: str | None = None,
@@ -432,6 +466,55 @@ def decode_sweep_metadata(refs: DataFrame, tz: str | None = None,
     """One metadata row per file via metadata-only parse (no LZMA)."""
     return _decode_stage(refs, SWEEP_META_SCHEMA, _meta_rows, tz=tz,
                          hash_check=hash_check, sweep=True)
+
+
+def _widener(kind: str, schema: T.StructType):
+    """Map a ``schema``-ordered success row to a _DECODE_SCHEMA row."""
+    names = [f.name for f in _DECODE_SCHEMA.fields]
+    pos = [names.index(f.name) for f in schema.fields[1:-1]]
+
+    def widen(row: tuple) -> list:
+        out = [None] * len(names)
+        out[0], out[1] = row[0], kind
+        for p, v in zip(pos, row[1:-1]):
+            out[p] = v
+        return out
+    return widen
+
+
+_AS_TRACE = _widener("trace", TRACE_SCHEMA)
+_AS_CHANNEL = _widener("channel", CHANNEL_META_SCHEMA)
+_AS_SWEEP = _widener("sweep", SWEEP_META_SCHEMA)
+
+
+def _file_rows(raw: bytes, source: str, tz: str | None,
+               hash_check: bool) -> list[list]:
+    """Every output row of one file from ONE decode: verify, decompress and
+    plan once, then the trace rows, the channel rows and the sweep row of
+    that one plan. Whatever raises raises before any row is returned, so a
+    failed file yields only its quarantine row."""
+    plan, payload = _planned(raw, tz, hash_check)
+    rows = [_AS_TRACE(t) for table in
+            _trace_tuples(plan, payload, source).values() for t in table]
+    rows += map(_AS_CHANNEL, _channel_rows(plan, source))
+    rows += map(_AS_SWEEP, _sweep_rows(plan, source))
+    return rows
+
+
+def _decode_files(refs: DataFrame, tz: str | None = None,
+                  hash_check: bool = True) -> DataFrame:
+    """The one-pass decode: _DECODE_SCHEMA rows of every ref — its trace,
+    channel and sweep rows, or its one quarantine row."""
+    return _decode_stage(refs, _DECODE_SCHEMA, _file_rows, tz=tz,
+                         hash_check=hash_check)
+
+
+def _rows_of(decoded: DataFrame, kind: str,
+             schema: T.StructType) -> DataFrame:
+    """One row kind of a one-pass frame, in ``schema``'s columns less
+    ``error`` (null on every success row)."""
+    return (decoded.where(F.col("row_kind") == kind)
+            .select(*[f.name for f in schema.fields[:-1]]))
 
 
 # --------------------------------------------------------------------------
@@ -451,59 +534,66 @@ def ingest(spark: SparkSession, paths: str | list[str], out_dir: str,
     - ``{out}/channel_metadata``  partitioned by date
     - ``{out}/sweep_metadata``    one file-level row each
     - ``{out}/quarantine``        refs that failed decode, with the error
+    - ``{out}/ingest_log``        one appended row of counts per run
+
+    Each file is decoded once (``_decode_files``): the one frame holds its
+    trace, channel and sweep rows, or only its quarantine row when any
+    step of its decode fails, so a quarantined file has no row in any
+    table. The frame is persisted (MEMORY_AND_DISK) for the four writes
+    and the log counts, and released on every exit. One Python stage per
+    ingest matters here: each Python task costs about 0.25 s CPU before
+    it decodes anything, so a second pass over the same files would cost
+    more than its parse.
 
     Returns {logical name: path}.
     """
     refs = list_sigmf_refs(spark, paths, allow=allow, batch_size=batch_size)
+    decoded = _decode_files(refs, tz=tz, hash_check=hash_check).persist()
+    try:
+        out = {}
+        tr_path = out["traces"] = os.path.join(out_dir, "traces")
+        (_rows_of(decoded, "trace", TRACE_SCHEMA)
+         .withColumn("date", F.to_date("datetime"))
+         .sortWithinPartitions("datetime", "frequency")
+         .write.mode("overwrite").partitionBy("table", "date")
+         .parquet(tr_path))
 
-    # persist across the two sinks: without it the quarantine write would
-    # re-run the full payload decode (LZMA dominates — a second pass costs
-    # 2× the job's CPU to emit a handful of error rows). MEMORY_AND_DISK
-    # trades ~decoded-dataset spill space for that second decode.
-    traces = decode_traces(refs, tz=tz, hash_check=hash_check).persist()
-    good = traces.where(F.col("error").isNull()).drop("error") \
-                 .withColumn("date", F.to_date("datetime"))
-    bad = traces.where(F.col("error").isNotNull()) \
-                .select("source_file", "error")
+        q_path = out["quarantine"] = os.path.join(out_dir, "quarantine")
+        (decoded.where(F.col("error").isNotNull())
+         .select("source_file", "error")
+         .write.mode("overwrite").parquet(q_path))
 
-    out = {}
-    tr_path = out[f"traces"] = os.path.join(out_dir, "traces")
-    (good.sortWithinPartitions("datetime", "frequency")
-         .write.mode("overwrite").partitionBy("table", "date").parquet(tr_path))
+        ch_path = out["channel_metadata"] = os.path.join(out_dir,
+                                                         "channel_metadata")
+        (_rows_of(decoded, "channel", CHANNEL_META_SCHEMA)
+         .withColumn("date", F.to_date("datetime"))
+         .sortWithinPartitions("datetime", "frequency")
+         .write.mode("overwrite").partitionBy("date").parquet(ch_path))
 
-    q_path = out["quarantine"] = os.path.join(out_dir, "quarantine")
-    bad.write.mode("overwrite").parquet(q_path)
-    traces.unpersist()
+        sw_path = out["sweep_metadata"] = os.path.join(out_dir,
+                                                       "sweep_metadata")
+        _rows_of(decoded, "sweep", SWEEP_META_SCHEMA) \
+            .write.mode("overwrite").parquet(sw_path)
 
-    # metadata-only parse skips the payload (S14), so payload-corrupt files
-    # still yield metadata — drop whole failed files like errors='log' does
-    quarantined = F.broadcast(
-        spark.read.parquet(q_path).select("source_file").distinct())
-
-    ch = decode_channel_metadata(refs, tz=tz).where(F.col("error").isNull()) \
-        .join(quarantined, "source_file", "left_anti") \
-        .drop("error").withColumn("date", F.to_date("datetime"))
-    ch_path = out["channel_metadata"] = os.path.join(out_dir, "channel_metadata")
-    (ch.sortWithinPartitions("datetime", "frequency")
-       .write.mode("overwrite").partitionBy("date").parquet(ch_path))
-
-    sw = decode_sweep_metadata(refs, tz=tz).where(F.col("error").isNull()) \
-        .join(quarantined, "source_file", "left_anti") \
-        .drop("error")
-    sw_path = out["sweep_metadata"] = os.path.join(out_dir, "sweep_metadata")
-    sw.write.mode("overwrite").parquet(sw_path)
+        # every file left one sweep row or one quarantine row
+        failed = F.col("error").isNotNull()
+        n = (decoded.where((F.col("row_kind") == "sweep") | failed)
+             .agg(F.count(F.lit(1)).alias("files"),
+                  F.countDistinct(F.when(failed, F.col("source_file")))
+                  .alias("bad"))
+             .first())
+    finally:
+        decoded.unpersist()
 
     # structured run log (S16 analog of the reference's eliot JSON sink):
     # one row per ingest run with the counts an operator monitors
     log_path = out["ingest_log"] = os.path.join(out_dir, "ingest_log")
-    n_refs = refs.count()
-    n_bad = spark.read.parquet(q_path).select("source_file").distinct().count()
     log_df = spark.createDataFrame(
         pd.DataFrame([{
             "run_at": pd.Timestamp.utcnow().tz_localize(None),
-            "n_files": n_refs,
-            "n_quarantined": n_bad,
-            "n_ok": n_refs - n_bad,
+            "n_files": n.files,
+            "n_quarantined": n.bad,
+            "n_ok": n.files - n.bad,
             "out_dir": out_dir,
         }]))
     log_df.write.mode("append").parquet(log_path)

@@ -610,6 +610,15 @@ def _verified(file, hash_check: bool) -> tuple[dict, bytes]:
     return meta, lzma_blob
 
 
+def _planned(file, tz: str | None, hash_check: bool) -> tuple:
+    """One file's full decode up to the trace split: verify, decompress,
+    plan — (plan, decompressed payload). The batch ingest takes its trace,
+    channel and sweep rows from this one result."""
+    meta, lzma_blob = _verified(file, hash_check)
+    payload = lzma.decompress(lzma_blob, format=lzma.FORMAT_XZ)
+    return _plan_for(meta, tz), payload
+
+
 def _capture_order(plan) -> list:
     """(datetime, frequency) per capture, in the order ``_trace_tuples``
     assigns rows — each table's rows are this sequence repeated blockwise
@@ -659,9 +668,8 @@ def decode_sigmf_trace_records(file, tz: str | None = None,
     Arrow batch from these, which is what lets the Spark path beat the
     reference's per-file eager loop (``ziparchive.py:422``).
     """
-    meta, lzma_blob = _verified(file, hash_check)
-    payload = lzma.decompress(lzma_blob, format=lzma.FORMAT_XZ)
-    buckets = _trace_tuples(_plan_for(meta, tz), payload, source)
+    plan, payload = _planned(file, tz, hash_check)
+    buckets = _trace_tuples(plan, payload, source)
     out: list[tuple] = []
     for rows in buckets.values():
         out.extend(rows)

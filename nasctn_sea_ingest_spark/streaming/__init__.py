@@ -573,6 +573,8 @@ def sketch_rollup_stream(updates: DataFrame, out_dir: str,
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
+        _bucket_geometry_guard(spark, out_dir, "sketch_rollup", keys,
+                               n_buckets)
         b = (batch_df.groupBy(*keys)
              .agg(F.expr(f"hll_sketch_agg({value_col}, {lg_k})")
                   .alias("sketch"))
@@ -582,13 +584,9 @@ def sketch_rollup_stream(updates: DataFrame, out_dir: str,
             touched = [r.kb for r in b.select("kb").distinct().collect()]
             if not touched:
                 return
-            try:
-                existing = spark.read.parquet(out_dir) \
-                    .where(F.col("kb").isin(touched))
-            except AnalysisException as e:
-                if "PATH_NOT_FOUND" not in str(e):
-                    raise
-                existing = b.limit(0)
+            existing = _read_parquet_or_none(spark, out_dir)
+            existing = b.limit(0) if existing is None \
+                else existing.where(F.col("kb").isin(touched))
             merged = (existing.unionByName(b)
                       .groupBy(*keys)
                       .agg(F.expr("hll_union_agg(sketch)").alias("sketch"))
@@ -646,6 +644,8 @@ def quantile_rollup_stream(updates: DataFrame, out_dir: str,
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
+        _bucket_geometry_guard(spark, out_dir, "quantile_rollup", keys,
+                               n_buckets)
         b = (grouped_quantile_sketch(batch_df, keys, value_col, k)
              .withColumn("updated_batch",
                          F.lit(int(batch_id)).cast("long"))
@@ -655,14 +655,10 @@ def quantile_rollup_stream(updates: DataFrame, out_dir: str,
             touched = [r.kb for r in b.select("kb").distinct().collect()]
             if not touched:
                 return
-            try:
-                existing = spark.read.parquet(out_dir) \
-                    .where(F.col("kb").isin(touched)) \
-                    .localCheckpoint(eager=True)  # freeze pre-overwrite
-            except AnalysisException as e:
-                if "PATH_NOT_FOUND" not in str(e):
-                    raise
-                existing = b.limit(0)
+            existing = _read_parquet_or_none(spark, out_dir)
+            existing = b.limit(0) if existing is None \
+                else (existing.where(F.col("kb").isin(touched))
+                      .localCheckpoint(eager=True))  # freeze pre-overwrite
             already = existing.where(F.col("updated_batch") >=
                                      F.lit(int(batch_id))).select(*keys)
             fresh = b.join(F.broadcast(already), keys, "left_anti")
@@ -1730,7 +1726,29 @@ def _store_append(rows: DataFrame, out_dir: str, done, batch_id: int,
         batch_id, max_files)
 
 
-def _store_geometry_guard(store_dir: str, meta: dict) -> None:
+def _bucket_geometry_guard(spark, out_dir: str, kind: str,
+                           keys: "list[str]", n_buckets: int) -> None:
+    """The geometry guard of a store partitioned by ``kb = pmod(hash(keys),
+    n_buckets)`` (the sketch and quantile rollups). A store that holds data
+    but no manifest — written before these stores recorded one — is
+    stamped only after a one-time O(store) check that every stored row's
+    ``kb`` is the one ``n_buckets`` gives; otherwise it raises, since keys
+    in buckets the new hash never reads would get a second row."""
+    def verify():
+        store = _read_parquet_or_none(spark, out_dir)
+        if store is not None and not store.where(
+                F.col("kb") != F.pmod(F.hash(*keys), n_buckets)).isEmpty():
+            raise ValueError(
+                f"{kind} store geometry mismatch: stored kb values were "
+                f"not bucketed with n_buckets={n_buckets} — use a NEW "
+                "store dir to change geometry")
+
+    _store_geometry_guard(out_dir, {"kind": kind,
+                                    "n_buckets": int(n_buckets)}, verify)
+
+
+def _store_geometry_guard(store_dir: str, meta: dict,
+                          verify=None) -> None:
     """Persist/validate the key geometry a candidate store was built
     with.  Store-backed monitors bake parameters into their STORED
     keys — grid cell size / coordinate count / bucket partitioning
@@ -1752,7 +1770,10 @@ def _store_geometry_guard(store_dir: str, meta: dict) -> None:
     store concurrently) resolve through the atomic replace: both
     writers re-validate against whichever stamp won, so two identical
     geometries coexist quietly and a conflicting pair raises on the
-    loser's re-read instead of silently interleaving."""
+    loser's re-read instead of silently interleaving.
+
+    ``verify``, when given, runs before a first stamp and raises if the
+    store's existing rows contradict ``meta``."""
     path = os.path.join(store_dir, "_store_geometry.json")
 
     def _load():
@@ -1781,6 +1802,8 @@ def _store_geometry_guard(store_dir: str, meta: dict) -> None:
     if os.path.exists(path):
         _check(_load())
         return
+    if verify is not None:
+        verify()
     os.makedirs(store_dir, exist_ok=True)
     _write_json_atomic(path, meta)
     # re-read after the replace: if a concurrent first-attach won the

@@ -123,6 +123,69 @@ def test_warehouse_counts(spark, warehouse):
     assert psd.count() == 12 * N_CH * 2
     q = spark.read.parquet(warehouse["quarantine"])
     assert q.count() == 2
+    ch = spark.read.parquet(warehouse["channel_metadata"])
+    assert ch.count() == 12 * N_CH
+    assert spark.read.parquet(warehouse["sweep_metadata"]).count() == 12
+
+
+def test_warehouse_metadata_matches_standalone_stages(spark, landing,
+                                                      warehouse):
+    """Two paths to the same metadata: ingest()'s one-pass decode and the
+    standalone payload-skipping stages, restricted to the files ingest did
+    not quarantine, give the same rows; no quarantined file reaches either
+    metadata table."""
+    refs = list_sigmf_refs(spark, [landing, os.path.join(landing, "day2.zip")])
+    bad = {r.source_file for r in
+           spark.read.parquet(warehouse["quarantine"]).collect()}
+    assert len(bad) == 2
+
+    def rows(df):
+        return sorted((r.asDict() for r in df.collect()),
+                      key=lambda r: (r["source_file"],
+                                     r.get("datetime") or 0,
+                                     r.get("frequency") or 0))
+
+    for table, stage in (("channel_metadata", decode_channel_metadata),
+                         ("sweep_metadata", decode_sweep_metadata)):
+        stored = spark.read.parquet(warehouse[table])
+        if "date" in stored.columns:
+            stored = stored.drop("date")
+        alone = (stage(refs).where(F.col("error").isNull()).drop("error")
+                 .where(~F.col("source_file").isin(*bad)))
+        got, want = rows(stored), rows(alone)
+        assert got == want
+        assert not bad & {r["source_file"] for r in got}
+
+
+def test_ingest_job_count(spark, landing, tmp_path):
+    """One ingest() over the landing fixture runs 11 Spark jobs: the
+    listing's range sample, the decode that fills the cached frame with
+    the traces write, the quarantine, channel_metadata and sweep_metadata
+    writes (with their planned sorts), the log counts and the log write.
+    A re-added per-file pass adds jobs and fails here. The cached frame
+    is released afterwards."""
+    sc = spark.sparkContext
+    persisted = sc._jsc.getPersistentRDDs().size()
+    group = f"ingest-jobs-{tmp_path.name}"
+    sc.setJobGroup(group, "ingest job count")
+    try:
+        ingest(spark, [landing, os.path.join(landing, "day2.zip")],
+               str(tmp_path / "wh"))
+    finally:
+        sc.setJobGroup("", "")
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 11
+    assert sc._jsc.getPersistentRDDs().size() == persisted
+
+
+def test_ingest_failure_releases_cache(spark, landing, tmp_path):
+    """A write that fails after the decode is persisted still releases
+    the cached frame: the output dir sits under a regular file."""
+    blocker = tmp_path / "not_a_dir"
+    blocker.write_bytes(b"")
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with pytest.raises(Exception):
+        ingest(spark, landing, str(blocker / "wh"))
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
 
 
 def test_partition_pruning(spark, warehouse):

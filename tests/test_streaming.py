@@ -687,6 +687,61 @@ def test_sketch_rollup_stream_incremental_distinct(spark, tmp_path):
     assert abs(est2["B"] - 50) <= 4
 
 
+def _rollup_run(spark, face, land, out, ckpt, n_buckets):
+    """One available_now run of the sketch or quantile rollup."""
+    from nasctn_sea_ingest_spark.streaming import (quantile_rollup_stream,
+                                                   sketch_rollup_stream)
+    stream = spark.readStream.schema("key string, v long").parquet(land)
+    start = sketch_rollup_stream if face == "sketch" \
+        else quantile_rollup_stream
+    q = start(stream, out, ckpt, keys=["key"], value_col="v",
+              n_buckets=n_buckets, available_now=True)
+    try:
+        q.awaitTermination(120)
+    finally:
+        q.stop()
+
+
+def _forty_keys(spark, land):
+    spark.createDataFrame([(f"k{i}", i) for i in range(40)],
+                          "key string, v long") \
+        .coalesce(1).write.mode("append").parquet(land)
+
+
+@pytest.mark.parametrize("face", ["sketch", "quantile"])
+def test_rollup_restart_with_other_n_buckets_raises(spark, tmp_path, face):
+    """The sketch and quantile rollups bake n_buckets into kb: 40 keys at
+    n_buckets=16, then the same keys after a restart at 8, must fail on
+    the store's geometry — without the guard the second run gave 57 rows
+    for 40 keys."""
+    land, out, ckpt = (str(tmp_path / d) for d in ("land", "out", "ck"))
+    _forty_keys(spark, land)
+    _rollup_run(spark, face, land, out, ckpt, 16)
+    _forty_keys(spark, land)
+    with pytest.raises(Exception, match="geometry mismatch"):
+        _rollup_run(spark, face, land, out, ckpt, 8)
+    assert spark.read.parquet(out).count() == 40
+
+
+def test_rollup_unstamped_store_is_checked_before_stamp(spark, tmp_path):
+    """A rollup store with data but no geometry manifest (written before
+    the rollups recorded one) is stamped only after its kb values check
+    out: a restart at another n_buckets raises, one at the store's own
+    n_buckets stamps it and merges."""
+    land, out, ckpt = (str(tmp_path / d) for d in ("land", "out", "ck"))
+    _forty_keys(spark, land)
+    _rollup_run(spark, "sketch", land, out, ckpt, 16)
+    manifest = os.path.join(out, "_store_geometry.json")
+    os.remove(manifest)
+    _forty_keys(spark, land)
+    with pytest.raises(Exception, match="geometry mismatch"):
+        _rollup_run(spark, "sketch", land, out, ckpt, 8)
+    assert not os.path.exists(manifest)
+    _rollup_run(spark, "sketch", land, out, ckpt, 16)
+    assert os.path.exists(manifest)
+    assert spark.read.parquet(out).count() == 40
+
+
 def test_heavy_hitters_stream_exact_and_bounded(spark, tmp_path):
     """transformWithStateInPandas Misra-Gries summary: with capacity >=
     distinct items the estimates are EXACT vs batch groupBy counts and
