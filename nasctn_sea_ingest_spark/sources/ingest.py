@@ -27,10 +27,12 @@ file, and turns a failed file into one quarantine row.
 once: one stage emits the file's trace rows, channel rows and sweep row
 (or only its quarantine row) into one frame, which is persisted once and
 written to all four tables. A separate metadata pass is not free even
-though its parse is: every Python task pays a fixed cost of about 0.25 s
-CPU (worker set-up plus pyspark's per-task import-cache reset, which
-re-reads the zipped pyspark library), so each extra ``mapInPandas`` stage
-costs about 0.75 s CPU at three task slots however little it does.
+though its parse is: every Python task pays a fixed worker set-up cost of
+about 0.045 s CPU (24 one-row tasks, ``local[3]``, 4-core host), so each
+extra ``mapInPandas`` stage costs CPU however little it does. The cost was
+about 0.25 s per task until local sessions forked their workers from the
+package's daemon (``_daemon``): pyspark's per-task import-cache reset
+re-read the zipped pyspark library's central directory once per importer.
 
 At 100 TB scale the refs DataFrame is the only driver-side state (a few
 bytes per file); decode parallelism = number of ref partitions, and the
@@ -190,8 +192,11 @@ def list_sigmf_refs(spark: SparkSession, paths: str | list[str],
     else:
         n_part = max(1, (len(refs) + batch_size - 1) // batch_size)
     # Arrow path (pandas → LocalTableScan): a plain Python list would become
-    # a Python-RDD whose serialization stage forks a Python worker per
-    # partition on EVERY action — measured ~0.5-1 s/task of pure overhead
+    # a Python-RDD that runs a Python task per partition on EVERY action —
+    # measured ~0.5-1 s/task of pure overhead under pyspark's own daemon.
+    # Local sessions now fork workers from the package's daemon (about
+    # 0.045 s/task, session.py); other masters keep pyspark's, which
+    # starts before a task's --py-files, so there the cost stays.
     pdf = pd.DataFrame(refs, columns=["path", "member", "size"])
     pdf["seq"] = range(len(pdf))
     schema = T.StructType(REF_SCHEMA.fields
@@ -234,10 +239,11 @@ def _decode_stage(files: DataFrame, schema: T.StructType, decode,
     that raises, emits one quarantine row instead: the source, nulls, and
     the error text in the last column (S15).
 
-    Each use is one Python stage, and each of its tasks costs about 0.25 s
-    CPU before the first file (worker set-up, and pyspark's per-task
-    import-cache reset re-reading the zipped library), so a caller that
-    needs several outputs of the same files takes them from one stage:
+    Each use is one Python stage, and each of its tasks costs about
+    0.045 s CPU of worker set-up before the first file (about 0.25 s
+    before the package daemon stopped pyspark's per-task import-cache
+    reset from re-reading the zipped library), so a caller that needs
+    several outputs of the same files takes them from one stage:
     ``ingest()`` and the eager API read run ``_decode_files``, whose
     per-file call returns a file's trace, channel and sweep rows at once."""
     cols = [f.name for f in schema.fields]
@@ -541,9 +547,10 @@ def ingest(spark: SparkSession, paths: str | list[str], out_dir: str,
     step of its decode fails, so a quarantined file has no row in any
     table. The frame is persisted (MEMORY_AND_DISK) for the four writes
     and the log counts, and released on every exit. One Python stage per
-    ingest matters here: each Python task costs about 0.25 s CPU before
-    it decodes anything, so a second pass over the same files would cost
-    more than its parse.
+    ingest matters here: each Python task costs about 0.045 s CPU of
+    worker set-up before it decodes anything (0.25 s before the package
+    daemon, see ``_daemon``), so a second pass over the same files would
+    cost more than its parse.
 
     Returns {logical name: path}.
     """

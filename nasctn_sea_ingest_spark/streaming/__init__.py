@@ -87,7 +87,12 @@ def _read_parquet_or_none(spark, path, fmt: str = "parquet"):
     """Read a parquet (or ``fmt``) dir, or None if it does not exist or
     holds no data files yet — the store-backed monitors' attach
     convention (their sidecars are written before the first data).
-    Every other analysis error re-raises."""
+    A local dir holding only ``_``/``.`` entries (hidden to Spark's
+    file listing) is answered without the schema-inference job a read
+    would run; every other analysis error re-raises."""
+    if os.path.isdir(path) and all(n.startswith(("_", "."))
+                                   for n in os.listdir(path)):
+        return None
     try:
         return spark.read.format(fmt).load(path)
     except AnalysisException as e:

@@ -147,8 +147,14 @@ def test_gap_monitor_stateful(spark, tmp_path_factory):
         assert str(r.gap_start).startswith("2023-09-17 00:04:30")
 
 
-def test_daily_rollup_stream(spark, dirs, tmp_path_factory):
-    landing, _, _ = dirs
+def test_daily_rollup_stream(spark, tmp_path_factory):
+    # its own landing: the N1 series, the poison file and the late N2 series
+    landing = str(tmp_path_factory.mktemp("rollup_landing"))
+    build_sweep_series(landing, N1)
+    with open(os.path.join(landing, "poison.sigmf"), "wb") as f:
+        f.write(build_sigmf(bad_hash=True))
+    build_sweep_series(landing, N2, start_iso="2023-09-16T23:00:00.000Z",
+                       prefix="late")
     out = str(tmp_path_factory.mktemp("rollup"))
     ckpt = str(tmp_path_factory.mktemp("rollup_ckpt"))
     stream = read_sigmf_stream(spark, landing)
@@ -687,19 +693,24 @@ def test_sketch_rollup_stream_incremental_distinct(spark, tmp_path):
     assert abs(est2["B"] - 50) <= 4
 
 
-def _rollup_run(spark, face, land, out, ckpt, n_buckets):
-    """One available_now run of the sketch or quantile rollup."""
+def _rollup_run(spark, face, land, out, ckpt, n_buckets,
+                max_files_per_trigger=None):
+    """One available_now run of the sketch or quantile rollup; returns
+    the stopped query."""
     from nasctn_sea_ingest_spark.streaming import (quantile_rollup_stream,
                                                    sketch_rollup_stream)
-    stream = spark.readStream.schema("key string, v long").parquet(land)
+    reader = spark.readStream.schema("key string, v long")
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     start = sketch_rollup_stream if face == "sketch" \
         else quantile_rollup_stream
-    q = start(stream, out, ckpt, keys=["key"], value_col="v",
+    q = start(reader.parquet(land), out, ckpt, keys=["key"], value_col="v",
               n_buckets=n_buckets, available_now=True)
     try:
         q.awaitTermination(120)
     finally:
         q.stop()
+    return q
 
 
 def _forty_keys(spark, land):
@@ -720,6 +731,24 @@ def test_rollup_restart_with_other_n_buckets_raises(spark, tmp_path, face):
     _forty_keys(spark, land)
     with pytest.raises(Exception, match="geometry mismatch"):
         _rollup_run(spark, face, land, out, ckpt, 8)
+    assert spark.read.parquet(out).count() == 40
+
+
+@pytest.mark.parametrize("face,jobs", [("sketch", 14), ("quantile", 21)])
+def test_rollup_new_store_first_trigger_jobs(spark, tmp_path, face, jobs):
+    """Spark jobs of a two-batch available_now run into a new rollup
+    store: on the first trigger the store dir holds only its geometry
+    manifest, which answers "no data yet" without a schema-inference
+    job (one job more per face before)."""
+    land, out, ckpt = (str(tmp_path / d) for d in ("land", "out", "ck"))
+    _forty_keys(spark, land)
+    _forty_keys(spark, land)
+    q = _rollup_run(spark, face, land, out, ckpt, 16,
+                    max_files_per_trigger=1)
+    assert q.lastProgress["batchId"] == 1
+    run_jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(
+        str(q.runId))
+    assert len(run_jobs) == jobs
     assert spark.read.parquet(out).count() == 40
 
 
