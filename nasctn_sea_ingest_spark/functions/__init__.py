@@ -3,10 +3,16 @@ array statistics, dB-domain math, as-of joins, per-group limiting, gap
 detection, pivots, axis synthesis.
 
 Everything here is a *Column expression* or a composition of stock DataFrame
-operators — JVM-side, whole-stage-codegen friendly, no Python UDFs — so the
-same helpers hold at 100 TB: array statistics run per-row inside the scan
-stage (no shuffle), the as-of join is one shuffle + two window passes, and
-the limiter reuses one grouping.
+operators — JVM-side, no Python UDFs — so the same helpers hold at 100 TB:
+array statistics run per-row inside the scan stage (no shuffle), the as-of
+join is one shuffle + two window passes, and the limiter reuses one grouping.
+
+The array statistics use Spark built-ins where one exists: the upcast is a
+cast, the quantile sort is ``sort_array``. Spark evaluates a higher-order
+lambda interpreted, once per element it visits, and these helpers still
+run one per element: ``array_mean``, ``array_mean_db`` and ``array_sum_db``
+(the ``aggregate`` fold) and ``array_midmean``'s band filter and fold.
+``_let`` runs one per row; what it binds is evaluated interpreted too.
 
 Reference parity notes cite `/root/reference/` via SURVEY.md §2 operator ids.
 """
@@ -65,7 +71,7 @@ def _c(col) -> Column:
 
 def array_double(col) -> Column:
     """Upcast ARRAY<FLOAT> to ARRAY<DOUBLE> (float32 analytics upcast, F9)."""
-    return F.transform(_c(col), lambda x: x.cast("double"))
+    return _c(col).cast("array<double>")
 
 
 def _let(value: Column, body) -> Column:
@@ -79,15 +85,33 @@ def _let(value: Column, body) -> Column:
     return F.element_at(F.transform(F.array(value), body), 1)
 
 
+def _array_sort(v: Column) -> Column:
+    """``F.array_sort(v)`` — ascending, NaN above every number, nulls
+    last, equal elements (0.0 and -0.0) in input order — without the
+    comparator lambda Spark evaluates for every comparison.
+    ``sort_array`` puts the k nulls first, so there are none when its
+    first element is not null; otherwise they move to the end (the first
+    non-null is the minimum; an all-null array stays as it is). The sort
+    stays under ``_let``, which Spark evaluates interpreted, as the stable
+    comparator sort: code generated, ``sort_array`` takes a primitive sort
+    on a null-free array that orders -0.0 before 0.0."""
+    def nulls_last(s):
+        k = F.coalesce(F.array_position(s, F.array_min(s)) - 1, F.lit(0))
+        return F.when(F.get(s, 0).isNotNull(), s).otherwise(
+            F.concat(F.slice(s, k + 1, F.size(s) - k), F.slice(s, 1, k)))
+    return _let(F.sort_array(v), nulls_last)
+
+
 def _sorted_quantile(vv: Column, q: float) -> Column:
-    """Interpolated quantile of an already-sorted bound array variable."""
+    """Interpolated quantile of an already-sorted bound array variable;
+    NULL for an empty array."""
     n = F.size(vv)
     h = (n - 1).cast("double") * F.lit(float(q))
     lo_i = F.floor(h).cast("int")
     frac = h - F.floor(h)
     lo = F.element_at(vv, lo_i + 1)
     hi = F.element_at(vv, F.least(lo_i + 2, n))
-    return lo + frac * (hi - lo)
+    return F.when(n > 0, lo + frac * (hi - lo))
 
 
 def array_mean(col) -> Column:
@@ -101,11 +125,12 @@ def array_quantile(col, q: float) -> Column:
     """Exact linear-interpolated quantile over the array values — the
     pandas/numpy ``quantile(q, axis=1)`` semantics (A4, 3gpp cell 3):
     h = (n-1)q; v[floor h] + (h - floor h) * (v[floor h + 1] - v[floor h]).
-    The sort is bound once per row (not once per reference).
+    The sort is bound once per row (not once per reference). An empty
+    array gives NULL, as a NULL array does.
     """
     if not 0.0 <= q <= 1.0:
         raise ValueError("q must be in [0, 1]")
-    return _let(F.array_sort(array_double(col)),
+    return _let(_array_sort(array_double(col)),
                 lambda vv: _sorted_quantile(vv, q))
 
 
@@ -129,7 +154,7 @@ def array_midmean(col, lo: float = 0.25, hi: float = 0.75) -> Column:
                 F.size(kept) > 0,
                 F.aggregate(kept, F.lit(0.0), lambda a, x: a + x)
                 / F.size(kept))))
-    return _let(F.array_sort(array_double(col)), body)
+    return _let(_array_sort(array_double(col)), body)
 
 
 def array_mean_db(col) -> Column:

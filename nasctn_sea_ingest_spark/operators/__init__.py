@@ -19,6 +19,7 @@ from pyspark.sql import types as T
 
 from ..functions import (
     array_double,
+    array_mean_db,
     array_median,
     array_roll,
     explode_trace,
@@ -141,7 +142,7 @@ def pfp_frame_sync(pfp: DataFrame) -> DataFrame:
                     & (F.col("detector") == "rms")) \
              .select("datetime", "frequency", "values")
 
-    def sync(key, g: pd.DataFrame) -> pd.DataFrame:
+    def sync(key: tuple, g: pd.DataFrame) -> pd.DataFrame:
         rows = []
         for _, r in g.iterrows():
             x = np.asarray(r["values"], dtype=np.float64)
@@ -175,40 +176,36 @@ def roll_pfp(pfp: DataFrame, sync: DataFrame) -> DataFrame:
 
 def ul_dl_split(rolled_pfp: DataFrame, trace_length: int | None = None
                 ) -> DataFrame:
-    """DL/UL mean power per capture (D5): mask the rolled mean/rms trace
-    with the frame_format's downlink mask, mean each side in linear power,
-    report dB. Masks enter as a broadcast-able literal lookup (J5).
+    """DL/UL mean power per capture (D5): split the rolled mean/rms trace
+    by the frame_format's downlink mask, mean each side in linear power,
+    report dB. Null values and positions past the mask are dropped.
 
-    ``trace_length`` sizes the mask literals; it is a schema constant
-    (``schemas.TRACE_GEOMETRY["pfp"]``, identical across metadata versions),
-    used as the default so building the plan triggers NO Spark job — pass
-    it explicitly for non-standard geometries."""
+    The mask is two identical frames of ``half = trace_length // 2``
+    positions, the first ``n_dl`` of each downlink (n_dl read off
+    ``make_3gpp_downlink_mask``), so each side is two slices of the
+    trace. ``trace_length`` is a schema constant
+    (``schemas.TRACE_GEOMETRY["pfp"]``, identical across metadata
+    versions), used as the default so building the plan triggers NO
+    Spark job — pass it explicitly for non-standard geometries."""
     from ..schemas import TRACE_GEOMETRY
 
     ref = rolled_pfp.where((F.col("capture_statistic") == "mean")
                            & (F.col("detector") == "rms"))
     n = TRACE_GEOMETRY["pfp"][0] if trace_length is None else trace_length
-    mask_lit = {cfg: F.array(*[F.lit(bool(b))
-                               for b in make_3gpp_downlink_mask(n, cfg)])
-                for cfg in (1, 2)}
-    mask_col = F.when(F.col("frame_format") == 1, mask_lit[1]) \
-                .otherwise(mask_lit[2])
-    d = ref.withColumn("__mask", mask_col)
-    dl = F.filter(F.zip_with("values", "__mask",
-                             lambda v, m: F.when(m, v.cast("double"))),
-                  lambda x: x.isNotNull())
-    ul = F.filter(F.zip_with("values", "__mask",
-                             lambda v, m: F.when(~m, v.cast("double"))),
-                  lambda x: x.isNotNull())
+    half = n // 2
+    n_dl = {cfg: int(make_3gpp_downlink_mask(n, cfg)[:half].sum())
+            for cfg in (1, 2)}
+    dl_len = F.when(F.col("frame_format") == 1, n_dl[1]).otherwise(n_dl[2])
 
-    def mean_db(arr):
-        s = F.aggregate(arr, F.lit(0.0),
-                        lambda a, x: a + F.pow(F.lit(10.0), x / 10.0))
-        return 10.0 * F.log10(s / F.size(arr))
+    def mean_db(start, length):
+        v = F.col("values")
+        side = F.concat(F.slice(v, start + 1, length),
+                        F.slice(v, start + half + 1, length))
+        return array_mean_db(F.filter(side, lambda x: x.isNotNull()))
 
-    return d.select("datetime", "frequency", "frame_format",
-                    mean_db(dl).alias("dl_power_db"),
-                    mean_db(ul).alias("ul_power_db"))
+    return ref.select("datetime", "frequency", "frame_format",
+                      mean_db(0, dl_len).alias("dl_power_db"),
+                      mean_db(dl_len, half - dl_len).alias("ul_power_db"))
 
 
 # --------------------------------------------------------------------------

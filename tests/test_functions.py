@@ -65,6 +65,58 @@ def test_array_midmean(arrays_df):
     _check(rows, midmean, data)
 
 
+def test_array_sort_helper_matches_array_sort(spark):
+    """functions._array_sort is F.array_sort without the comparator
+    lambda: the same elements in the same order, compared as strings so
+    that NaN, -0.0 against 0.0 and nulls count, on arrays whose type
+    admits nulls and on null-free ones (code-generated sort_array takes
+    a primitive sort on those)."""
+    from pyspark.sql import types as T
+
+    from nasctn_sea_ingest_spark.functions import _array_sort
+
+    nan = float("nan")
+    nullable = [[0.0, -0.0, 1.0, -0.0, 0.0], [nan, 1.0, None, -0.0, 0.0],
+                [None, None], [None], [3.0], [], None, [nan, None],
+                [-0.0, 0.0, None, -1.0, float("inf"), float("-inf"), nan]]
+    null_free = [[0.0, -0.0, 1.0, nan, -0.0, 0.0], [nan, -0.0], [2.0], []]
+    rng = np.random.default_rng(11)
+    pool = [0.0, -0.0, nan, 1.0, -1.0, 2.5]
+    for _ in range(60):
+        picks = rng.integers(0, len(pool) + 1, int(rng.integers(0, 10)))
+        nullable.append([None if i == len(pool) else pool[i] for i in picks])
+        null_free.append([pool[i % len(pool)] for i in picks])
+
+    def strings(a):
+        return None if a is None else [str(x) for x in a]
+
+    for rows, element_nulls in ((nullable, True), (null_free, False)):
+        schema = T.StructType([T.StructField(
+            "v", T.ArrayType(T.DoubleType(), element_nulls))])
+        df = spark.createDataFrame([(r,) for r in rows], schema)
+        got = df.select(F.array_sort("v").alias("want"),
+                        _array_sort(F.col("v")).alias("got")).collect()
+        assert len(got) == len(rows)
+        for r in got:
+            assert strings(r.got) == strings(r.want), r.want
+
+
+def test_array_quantiles_of_empty_array_are_null(spark):
+    """An empty array has no quantile: NULL, as a NULL array gives (the
+    quantile index would be element 0, an error under ANSI)."""
+    df = spark.createDataFrame([(1, []), (2, None), (3, [2.0, 1.0, 4.0])],
+                               "id int, values array<float>")
+    got = {r.id: r for r in df.select(
+        "id", FN.array_median("values").alias("med"),
+        FN.array_quantile("values", 0.9).alias("q90"),
+        FN.array_midmean("values").alias("mid")).collect()}
+    assert (got[1].med, got[1].q90, got[1].mid) == (None, None, None)
+    assert (got[2].med, got[2].q90, got[2].mid) == (None, None, None)
+    assert got[3].med == 2.0
+    assert got[3].q90 == pytest.approx(3.6)
+    assert got[3].mid == 2.0
+
+
 def test_array_db_aggregates(arrays_df):
     df, data = arrays_df
     rows = df.select("id", FN.array_mean_db("values").alias("out")).collect()

@@ -317,3 +317,39 @@ def test_bounded_hop_and_skew_counts_plans(spark, tiny):
     pr = _plan(rep).split("== Initial Plan ==")[0]
     _lint(pr, "skew_report")
     assert "Join" not in pr
+
+
+def test_trace_statistics_plans_have_no_sort_lambda_or_mask_literal(spark):
+    """The trace-array statistics stay lambda-free built-ins: no
+    array_sort (whose default comparator is a lambda Spark evaluates for
+    every comparison) in capture_summary or array_quantile, and
+    ul_dl_split slices the trace instead of carrying its downlink masks
+    as trace-length boolean literal arrays."""
+    import re
+
+    from nasctn_sea_ingest_spark.functions import array_quantile
+    from nasctn_sea_ingest_spark.operators import (capture_summary,
+                                                   ul_dl_split)
+
+    def plans(df):
+        qe = df._jdf.queryExecution()
+        return qe.analyzed().toString(), qe.optimizedPlan().toString()
+
+    traces = spark.createDataFrame(
+        [("pfp", "mean", "rms", 1.0, 2.0, [1.0, 3.0, 2.0]),
+         ("psd", "mean", "rms", 1.0, 2.0, [4.0, 5.0])],
+        "table string, capture_statistic string, detector string, "
+        "datetime double, frequency double, values array<float>")
+    for name, df in (
+            ("capture_summary", capture_summary(traces)),
+            ("array_quantile",
+             traces.select(array_quantile("values", 0.9).alias("q")))):
+        for plan in plans(df):
+            assert "array_sort(" not in plan, name
+            assert "sort_array(" in plan, name
+
+    pfp = traces.withColumn("frame_format", F.lit(2))
+    for plan in plans(ul_dl_split(pfp, trace_length=560)):
+        runs = [len(m.group(0).split(",")) for m in re.finditer(
+            r"(?:(?:true|false),\s*)+(?:true|false)", plan)]
+        assert max(runs, default=0) < 560, runs

@@ -136,6 +136,63 @@ def test_roll_and_uldl_split(spark):
         assert r.dl_power_db > r.ul_power_db + 15
 
 
+def _uldl_reference(values, frame_format, trace_length):
+    """The literal-mask rule: zip the trace with the frame_format's mask
+    (config 2 unless it is 1); null values and positions past the mask
+    are dropped; each side's mean is taken in linear power."""
+    mask = make_3gpp_downlink_mask(trace_length,
+                                   1 if frame_format == 1 else 2)
+    sides = {True: [], False: []}
+    for v, m in zip(values, mask):
+        if v is not None:
+            sides[bool(m)].append(float(np.float32(v)))
+
+    def mean_db(xs):
+        return 10 * np.log10(np.mean(10 ** (np.asarray(xs) / 10)))
+    return mean_db(sides[True]), mean_db(sides[False])
+
+
+@pytest.mark.parametrize("trace_length,lengths", [
+    (56, (56,)), (57, (57, 56)), (560, (560,)),
+    (56, (60, 50)),         # the array longer, then shorter, than the mask
+])
+def test_ul_dl_split_matches_literal_mask(spark, trace_length, lengths):
+    rng = np.random.default_rng(trace_length + len(lengths))
+    rows, want = [], {}
+    for i in range(8):
+        n = lengths[i % len(lengths)]
+        vals = [float(x) for x in rng.normal(-60, 8, n).astype(np.float32)]
+        for j in rng.choice(n, 3, replace=False):
+            vals[int(j)] = None
+        ff = (1, 2, None)[i % 3]
+        dt = datetime(2023, 9, 17) + timedelta(seconds=90 * i)
+        rows.append((dt, 3.545e9, ff, "mean", "rms", vals))
+        want[dt] = _uldl_reference(vals, ff, trace_length)
+    rows.append((datetime(2023, 9, 18), 3.545e9, 1, "max", "peak",
+                 [0.0] * lengths[0]))       # not the mean/rms trace
+    df = spark.createDataFrame(
+        rows, "datetime timestamp, frequency double, frame_format int, "
+              "capture_statistic string, detector string, "
+              "values array<float>")
+    got = ul_dl_split(df, trace_length=trace_length).collect()
+    assert len(got) == len(want)
+    for r in got:
+        dl, ul = want[r.datetime]
+        assert r.dl_power_db == pytest.approx(dl, rel=1e-12)
+        assert r.ul_power_db == pytest.approx(ul, rel=1e-12)
+
+
+def test_pfp_frame_sync_builds_without_warnings(spark):
+    """The grouped-map function is fully annotated, so pyspark infers its
+    eval type instead of warning on every build."""
+    import warnings
+
+    pfp = _planted_pfp(spark, [(0, 2)])
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        pfp_frame_sync(pfp)
+
+
 def test_apd_series(sweep_tables):
     traces, _ = sweep_tables
     apd = traces.where(F.col("table") == "apd").drop("table")

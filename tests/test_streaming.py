@@ -149,6 +149,8 @@ def test_gap_monitor_stateful(spark, tmp_path_factory):
 
 def test_daily_rollup_stream(spark, tmp_path_factory):
     # its own landing: the N1 series, the poison file and the late N2 series
+    from nasctn_sea_ingest_spark.sources.ingest import decode_dir
+
     landing = str(tmp_path_factory.mktemp("rollup_landing"))
     build_sweep_series(landing, N1)
     with open(os.path.join(landing, "poison.sigmf"), "wb") as f:
@@ -157,22 +159,59 @@ def test_daily_rollup_stream(spark, tmp_path_factory):
                        prefix="late")
     out = str(tmp_path_factory.mktemp("rollup"))
     ckpt = str(tmp_path_factory.mktemp("rollup_ckpt"))
-    stream = read_sigmf_stream(spark, landing)
-    roll = daily_rollup(stream)
-    q = (roll.writeStream.outputMode("append")
-         .format("parquet").option("path", out)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = spark.read.parquet(out)
-    # append mode only emits windows the watermark has closed; with a second
-    # day present the first day's window is final
-    rows = got.collect()
+
+    def run_once():
+        roll = daily_rollup(read_sigmf_stream(spark, landing))
+        q = (roll.writeStream.outputMode("append")
+             .format("parquet").option("path", out)
+             .option("checkpointLocation", ckpt)
+             .trigger(availableNow=True).start())
+        q.awaitTermination(120)
+
+    # append mode only emits windows the watermark (2 days behind the
+    # latest capture) has closed: none after the first run, both days of
+    # the first run after a capture three days later lands
+    run_once()
+    assert spark.read.parquet(out).count() == 0
+    batch_files = set(os.listdir(landing))
+    build_sweep_series(landing, 1, start_iso="2023-09-20T01:00:00.000Z",
+                       prefix="next")
+    run_once()
+    rows = spark.read.parquet(out).collect()
     assert {str(r.date) for r in rows} <= {"2023-09-16", "2023-09-17"}
-    if rows:
-        r = rows[0]
+    for r in rows:
         assert r.n_captures > 0
         assert r.max_capture_mean_db >= r.mean_power_db - 1e-9
+
+    # batch recomputation over the first run's files: per-capture mean in
+    # linear power, then the per-(day, frequency) count, mean and max
+    ref = (decode_dir(spark, landing)
+           .where(F.col("error").isNull() & (F.col("table") == "pfp")
+                  & (F.col("capture_statistic") == "mean")
+                  & (F.col("detector") == "rms"))
+           .select(F.element_at(F.split("source_file", "/"), -1)
+                   .alias("name"),
+                   F.to_date("datetime").alias("date"), "frequency",
+                   "values")
+           .collect())
+    caps = {}
+    for r in ref:
+        if r.name not in batch_files:
+            continue
+        cap_db = 10 * np.log10(np.mean(
+            10 ** (np.asarray(r["values"], np.float64) / 10)))
+        caps.setdefault((str(r.date), r.frequency), []).append(cap_db)
+    assert len(caps) == 2 * 3       # two days x three channels
+    got = {(str(r.date), r.frequency): r for r in rows}
+    assert set(got) == set(caps)
+    for key, cap_db in caps.items():
+        r = got[key]
+        assert r.n_captures == len(cap_db), key
+        assert r.mean_power_db == pytest.approx(
+            10 * np.log10(np.mean(10 ** (np.asarray(cap_db) / 10))),
+            abs=1e-9), key
+        assert r.max_capture_mean_db == pytest.approx(max(cap_db),
+                                                      abs=1e-9), key
 
 
 def test_dedup_stream(spark, tmp_path_factory):
