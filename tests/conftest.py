@@ -6,6 +6,17 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from nasctn_sea_ingest_spark import get_spark
+from nasctn_sea_ingest_spark.sources.synth import build_sigmf
+
+# The reference's six example files (SURVEY.md §5).  Only a checkout of the
+# reference has them; tests that need all six carry `needs_golden`, and the
+# v6 mechanics tests take `golden_v6`, which falls back to a stand-in.
+GOLDEN = "/root/reference/demos/data/example_v{v}.sigmf"
+_MISSING_GOLDEN = next((p for p in (GOLDEN.format(v=v) for v in range(1, 7))
+                        if not os.path.exists(p)), None)
+needs_golden = pytest.mark.skipif(
+    _MISSING_GOLDEN is not None,
+    reason=f"reference golden file not found: {_MISSING_GOLDEN}")
 
 
 def pytest_collection_modifyitems(config, items):
@@ -43,3 +54,17 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+@pytest.fixture(scope="session")
+def golden_v6(tmp_path_factory):
+    """Path of ``example_v6.sigmf`` where the reference checkout has it,
+    else of a v0.6.0 stand-in written by ``sources.synth.build_sigmf`` at
+    example_v6's geometry (SURVEY.md §1.1): 17 channels of 2x625 PSD +
+    2x400 PVT + 6x560 PFP + 151 APD halves."""
+    path = GOLDEN.format(v=6)
+    if os.path.exists(path):
+        return path
+    out = tmp_path_factory.mktemp("golden") / "example_v6.sigmf"
+    out.write_bytes(build_sigmf(n_channels=17, geometry=(625, 400, 560, 151)))
+    return str(out)

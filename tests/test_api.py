@@ -1,5 +1,13 @@
 """Reference-shaped API tests: golden-file decode plus zip reads, eager and
-lazy, with error semantics."""
+lazy, with error semantics.
+
+The golden-file tests read ``example_v6.sigmf`` through the ``golden_v6``
+fixture (``tests/conftest.py``): the real file where the reference checkout
+has it, else a synthesized stand-in at its geometry (17 channels; 625-bin
+PSD, 400-point PVT, 560-point PFP, 151-point APD; SURVEY.md §1.1), so the
+34×625 / 17 / 102×560 shapes hold on both.  No test here needs all six
+golden files; cell-for-cell parity with the reference decoder is
+``test_sigmf_decode.py::test_values_match_reference_dump``."""
 
 import numpy as np
 import pytest
@@ -9,17 +17,15 @@ from nasctn_sea_ingest_spark import api
 from nasctn_sea_ingest_spark.functions import trace
 from nasctn_sea_ingest_spark.sources.synth import build_sigmf, build_sweep_series
 
-GOLDEN_V6 = "/root/reference/demos/data/example_v6.sigmf"
 
-
-def test_read_seamf_golden():
-    out = api.read_seamf(GOLDEN_V6)
+def test_read_seamf_golden(golden_v6):
+    out = api.read_seamf(golden_v6)
     assert {"psd", "pvt", "pfp", "apd"} <= set(out)
     assert len(out["psd"]) == 34
 
 
-def test_read_seamf_meta_golden():
-    meta = api.read_seamf_meta(GOLDEN_V6)
+def test_read_seamf_meta_golden(golden_v6):
+    meta = api.read_seamf_meta(golden_v6)
     assert meta["plan"].traces
 
 
@@ -54,10 +60,10 @@ def test_zipfile_eager(spark, zpath):
         [np.asarray(v) for v in dfs["psd"]["values"]])).all()
 
 
-def test_as_wide_reference_shape():
+def test_as_wide_reference_shape(golden_v6):
     """as_wide reproduces the reference's MultiIndex matrix layout on the
     golden v6 file (SURVEY §1.2: 34×625 psd, keyed rows, physical x axis)."""
-    out = api.read_seamf(GOLDEN_V6)
+    out = api.read_seamf(golden_v6)
     wide = api.as_wide(out["psd"], "psd")
     assert wide.shape == (34, 625)
     assert list(wide.index.names) == ["datetime", "frequency",
@@ -73,23 +79,23 @@ def test_as_wide_reference_shape():
                                      "capture_statistic", "detector"]
 
 
-def test_read_seamf_sensor_metadata_key():
+def test_read_seamf_sensor_metadata_key(golden_v6):
     """7-key product parity with reference read_seamf (seamf.py:231):
     sensor_metadata = {timezone}, also present in arrays tier."""
     for unpack in ("frames", "arrays"):
-        out = api.read_seamf(GOLDEN_V6, unpack=unpack)
+        out = api.read_seamf(golden_v6, unpack=unpack)
         sm = out["sensor_metadata"]
         assert sm["timezone"].iloc[0] == \
             out["sweep_metadata"]["timezone"].iloc[0]
 
 
-def test_read_seamf_unpack_tiers():
+def test_read_seamf_unpack_tiers(golden_v6):
     """`unpack` reproduces the reference's force_loader_cls output tiers
     (BASELINE.md single-file decode rows): bytes → raw float16 payload,
     arrays → stacked ndarrays, frames (default) → dict of frames."""
-    frames = api.read_seamf(GOLDEN_V6)
-    arrays = api.read_seamf(GOLDEN_V6, unpack="arrays")
-    raw = api.read_seamf(GOLDEN_V6, unpack="bytes")
+    frames = api.read_seamf(golden_v6)
+    arrays = api.read_seamf(golden_v6, unpack="arrays")
+    raw = api.read_seamf(golden_v6, unpack="bytes")
 
     assert arrays["psd"].shape == (34, 625)
     assert arrays["pfp"].shape == (102, 560)
@@ -105,7 +111,7 @@ def test_read_seamf_unpack_tiers():
     assert vals.size == n_frame_vals
     assert "core:sha512" in raw["meta"]["global"]
     with pytest.raises(ValueError, match="unpack"):
-        api.read_seamf(GOLDEN_V6, unpack="wat")
+        api.read_seamf(golden_v6, unpack="wat")
 
 
 def _pfunc(d):
