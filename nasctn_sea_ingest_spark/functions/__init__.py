@@ -115,10 +115,13 @@ def _sorted_quantile(vv: Column, q: float) -> Column:
 
 
 def array_mean(col) -> Column:
-    """Arithmetic mean over the array (linear domain)."""
+    """Arithmetic mean over the array (linear domain); NULL for an empty
+    array, as for a NULL array."""
     return _let(array_double(col),
-                lambda v: F.aggregate(v, F.lit(0.0), lambda a, x: a + x)
-                / F.size(v))
+                lambda v: F.when(
+                    F.size(v) > 0,
+                    F.aggregate(v, F.lit(0.0), lambda a, x: a + x)
+                    / F.size(v)))
 
 
 def array_quantile(col, q: float) -> Column:
@@ -159,11 +162,12 @@ def array_midmean(col, lo: float = 0.25, hi: float = 0.75) -> Column:
 
 def array_mean_db(col) -> Column:
     """Mean over the array computed in linear power, reported in dB
-    (A3: ``dBtopow → mean(axis=1) → powtodB``)."""
+    (A3: ``dBtopow → mean(axis=1) → powtodB``); NULL for an empty array,
+    as for a NULL array."""
     def body(v):
         lin_sum = F.aggregate(v, F.lit(0.0),
                               lambda a, x: a + F.pow(F.lit(10.0), x / 10.0))
-        return 10.0 * F.log10(lin_sum / F.size(v))
+        return F.when(F.size(v) > 0, 10.0 * F.log10(lin_sum / F.size(v)))
     return _let(array_double(col), body)
 
 

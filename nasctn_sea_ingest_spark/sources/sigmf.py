@@ -87,15 +87,6 @@ def timezone_from_longitude(lng: float) -> str | None:
     return None
 
 
-def _flatten_group(prefix: str, d: dict, out: dict) -> None:
-    for k, v in d.items():
-        if isinstance(v, dict):
-            for ks, vs in v.items():
-                out[f"{k}_{ks}"] = vs
-        else:
-            out[f"{prefix}{k}" if prefix else k] = v
-
-
 # --------------------------------------------------------------------------
 # decode plan: per-version metadata → (trace list, axes, metadata rows)
 # --------------------------------------------------------------------------

@@ -83,18 +83,19 @@ def _start(stream: DataFrame, write_batch, checkpoint_dir: str,
     return writer.start()
 
 
-def _read_parquet_or_none(spark, path, fmt: str = "parquet"):
-    """Read a parquet (or ``fmt``) dir, or None if it does not exist or
-    holds no data files yet — the store-backed monitors' attach
-    convention (their sidecars are written before the first data).
-    A local dir holding only ``_``/``.`` entries (hidden to Spark's
-    file listing) is answered without the schema-inference job a read
-    would run; every other analysis error re-raises."""
+def _read_parquet_or_none(spark, path):
+    """Read a parquet dir, or None if it does not exist or holds no data
+    files yet — the store-backed monitors' attach convention (their
+    ``_store_geometry.json`` manifests and other sidecars are written
+    before the first data). A local dir holding only ``_``/``.``
+    entries (hidden to Spark's file listing) is answered without the
+    schema-inference job a read would run; every other analysis error
+    re-raises."""
     if os.path.isdir(path) and all(n.startswith(("_", "."))
                                    for n in os.listdir(path)):
         return None
     try:
-        return spark.read.format(fmt).load(path)
+        return spark.read.parquet(path)
     except AnalysisException as e:
         if ("PATH_NOT_FOUND" not in str(e)
                 and "UNABLE_TO_INFER_SCHEMA" not in str(e)):
@@ -428,6 +429,59 @@ def neardup_stream(doc_stream: DataFrame, band_index: DataFrame,
                           "band"))
 
 
+def _bucketed_snapshot(updates: DataFrame, out_dir: str, checkpoint_dir: str,
+                       kind: str, keys: "list[str]", n_buckets: int,
+                       available_now: bool, rows, merge,
+                       freeze: bool = False, after=None):
+    """foreachBatch body of every key-bucketed snapshot (upsert, and so
+    capture_summary and index, sketch and quantile): the store is
+    partitioned by ``kb = pmod(hash(keys), n_buckets)``, recorded in its
+    ``_store_geometry.json`` manifest, and each batch rewrites only the
+    buckets its keys touch. ``rows(batch_df, batch_id)`` builds the
+    batch's rows; ``merge(existing, b, batch_id)`` folds them into the
+    touched buckets' stored rows (frozen first when ``freeze``);
+    ``after(out, batch_id)`` runs after the write. The merged frame is
+    materialized by an eager ``localCheckpoint`` — Spark refuses to
+    overwrite a path the same plan reads — and written by dynamic
+    partition overwrite, a per-WRITE option: never the session conf, so
+    concurrent queries on one session can't race into a static-mode
+    full wipe."""
+    def with_kb(df: DataFrame) -> DataFrame:
+        return df.withColumn("kb", F.pmod(F.hash(*keys), n_buckets))
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        _bucket_geometry_guard(spark, out_dir, kind, keys, n_buckets)
+        b = with_kb(rows(batch_df, batch_id))
+        b.persist()
+        try:
+            touched = [r.kb for r in b.select("kb").distinct().collect()]
+            if not touched:
+                return
+            # the manifest alone (a crash between the stamp and the first
+            # snapshot write) reads as no snapshot; any other analysis
+            # error fails the batch — an empty `existing` would delete
+            # every untouched key in the rewritten buckets
+            existing = _read_parquet_or_none(spark, out_dir)
+            if existing is None:
+                existing = b.limit(0)
+            else:
+                existing = existing.where(F.col("kb").isin(touched))
+                if freeze:
+                    existing = existing.localCheckpoint(eager=True)
+            out = with_kb(merge(existing, b, batch_id)) \
+                .localCheckpoint(eager=True)
+            (out.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("kb").parquet(out_dir))
+            if after is not None:
+                after(out, batch_id)
+        finally:
+            b.unpersist()
+
+    return _start(updates, write_batch, checkpoint_dir, available_now)
+
+
 def upsert_stream(updates: DataFrame, out_dir: str, checkpoint_dir: str,
                   keys: "list[str]", order_by: "list[str]",
                   n_buckets: int = 64,
@@ -442,18 +496,20 @@ def upsert_stream(updates: DataFrame, out_dir: str, checkpoint_dir: str,
     (key-bucketed). Each micro-batch (1) collapses itself last-wins,
     (2) reads ONLY the snapshot buckets its keys touch (partition
     pruning), (3) merges, (4) rewrites just those buckets via dynamic
-    partition overwrite (a per-WRITE option — never the session conf, so
-    concurrent queries on one session can't race each other into a
-    static-mode full wipe). Cost per batch is O(touched buckets), not
-    O(snapshot) — size ``n_buckets`` so one bucket ≈ a few hundred MB at
-    your steady-state snapshot size. Within a batch, ties on ``order_by``
+    partition overwrite (the shared body, :func:`_bucketed_snapshot`).
+    Cost per batch is O(touched buckets), not O(snapshot) — size
+    ``n_buckets`` so one bucket ≈ a few hundred MB at your
+    steady-state snapshot size. Within a batch, ties on ``order_by``
     resolve by the trailing column, so make its last element unique
     (e.g. an event id) for exact-once-equivalent determinism.
 
-    ``n_buckets`` is baked into the on-disk layout; it is recorded in an
-    ``_upsert_meta`` sidecar on first write and validated every batch —
-    restarting with a different value raises instead of silently leaving
-    stale duplicate keys in unread buckets.
+    ``n_buckets`` is baked into the on-disk layout; it is recorded in
+    the store's ``_store_geometry.json`` manifest on first write and
+    validated every batch — restarting with a different value raises
+    instead of silently leaving stale duplicate keys in unread buckets.
+    A store written before the manifest (its layout was an
+    ``_upsert_meta`` sidecar, now ignored) is stamped only after a
+    one-time check of every stored ``kb`` (:func:`_bucket_geometry_guard`).
 
     ``transform(batch_df, batch_id)``, when given, maps each micro-batch
     BEFORE the merge — the hook that turns this into an incrementally
@@ -464,55 +520,15 @@ def upsert_stream(updates: DataFrame, out_dir: str, checkpoint_dir: str,
     """
     from ..functions import merge_upsert
 
-    key_cols = [F.col(k) for k in keys]
-    meta_path = os.path.join(out_dir, "_upsert_meta")
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def rows(batch_df: DataFrame, batch_id: int) -> DataFrame:
         if transform is not None:
             batch_df = transform(batch_df, batch_id)
-        b = merge_upsert(batch_df.limit(0), batch_df, keys, order_by) \
-            .withColumn("kb", F.pmod(F.hash(*key_cols), n_buckets))
-        b.persist()
-        try:
-            touched = [r.kb for r in b.select("kb").distinct().collect()]
-            if not touched:
-                return
-            meta = _read_parquet_or_none(spark, meta_path, "json")
-            existing = None
-            if meta is None:  # first batch: stamp the layout
-                spark.createDataFrame([(int(n_buckets),)], "n_buckets int") \
-                    .coalesce(1).write.mode("overwrite").json(meta_path)
-            else:
-                stored = meta.collect()[0].n_buckets
-                if int(stored) != int(n_buckets):
-                    raise ValueError(
-                        f"upsert_stream: snapshot at {out_dir} was built "
-                        f"with n_buckets={stored}, got {n_buckets} — the "
-                        "bucket count is part of the layout and cannot "
-                        "change without rebuilding the snapshot")
-                # the sidecar explains a dir with no data files yet (a
-                # crash between the stamp and the first snapshot write);
-                # any other analysis error fails the batch — an empty
-                # `existing` would delete every untouched key in the
-                # rewritten buckets
-                existing = _read_parquet_or_none(spark, out_dir)
-            existing = (b.limit(0) if existing is None
-                        else existing.where(F.col("kb").isin(touched)))
-            # localCheckpoint breaks the file lineage: Spark (rightly)
-            # refuses to overwrite a path that the same plan reads, and
-            # the merged frame reads the buckets it is about to rewrite.
-            # Materialized size = the touched buckets only — the same
-            # bound the whole design rests on.
-            merged = merge_upsert(existing, b, keys, order_by) \
-                .localCheckpoint(eager=True)
-            (merged.write.mode("overwrite")
-                   .option("partitionOverwriteMode", "dynamic")
-                   .partitionBy("kb").parquet(out_dir))
-        finally:
-            b.unpersist()
+        return merge_upsert(batch_df.limit(0), batch_df, keys, order_by)
 
-    return _start(updates, write_batch, checkpoint_dir, available_now)
+    return _bucketed_snapshot(
+        updates, out_dir, checkpoint_dir, "upsert", keys, n_buckets,
+        available_now, rows,
+        lambda existing, b, _: merge_upsert(existing, b, keys, order_by))
 
 
 def capture_summary_stream(traces: DataFrame, out_dir: str,
@@ -570,41 +586,22 @@ def sketch_rollup_stream(updates: DataFrame, out_dir: str,
     any moment without ever re-scanning history — state per key is one
     ~2^lg_k-byte sketch no matter how many rows flowed through.
 
-    Storage layout mirrors :func:`upsert_stream`: key-bucketed parquet
-    with dynamic partition overwrite of ONLY the touched buckets. Read
-    the estimates with ``hll_sketch_estimate(sketch)`` over the snapshot.
+    Storage layout is :func:`upsert_stream`'s (:func:`_bucketed_snapshot`):
+    key-bucketed parquet with dynamic partition overwrite of ONLY the
+    touched buckets. Read the estimates with
+    ``hll_sketch_estimate(sketch)`` over the snapshot.
     """
-    key_cols = [F.col(k) for k in keys]
+    def rows(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        return batch_df.groupBy(*keys).agg(
+            F.expr(f"hll_sketch_agg({value_col}, {lg_k})").alias("sketch"))
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _bucket_geometry_guard(spark, out_dir, "sketch_rollup", keys,
-                               n_buckets)
-        b = (batch_df.groupBy(*keys)
-             .agg(F.expr(f"hll_sketch_agg({value_col}, {lg_k})")
-                  .alias("sketch"))
-             .withColumn("kb", F.pmod(F.hash(*key_cols), n_buckets)))
-        b.persist()
-        try:
-            touched = [r.kb for r in b.select("kb").distinct().collect()]
-            if not touched:
-                return
-            existing = _read_parquet_or_none(spark, out_dir)
-            existing = b.limit(0) if existing is None \
-                else existing.where(F.col("kb").isin(touched))
-            merged = (existing.unionByName(b)
-                      .groupBy(*keys)
-                      .agg(F.expr("hll_union_agg(sketch)").alias("sketch"))
-                      .withColumn("kb", F.pmod(F.hash(*key_cols),
-                                               n_buckets))
-                      .localCheckpoint(eager=True))
-            (merged.write.mode("overwrite")
-                   .option("partitionOverwriteMode", "dynamic")
-                   .partitionBy("kb").parquet(out_dir))
-        finally:
-            b.unpersist()
+    def merge(existing: DataFrame, b: DataFrame, batch_id: int) -> DataFrame:
+        return (existing.unionByName(b).groupBy(*keys)
+                .agg(F.expr("hll_union_agg(sketch)").alias("sketch")))
 
-    return _start(updates, write_batch, checkpoint_dir, available_now)
+    return _bucketed_snapshot(updates, out_dir, checkpoint_dir,
+                              "sketch_rollup", keys, n_buckets,
+                              available_now, rows, merge)
 
 
 def quantile_rollup_stream(updates: DataFrame, out_dir: str,
@@ -629,9 +626,10 @@ def quantile_rollup_stream(updates: DataFrame, out_dir: str,
     carries ``updated_batch``; a replayed batch drops keys whose stored
     ``updated_batch >= batch_id`` before merging, making the rewrite
     bucket-idempotent (the :func:`upsert_stream` determinism contract
-    extended to mergeable state).  Layout mirrors the other rollups:
-    key-bucketed parquet, dynamic partition overwrite of touched buckets
-    only — O(batch + touched buckets) per trigger.
+    extended to mergeable state).  Layout is the other rollups'
+    (:func:`_bucketed_snapshot`): key-bucketed parquet, dynamic
+    partition overwrite of touched buckets only — O(batch + touched
+    buckets) per trigger.
 
     Drift alerts: pass a frozen ``baseline`` sketch table (a
     ``grouped_quantile_sketch`` snapshot) and an ``alerts_dir`` — after
@@ -642,56 +640,38 @@ def quantile_rollup_stream(updates: DataFrame, out_dir: str,
     per trigger, no rescan of anything.
     """
     from ..operators.sketch import (grouped_quantile_sketch,
-                                    merge_sketch_rows)
+                                    merge_sketch_rows, psi_table)
 
-    key_cols = [F.col(c) for c in keys]
     sketch_cols = ["values", "weights", "n"]
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _bucket_geometry_guard(spark, out_dir, "quantile_rollup", keys,
-                               n_buckets)
-        b = (grouped_quantile_sketch(batch_df, keys, value_col, k)
-             .withColumn("updated_batch",
-                         F.lit(int(batch_id)).cast("long"))
-             .withColumn("kb", F.pmod(F.hash(*key_cols), n_buckets)))
-        b.persist()
-        try:
-            touched = [r.kb for r in b.select("kb").distinct().collect()]
-            if not touched:
-                return
-            existing = _read_parquet_or_none(spark, out_dir)
-            existing = b.limit(0) if existing is None \
-                else (existing.where(F.col("kb").isin(touched))
-                      .localCheckpoint(eager=True))  # freeze pre-overwrite
-            already = existing.where(F.col("updated_batch") >=
-                                     F.lit(int(batch_id))).select(*keys)
-            fresh = b.join(F.broadcast(already), keys, "left_anti")
-            merged = merge_sketch_rows(
-                existing.select(*keys, *sketch_cols),
-                fresh.select(*keys, *sketch_cols), keys, k)
-            stamp = (existing.select(*keys, "updated_batch")
-                     .unionByName(fresh.select(*keys, "updated_batch"))
-                     .groupBy(*keys)
-                     .agg(F.max("updated_batch").alias("updated_batch")))
-            out = (merged.join(stamp, keys)
-                   .withColumn("kb", F.pmod(F.hash(*key_cols),
-                                            n_buckets))
-                   .localCheckpoint(eager=True))
-            (out.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("kb").parquet(out_dir))
-            if baseline is not None and alerts_dir is not None:
-                from ..operators.sketch import psi_table
-                scored = psi_table(
-                    out.select(*keys, *sketch_cols),
-                    baseline, keys, k=k, bins=psi_bins) \
-                    .localCheckpoint(eager=True)
-                _write_batch_partition(scored, alerts_dir, batch_id)
-        finally:
-            b.unpersist()
+    def rows(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        return (grouped_quantile_sketch(batch_df, keys, value_col, k)
+                .withColumn("updated_batch",
+                            F.lit(int(batch_id)).cast("long")))
 
-    return _start(updates, write_batch, checkpoint_dir, available_now)
+    def merge(existing: DataFrame, b: DataFrame, batch_id: int) -> DataFrame:
+        already = existing.where(F.col("updated_batch") >=
+                                 F.lit(int(batch_id))).select(*keys)
+        fresh = b.join(F.broadcast(already), keys, "left_anti")
+        merged = merge_sketch_rows(
+            existing.select(*keys, *sketch_cols),
+            fresh.select(*keys, *sketch_cols), keys, k)
+        stamp = (existing.select(*keys, "updated_batch")
+                 .unionByName(fresh.select(*keys, "updated_batch"))
+                 .groupBy(*keys)
+                 .agg(F.max("updated_batch").alias("updated_batch")))
+        return merged.join(stamp, keys)
+
+    def alert(out: DataFrame, batch_id: int) -> None:
+        scored = psi_table(out.select(*keys, *sketch_cols), baseline, keys,
+                           k=k, bins=psi_bins).localCheckpoint(eager=True)
+        _write_batch_partition(scored, alerts_dir, batch_id)
+
+    return _bucketed_snapshot(
+        updates, out_dir, checkpoint_dir, "quantile_rollup", keys,
+        n_buckets, available_now, rows, merge, freeze=True,
+        after=alert if baseline is not None and alerts_dir is not None
+        else None)
 
 
 def index_stream(docs: DataFrame, out_dir: str, checkpoint_dir: str,
@@ -1734,11 +1714,13 @@ def _store_append(rows: DataFrame, out_dir: str, done, batch_id: int,
 def _bucket_geometry_guard(spark, out_dir: str, kind: str,
                            keys: "list[str]", n_buckets: int) -> None:
     """The geometry guard of a store partitioned by ``kb = pmod(hash(keys),
-    n_buckets)`` (the sketch and quantile rollups). A store that holds data
-    but no manifest — written before these stores recorded one — is
-    stamped only after a one-time O(store) check that every stored row's
-    ``kb`` is the one ``n_buckets`` gives; otherwise it raises, since keys
-    in buckets the new hash never reads would get a second row."""
+    n_buckets)`` (every :func:`_bucketed_snapshot` store: upsert, and so
+    capture_summary and index, sketch and quantile). A store that holds
+    data but no manifest — written before these stores recorded one; an
+    upsert store's old ``_upsert_meta`` sidecar is not read — is stamped
+    only after a one-time O(store) check that every stored row's ``kb``
+    is the one ``n_buckets`` gives; otherwise it raises, since keys in
+    buckets the new hash never reads would get a second row."""
     def verify():
         store = _read_parquet_or_none(spark, out_dir)
         if store is not None and not store.where(
@@ -1757,9 +1739,13 @@ def _store_geometry_guard(store_dir: str, meta: dict,
     """Persist/validate the key geometry a candidate store was built
     with.  Store-backed monitors bake parameters into their STORED
     keys — grid cell size / coordinate count / bucket partitioning
-    (semdedup, colocation), deletion-variant depth (fuzzy) — so
-    re-attaching with ANY of them changed makes the probe join the
-    wrong keys and silently MISS pairs forever.  The first writer
+    (semdedup, colocation), deletion-variant depth (fuzzy), the bucket
+    count of the key-bucketed snapshots (upsert and the
+    capture_summary and index stores built on it, sketch, quantile;
+    through :func:`_bucket_geometry_guard`) — so re-attaching with ANY
+    of them changed makes the probe join the wrong keys and silently
+    MISS pairs (or keep a second row per key) forever.  The manifest
+    is the one layout record of every such store.  The first writer
     drops ``_store_geometry.json`` in the store dir (underscore
     prefix: invisible to the parquet reader); every later attach
     validates and RAISES on mismatch — changing geometry means a NEW

@@ -117,6 +117,21 @@ def test_array_quantiles_of_empty_array_are_null(spark):
     assert got[3].mid == 2.0
 
 
+def test_array_means_of_empty_array_are_null(spark):
+    """An empty array has no mean: NULL, as a NULL array gives (the
+    division by its size would be an error under ANSI)."""
+    df = spark.createDataFrame([(1, []), (2, None), (3, [2.0, 1.0, 4.0])],
+                               "id int, values array<float>")
+    got = {r.id: r for r in df.select(
+        "id", FN.array_mean("values").alias("mean"),
+        FN.array_mean_db("values").alias("mean_db")).collect()}
+    assert (got[1].mean, got[1].mean_db) == (None, None)
+    assert (got[2].mean, got[2].mean_db) == (None, None)
+    assert got[3].mean == pytest.approx(7 / 3)
+    assert got[3].mean_db == pytest.approx(
+        10 * np.log10(np.mean(10 ** (np.array([2.0, 1.0, 4.0]) / 10))))
+
+
 def test_array_db_aggregates(arrays_df):
     df, data = arrays_df
     rows = df.select("id", FN.array_mean_db("values").alias("out")).collect()

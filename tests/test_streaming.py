@@ -617,11 +617,18 @@ def test_upsert_stream_crash_replay_idempotent(spark, tmp_path):
     spark.conf.unset("spark.sql.streaming.metadataCache.enabled")
 
 
-def test_upsert_stream_restarts_after_meta_only_crash(spark, tmp_path):
-    """A crash between the ``_upsert_meta`` stamp and the first snapshot
-    write leaves a dir holding only the sidecar.  The replayed batch
-    must read that as an empty snapshot and land its rows — not fail
-    every restart on the parquet reader's UNABLE_TO_INFER_SCHEMA."""
+@pytest.mark.parametrize("left_behind", ["_upsert_meta",
+                                         "_store_geometry.json"])
+def test_upsert_stream_restarts_after_meta_only_crash(spark, tmp_path,
+                                                      left_behind):
+    """A crash between the layout stamp and the first snapshot write
+    leaves a dir holding only that stamp: the ``_store_geometry.json``
+    manifest, or the ``_upsert_meta`` sidecar of a store written before
+    the manifest.  The replayed batch must read either as an empty
+    snapshot and land its rows — not fail every restart on the parquet
+    reader's UNABLE_TO_INFER_SCHEMA."""
+    import json
+
     from nasctn_sea_ingest_spark.streaming import upsert_stream
 
     land = str(tmp_path / "land")
@@ -632,8 +639,13 @@ def test_upsert_stream_restarts_after_meta_only_crash(spark, tmp_path):
     spark.createDataFrame(
         [(1, 10, "a"), (2, 11, "b"), (1, 12, "c")], schema) \
         .coalesce(1).write.mode("append").parquet(land)
-    spark.createDataFrame([(8,)], "n_buckets int").coalesce(1) \
-        .write.json(os.path.join(out, "_upsert_meta"))
+    if left_behind == "_upsert_meta":
+        spark.createDataFrame([(8,)], "n_buckets int").coalesce(1) \
+            .write.json(os.path.join(out, left_behind))
+    else:
+        os.makedirs(out)
+        with open(os.path.join(out, left_behind), "w") as fh:
+            json.dump({"kind": "upsert", "n_buckets": 8}, fh)
 
     stream = spark.readStream.schema(schema).parquet(land)
     q = upsert_stream(stream, out, ckpt, keys=["k"],
@@ -734,17 +746,23 @@ def test_sketch_rollup_stream_incremental_distinct(spark, tmp_path):
 
 def _rollup_run(spark, face, land, out, ckpt, n_buckets,
                 max_files_per_trigger=None):
-    """One available_now run of the sketch or quantile rollup; returns
-    the stopped query."""
+    """One available_now run of the upsert, sketch or quantile face of
+    the key-bucketed snapshot; returns the stopped query."""
     from nasctn_sea_ingest_spark.streaming import (quantile_rollup_stream,
-                                                   sketch_rollup_stream)
+                                                   sketch_rollup_stream,
+                                                   upsert_stream)
     reader = spark.readStream.schema("key string, v long")
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    start = sketch_rollup_stream if face == "sketch" \
-        else quantile_rollup_stream
-    q = start(reader.parquet(land), out, ckpt, keys=["key"], value_col="v",
-              n_buckets=n_buckets, available_now=True)
+    if face == "upsert":
+        q = upsert_stream(reader.parquet(land), out, ckpt, keys=["key"],
+                          order_by=["v"], n_buckets=n_buckets,
+                          available_now=True)
+    else:
+        start = sketch_rollup_stream if face == "sketch" \
+            else quantile_rollup_stream
+        q = start(reader.parquet(land), out, ckpt, keys=["key"],
+                  value_col="v", n_buckets=n_buckets, available_now=True)
     try:
         q.awaitTermination(120)
     finally:
@@ -758,12 +776,12 @@ def _forty_keys(spark, land):
         .coalesce(1).write.mode("append").parquet(land)
 
 
-@pytest.mark.parametrize("face", ["sketch", "quantile"])
+@pytest.mark.parametrize("face", ["upsert", "sketch", "quantile"])
 def test_rollup_restart_with_other_n_buckets_raises(spark, tmp_path, face):
-    """The sketch and quantile rollups bake n_buckets into kb: 40 keys at
+    """The key-bucketed snapshots bake n_buckets into kb: 40 keys at
     n_buckets=16, then the same keys after a restart at 8, must fail on
-    the store's geometry — without the guard the second run gave 57 rows
-    for 40 keys."""
+    the store's geometry — without the guard the second rollup run gave
+    57 rows for 40 keys."""
     land, out, ckpt = (str(tmp_path / d) for d in ("land", "out", "ck"))
     _forty_keys(spark, land)
     _rollup_run(spark, face, land, out, ckpt, 16)
@@ -773,12 +791,14 @@ def test_rollup_restart_with_other_n_buckets_raises(spark, tmp_path, face):
     assert spark.read.parquet(out).count() == 40
 
 
-@pytest.mark.parametrize("face,jobs", [("sketch", 14), ("quantile", 21)])
+@pytest.mark.parametrize("face,jobs", [("upsert", 14), ("sketch", 14),
+                                       ("quantile", 21)])
 def test_rollup_new_store_first_trigger_jobs(spark, tmp_path, face, jobs):
-    """Spark jobs of a two-batch available_now run into a new rollup
-    store: on the first trigger the store dir holds only its geometry
-    manifest, which answers "no data yet" without a schema-inference
-    job (one job more per face before)."""
+    """Spark jobs of a two-batch available_now run into a new store: on
+    the first trigger the store dir holds only its geometry manifest,
+    which answers "no data yet" without a schema-inference job, and a
+    later trigger reads the layout from the manifest without a Spark job
+    (upsert's ``_upsert_meta`` sidecar cost 3 more)."""
     land, out, ckpt = (str(tmp_path / d) for d in ("land", "out", "ck"))
     _forty_keys(spark, land)
     _forty_keys(spark, land)
@@ -791,21 +811,27 @@ def test_rollup_new_store_first_trigger_jobs(spark, tmp_path, face, jobs):
     assert spark.read.parquet(out).count() == 40
 
 
-def test_rollup_unstamped_store_is_checked_before_stamp(spark, tmp_path):
-    """A rollup store with data but no geometry manifest (written before
-    the rollups recorded one) is stamped only after its kb values check
-    out: a restart at another n_buckets raises, one at the store's own
-    n_buckets stamps it and merges."""
+@pytest.mark.parametrize("face", ["upsert", "sketch"])
+def test_rollup_unstamped_store_is_checked_before_stamp(spark, tmp_path,
+                                                        face):
+    """A store with data but no geometry manifest (written before these
+    stores recorded one; an upsert store then carried an ``_upsert_meta``
+    sidecar) is stamped only after its kb values check out: a restart at
+    another n_buckets raises, one at the store's own n_buckets stamps it
+    and merges."""
     land, out, ckpt = (str(tmp_path / d) for d in ("land", "out", "ck"))
     _forty_keys(spark, land)
-    _rollup_run(spark, "sketch", land, out, ckpt, 16)
+    _rollup_run(spark, face, land, out, ckpt, 16)
     manifest = os.path.join(out, "_store_geometry.json")
     os.remove(manifest)
+    if face == "upsert":
+        spark.createDataFrame([(16,)], "n_buckets int").coalesce(1) \
+            .write.json(os.path.join(out, "_upsert_meta"))
     _forty_keys(spark, land)
     with pytest.raises(Exception, match="geometry mismatch"):
-        _rollup_run(spark, "sketch", land, out, ckpt, 8)
+        _rollup_run(spark, face, land, out, ckpt, 8)
     assert not os.path.exists(manifest)
-    _rollup_run(spark, "sketch", land, out, ckpt, 16)
+    _rollup_run(spark, face, land, out, ckpt, 16)
     assert os.path.exists(manifest)
     assert spark.read.parquet(out).count() == 40
 
