@@ -421,11 +421,11 @@ def main() -> None:
               f"(reference: 47.4s at 8 workers)", file=sys.stderr)
         # lazy dict-of-DataFrames analogs of BASELINE.md's dask numbers:
         # `.head(10)` first compute 6.24 s; 1-minute `.loc` range 16.6 s
-        # (8 workers). One shared cached decode scan feeds both.
+        # (8 workers). The dict caches nothing, so each action decodes the
+        # files it reads, like a first compute of the reference's ddfs.
         from nasctn_sea_ingest_spark.api import read_seamf_zipfile_as_sdf
         dt = float("inf")
-        for _ in range(2):  # best-of-2 genuine first-computes (cache
-            spark.catalog.clearCache()  # cleared so both runs pay decode)
+        for _ in range(2):  # best-of-2 first-computes
             t0 = time.perf_counter()
             sdfs = read_seamf_zipfile_as_sdf(spark, zpath)
             head = sdfs["psd"].limit(10).collect()
@@ -445,7 +445,6 @@ def main() -> None:
         total += dt
         print(f"# lazy 1-min range: {dt:.3f}s (reference: 16.6s)",
               file=sys.stderr)
-        spark.catalog.clearCache()  # release the shared decode cache
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

@@ -16,13 +16,16 @@ reference                       here
 ``localize_timestamps``         :func:`nasctn_sea_ingest_spark.functions.localize`
 ==============================  =============================================
 
-The Dask dict-of-ddf shape is kept: one lazy DataFrame per data product,
-all fed by a single shared decode scan (cached so multiple products don't
-re-decode, the analog of the reference's shared delayed graph). The eager
-entry points — ``read_seamf_zipfile`` and each delayed ``compute()`` — do
-not go through that dict: they share one uncached read that collects
-batch ingest's one-pass decode (trace, channel and sweep rows of each
-file from one decode) in a single job.
+Every reader here runs batch ingest's one-pass decode (``_decode_files``:
+the trace, channel and sweep rows of each file from one decode, or only
+its quarantine row), so one rule decides what a failed file contributes:
+nothing under ``errors='log'``, a ``decode failed for <file>`` error under
+``errors='raise'``. The Dask dict-of-ddf shape is kept: one lazy DataFrame
+per data product over that decode, nothing cached, so each product action
+re-decodes like the reference's dict of ddfs. The eager entry points —
+``read_seamf_zipfile`` and each delayed ``compute()`` — collect the same
+decode in a single job. A metadata-only read skips the payload through
+``sources.ingest``'s two metadata stages instead.
 """
 
 from __future__ import annotations
@@ -37,9 +40,7 @@ from .sources.ingest import (
     SWEEP_META_SCHEMA,
     TRACE_SCHEMA,
     _decode_files,
-    decode_channel_metadata,
-    decode_sweep_metadata,
-    decode_traces,
+    _rows_of,
     list_sigmf_refs,
     map_decoded_partitions,
     write_partitions,
@@ -120,14 +121,19 @@ def read_seamf_zipfile_as_sdf(spark: SparkSession, path: str,
     sensor_metadata``), the direct analog of the reference's dict of Dask
     DataFrames.
 
-    One shared decode scan feeds every trace product (cached on first
-    action); metadata tables ride the payload-skipping fast path.
+    Every table reads the one-pass decode, and nothing is cached: each
+    action decodes the files it reads, payload included, metadata tables
+    too, so a failed file raises (``errors='raise'``, when the action
+    runs) or is absent from every table (``errors='log'``). Persist a
+    table, or read the metadata through ``decode_channel_metadata`` /
+    ``decode_sweep_metadata`` (no payload decompression), where that
+    matters.
 
     ``partition_func`` (reference ``ziparchive.py:210-273``) is a per-batch
     hook ``dict[str, pd.DataFrame] -> dict``: it sees the decoded frames of
     each ref batch and every frame-valued key it returns becomes a lazy
-    DataFrame in the result (schemas probed from the first file, failures
-    skipped as ``errors='log'`` like the reference's hook path).
+    DataFrame in the result (schemas probed from the first readable file).
+    A failed file follows ``errors`` there too.
     """
     if errors not in ("raise", "log"):
         raise ValueError("errors must be 'raise' or 'log'")
@@ -141,59 +147,32 @@ def _sdfs_from_refs(refs: DataFrame, tz: str | None, errors: str,
     """Dict-of-lazy-DataFrames from a file-ref frame (shared by the
     zipfile, directory and delayed-batch entry points)."""
     if partition_func is not None:
-        return map_decoded_partitions(refs, partition_func, tz=tz)
-    traces = decode_traces(refs, tz=tz).cache()
+        return map_decoded_partitions(refs, partition_func, tz=tz,
+                                      errors=errors)
+    decoded = _decode_files(refs, tz=tz)
     if errors == "raise":
-        # LAZY raise (dask-parity: the reference's lazy dict raises when a
-        # partition computes, not at graph-build time — an eager probe here
-        # would decode the whole archive before the first real action).
-        # The check is fused into the `table` column, which every product
-        # filter evaluates, so no downstream projection/filter can prune
-        # past an errored row without raising.
+        # LAZY raise (dask parity: the reference's lazy dict raises when a
+        # partition computes, not at graph-build time). The check is fused
+        # into the columns the table splits filter on (`row_kind`, and
+        # `table` for the trace products), so no action drops a failed
+        # file's quarantine row without raising. A filter below the splits
+        # would not do: the optimizer puts the inferred isnotnull(table)
+        # and isnotnull(row_kind) first, and evaluated without whole-stage
+        # codegen they drop the quarantine row before the check runs.
         msg = F.concat(F.lit("decode failed for "), F.col("source_file"),
                        F.lit(": "), F.col("error"))
-        good = (traces.withColumn(
-                    "table",
-                    F.when(F.col("error").isNull(), F.col("table"))
-                     .otherwise(F.raise_error(msg).cast("string")))
-                .drop("error"))
-    else:
-        good = traces.where(F.col("error").isNull()).drop("error")
-
-    out: dict[str, DataFrame] = {}
-    for t in _PRODUCTS:
-        df = good.where(F.col("table") == t).drop("table")
-        out[t] = df
-
-    def _meta(df: DataFrame) -> DataFrame:
-        if errors == "raise":
-            # same lazy-raise contract as the trace products: a metadata
-            # action over an errored file must raise, not silently drop.
-            # The check rides a FILTER (a projection would be pruned away
-            # by count()-style actions that read no columns): good rows
-            # short-circuit the OR; an errored row evaluates raise_error.
-            m = F.concat(F.lit("decode failed for "), F.col("source_file"),
-                         F.lit(": "), F.col("error"))
-            return (df.where(F.col("error").isNull()
-                             | F.raise_error(m).cast("boolean"))
-                    .drop("error"))
-        quarantined = traces.where(F.col("error").isNotNull()) \
-                            .select("source_file").distinct()
-        return (df.where(F.col("error").isNull())
-                  .join(F.broadcast(quarantined), "source_file",
-                        "left_anti")
-                  .drop("error"))
-
-    # in raise mode the metadata stage verifies the payload sha512 too
-    # (no decompression — SigmfError lands in the error column, and the
-    # fused raise fires on the first metadata action)
-    _hc = errors == "raise"
-    out["channel_metadata"] = _meta(
-        decode_channel_metadata(refs, tz=tz, hash_check=_hc))
-    out["sweep_metadata"] = _meta(
-        decode_sweep_metadata(refs, tz=tz, hash_check=_hc))
+        fail = F.raise_error(msg).cast("string")
+        decoded = decoded.withColumns({
+            c: F.when(F.col("error").isNull(), F.col(c)).otherwise(fail)
+            for c in ("row_kind", "table")})
+    traces = _rows_of(decoded, "trace", TRACE_SCHEMA)
+    out = {t: traces.where(F.col("table") == t).drop("table")
+           for t in _PRODUCTS}
+    out["channel_metadata"] = _rows_of(decoded, "channel",
+                                       CHANNEL_META_SCHEMA)
+    out["sweep_metadata"] = _rows_of(decoded, "sweep", SWEEP_META_SCHEMA)
     # reference read_seamf returns a 7th product key sensor_metadata =
-    # {timezone} (seamf.py:231); it rides the sweep fast path here
+    # {timezone} (seamf.py:231)
     out["sensor_metadata"] = out["sweep_metadata"].select(
         "source_file", "timezone")
     return out
@@ -234,8 +213,7 @@ def _collect(refs: DataFrame, tz: str | None,
     reference's delayed partition materializes the whole dict the same way
     (ziparchive.py:265-277). A file that fails any step of its decode has
     only its quarantine row, so ``errors='log'`` drops it from every table.
-    Nothing is cached: the lazy dict caches because its consumers are
-    lazy, here everything is consumed NOW."""
+    Nothing is cached."""
     rows = _decode_files(refs, tz=tz).toPandas()
     bad = rows["error"].notnull()
     if errors == "raise" and bad.any():

@@ -42,6 +42,7 @@ from __future__ import annotations
 from typing import Iterator, Sequence
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -277,7 +278,6 @@ def quantile_sketch(df: DataFrame, col: str, k: int = 200
     set of partials collects, and they merge driver-side — the
     ``pca_moments`` shape.  Driver state is O(k log n), never O(rows)."""
     def partials(batches: Iterator) -> Iterator:
-        import pandas as pd
         for b in batches:
             if not len(b):
                 continue
@@ -304,8 +304,7 @@ def grouped_quantile_sketch(df: DataFrame, keys: Sequence[str], col: str,
     in with :func:`merge_sketch_rows` (never re-reading history)."""
     keys = list(keys)
 
-    def build(pdf) -> "object":
-        import pandas as pd
+    def build(pdf: pd.DataFrame) -> pd.DataFrame:
         sk = QuantileSketch(k).update_batch(
             pdf[col].to_numpy(dtype=np.float64))
         vals, wts = sk.to_arrays()
@@ -328,8 +327,7 @@ def merge_sketch_rows(a: DataFrame, b: DataFrame, keys: Sequence[str],
     maintenance step for incrementally kept percentile tables."""
     keys = list(keys)
 
-    def combine(pdf) -> "object":
-        import pandas as pd
+    def combine(pdf: pd.DataFrame) -> pd.DataFrame:
         out = QuantileSketch(k)
         for _, row in pdf.iterrows():
             out.merge(QuantileSketch.from_arrays(
@@ -456,7 +454,6 @@ def psi_table(current: DataFrame, baseline: DataFrame,
     j = b.join(c, keys)
 
     def compute(pdf):
-        import pandas as pd
         rows = []
         for _, r in pdf.iterrows():
             sb = QuantileSketch.from_arrays(r["b_values"],

@@ -17,16 +17,19 @@ the storage-level equivalents SURVEY.md §1.5/§4 calls for:
 - per-file failures quarantine into an ``error`` column instead of killing
   the job (reference ``errors='log'``, ``ziparchive.py:424-440``).
 
-Every ``.sigmf`` reader — ``decode_traces``, ``decode_dir``, the two
-metadata stages, the one-pass ingest stage and the streaming ingest — is
-the one private stage ``_decode_stage``: it takes each file's bytes from a
-ref or from a binaryFile ``content`` column, makes one decode call per
-file, and turns a failed file into one quarantine row.
+Every ``.sigmf`` reader runs one per-file loop, ``_each_file``: one
+decode call per file (bytes from a ref or a binaryFile ``content``
+column), a failed file's error reported instead of raised. The stage
+``_decode_stage`` runs it for ``decode_traces``, ``decode_dir``, the two
+metadata stages (the metadata-only fast path, S14), the one-pass
+``_decode_files`` and the streaming ingest, and turns a failed file into
+one quarantine row; the ``partition_func`` hook runs it too.
 
-``ingest()`` needs every output of every file, so it decodes each file
-once: one stage emits the file's trace rows, channel rows and sweep row
-(or only its quarantine row) into one frame, which is persisted once and
-written to all four tables. A separate metadata pass is not free even
+``ingest()`` and the API's zip reads take every table of a file from one
+decode: ``_decode_files`` emits the file's trace rows, channel rows and
+sweep row (or only its quarantine row) into one frame. ``ingest()``
+persists it once and writes all four tables from it; the lazy API dict
+splits it per table, uncached. A separate metadata pass is not free even
 though its parse is: every Python task pays a fixed worker set-up cost of
 about 0.045 s CPU (24 one-row tasks, ``local[3]``, 4-core host), so each
 extra ``mapInPandas`` stage costs CPU however little it does. The cost was
@@ -48,7 +51,6 @@ import os
 import zipfile
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -230,40 +232,42 @@ def _ref_name(path: str, member: str | None) -> str:
 # decode stages (mapInPandas)
 # --------------------------------------------------------------------------
 
+def _each_file(batch: pd.DataFrame, zcache: dict, decode, **kw):
+    """Per file of a ref batch (``path``, ``member``) or a binaryFile
+    batch (``path``, ``content``): ``(source, decode(raw, source=...,
+    **kw), None)``, or ``(source, None, "<Type>: <msg>")`` when reading or
+    decoding the file raises."""
+    by_content = "content" in batch.columns
+    for path, x in zip(batch["path"],
+                       batch["content" if by_content else "member"]):
+        src = path if by_content else _ref_name(path, x)
+        try:
+            raw = bytes(x) if by_content else _open_ref(zcache, path, x)
+            out, err = decode(raw, source=src, **kw), None
+        except Exception as e:  # noqa: BLE001 — the caller's rule decides
+            out, err = None, f"{type(e).__name__}: {e}"
+        yield src, out, err
+
+
 def _decode_stage(files: DataFrame, schema: T.StructType, decode,
                   **kw) -> DataFrame:
-    """The one per-file decode stage behind every ``.sigmf`` reader: a
-    ``mapInPandas`` that takes each file's raw bytes — a binaryFile
-    ``content`` column, else the ``(path, member)`` ref opened here — runs
-    ``decode(raw, source=..., **kw)`` (a list of ``schema`` rows) and, when
-    that raises, emits one quarantine row instead: the source, nulls, and
-    the error text in the last column (S15).
-
-    Each use is one Python stage, and each of its tasks costs about
-    0.045 s CPU of worker set-up before the first file (about 0.25 s
-    before the package daemon stopped pyspark's per-task import-cache
-    reset from re-reading the zipped library), so a caller that needs
-    several outputs of the same files takes them from one stage:
-    ``ingest()`` and the eager API read run ``_decode_files``, whose
-    per-file call returns a file's trace, channel and sweep rows at once."""
+    """``mapInPandas`` over ``_each_file``, whose ``decode`` returns a list
+    of ``schema`` rows per file; a failed file becomes one quarantine row:
+    the source, nulls, and the error text in the last column (S15). Each
+    use is one Python stage, with the per-task cost the module docstring
+    gives."""
     cols = [f.name for f in schema.fields]
     n_fill = len(cols) - 2
-    by_content = "content" in files.columns
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         zcache: dict = {}
         for b in batches:
             recs = []
-            for path, x in zip(b["path"],
-                               b["content" if by_content else "member"]):
-                src = path if by_content else _ref_name(path, x)
-                try:
-                    raw = bytes(x) if by_content \
-                        else _open_ref(zcache, path, x)
-                    recs.extend(decode(raw, source=src, **kw))
-                except Exception as e:  # noqa: BLE001 — quarantine
-                    recs.append((src, *([None] * n_fill),
-                                 f"{type(e).__name__}: {e}"))
+            for src, rows, err in _each_file(b, zcache, decode, **kw):
+                if err is None:
+                    recs.extend(rows)
+                else:
+                    recs.append((src, *([None] * n_fill), err))
             yield pd.DataFrame(recs, columns=cols)
 
     return files.mapInPandas(run, schema)
@@ -296,57 +300,41 @@ def decode_traces(refs: DataFrame, tz: str | None = None,
                          tz=tz, hash_check=hash_check)
 
 
-def _decode_batch_dict(paths, members, zcache: dict, tz: str | None,
-                       hash_check: bool) -> dict[str, pd.DataFrame]:
-    """Decode a batch of refs into the reference's per-partition shape —
-    one dict of concatenated frames per batch (``ziparchive.py:195-204``'s
-    concat step; long format here). Failed files are skipped, the
-    reference's ``errors='log'`` path."""
-    dicts = []
-    for path, member in zip(paths, members):
-        try:
-            raw = _open_ref(zcache, path, member)
-            dicts.append(decode_sigmf(raw, tz=tz, hash_check=hash_check,
-                                      source=_ref_name(path, member)))
-        except Exception:  # noqa: BLE001 — errors='log'
-            continue
-    keys = {k for d in dicts for k in d}
-    return {k: pd.concat([d[k] for d in dicts if k in d],
-                         ignore_index=True)
-            for k in keys}
-
-
 def map_decoded_partitions(refs: DataFrame, partition_func,
                            tz: str | None = None, hash_check: bool = True,
-                           probe_limit: int = 8) -> dict[str, DataFrame]:
+                           errors: str = "log") -> dict[str, DataFrame]:
     """The reference's ``partition_func`` hook (``ziparchive.py:210-273``,
     used in ``demos/dask_processing.ipynb`` cell 3): per ref batch, decode
-    to a dict of frames, apply ``partition_func(dict) -> dict``, and expose
-    every frame-valued key of the result as a lazy Spark DataFrame.
+    each file with ``decode_sigmf`` (``_each_file``), concatenate the
+    frames into one dict (``ziparchive.py:195-204``), apply
+    ``partition_func(dict) -> dict``, and expose every frame-valued key of
+    the result as a lazy Spark DataFrame. A failed file is dropped
+    (``errors='log'``) or raises ``decode failed for <source>: <error>``
+    when its batch computes (``errors='raise'``).
 
     Output schemas are discovered by a driver-side probe — decode the first
-    readable ref (~ms, payload included) and run ``partition_func`` on it —
-    the Spark analog of the reference's first-partition divisions/meta probe
+    readable ref of the first 8 (~ms, payload included; failed refs are
+    skipped in both modes) and run ``partition_func`` on it — the Spark
+    analog of the reference's first-partition divisions/meta probe
     (SURVEY.md S12–S13, ``ziparchive.py:281-316``): here it is needed only
     when a user hook makes the schema dynamic.
 
     Like the reference's dict-of-ddfs, each returned DataFrame re-runs the
-    shared decode when computed separately; persist the inputs or compute
-    the dict in one action-shaped job if that matters.
+    decode when computed separately; persist the inputs or compute the dict
+    in one action-shaped job if that matters.
     """
     spark = refs.sparkSession
-    head = refs.select("path", "member").limit(probe_limit).collect()
+    kw = dict(tz=tz, hash_check=hash_check)
+    head = pd.DataFrame(refs.select("path", "member").limit(8)
+                        .collect(), columns=["path", "member"])
     zcache: dict = {}
-    probe: dict[str, pd.DataFrame] | None = None
-    for r in head:
-        d = _decode_batch_dict([r.path], [r.member], zcache, tz, hash_check)
-        if d:
-            probe = partition_func(d)
-            break
+    first = next((d for _, d, err in _each_file(head, zcache, decode_sigmf,
+                                                **kw) if err is None), None)
     for z in zcache.values():
         z.close()
-    if probe is None:
+    if first is None:
         raise RuntimeError("no readable ref to probe partition_func schema")
+    probe = partition_func(first)
     if not isinstance(probe, dict):
         raise ValueError("partition_func must return a dict")
 
@@ -361,11 +349,18 @@ def map_decoded_partitions(refs: DataFrame, partition_func,
                 ) -> Iterator[pd.DataFrame]:
             zc: dict = {}
             for b in batches:
-                d = _decode_batch_dict(b["path"], b["member"], zc, tz,
-                                       hash_check)
-                if not d:
+                dicts = []
+                for src, d, err in _each_file(b, zc, decode_sigmf, **kw):
+                    if err is None:
+                        dicts.append(d)
+                    elif errors == "raise":
+                        raise RuntimeError(f"decode failed for {src}: {err}")
+                if not dicts:
                     continue
-                r = partition_func(d)
+                r = partition_func({
+                    k: pd.concat([d[k] for d in dicts if k in d],
+                                 ignore_index=True)
+                    for k in {k for d in dicts for k in d}})
                 if not isinstance(r, dict):
                     raise ValueError("partition_func must return a dict")
                 got = r.get(_key)

@@ -673,10 +673,12 @@ def decode_sigmf_meta(file, tz: str | None = None,
 
     ``hash_check=True`` additionally verifies the payload sha512 WITHOUT
     decompressing (the blob is already in hand from the tar read; sha512
-    costs ~0.2 ms/file vs ~8 ms for the lzma a full decode pays) — used
-    by the zipfile API's ``errors='raise'`` mode so metadata actions
-    surface corrupt files instead of silently including them. Default
-    off: it roughly doubles the metadata-only parse cost."""
+    costs ~0.2 ms/file vs ~8 ms for the lzma a full decode pays), so a
+    payload whose bytes were altered fails here. A payload that matches
+    its hash but does not decompress still passes: only a full decode
+    sees that, which is why the lazy API dict reads its metadata tables
+    from the full decode. Default off: it roughly doubles the
+    metadata-only parse cost."""
     meta, _ = _verified(file, hash_check)
     return {"plan": _plan_for(meta, tz), "meta": meta}
 

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import tempfile
 from collections.abc import Iterator
 from functools import reduce
@@ -87,12 +88,16 @@ def _read_parquet_or_none(spark, path):
     """Read a parquet dir, or None if it does not exist or holds no data
     files yet — the store-backed monitors' attach convention (their
     ``_store_geometry.json`` manifests and other sidecars are written
-    before the first data). A local dir holding only ``_``/``.``
-    entries (hidden to Spark's file listing) is answered without the
-    schema-inference job a read would run; every other analysis error
-    re-raises."""
-    if os.path.isdir(path) and all(n.startswith(("_", "."))
-                                   for n in os.listdir(path)):
+    before the first data). A local path (no URI scheme) that does not
+    exist, or a local dir holding only ``_``/``.`` entries (hidden to
+    Spark's file listing), is answered without a read: Spark would log a
+    stack trace for the one, and run a schema-inference job for the
+    other. A ``scheme:`` path is always read, since ``os.path`` cannot see
+    remote stores; every other analysis error re-raises."""
+    if not re.match(r"[A-Za-z][A-Za-z0-9+.-]*:", path) and (
+            not os.path.exists(path)
+            or os.path.isdir(path) and all(n.startswith(("_", "."))
+                                           for n in os.listdir(path))):
         return None
     try:
         return spark.read.parquet(path)

@@ -136,6 +136,26 @@ def test_partition_func_hook(spark, zpath):
     assert want == sorted(pdf["vmax"])
 
 
+@pytest.fixture(scope="module")
+def bad_hash_dir(tmp_path_factory):
+    d = tmp_path_factory.mktemp("poison_hook")
+    (d / "ok.sigmf").write_bytes(build_sigmf())
+    (d / "bad.sigmf").write_bytes(build_sigmf(bad_hash=True))
+    return str(d)
+
+
+def test_partition_func_hook_honours_errors(spark, bad_hash_dir):
+    """The hook follows ``errors`` like every other reader: 'raise' raises
+    when the batch computes, 'log' drops the failed file."""
+    sdfs = api.read_seamf_zipfile_as_sdf(spark, bad_hash_dir,
+                                         partition_func=_pfunc)
+    with pytest.raises(Exception, match="sha512"):
+        sdfs["psd_max"].count()
+    sdfs = api.read_seamf_zipfile_as_sdf(spark, bad_hash_dir, errors="log",
+                                         partition_func=_pfunc)
+    assert sdfs["psd_max"].count() == 3 * 2
+
+
 def _pickle_sink(pdf, path, pid):
     import os
     out = os.path.join(path, f"part-{pid}.pkl")
@@ -216,3 +236,63 @@ def test_restore_multiindex(spark, zpath):
                                                          "frequency"]
     # sweep/sensor metadata pass through unindexed (reference skip)
     assert out["sweep_metadata"].index.name is None
+
+
+def _lzma_bad_sigmf() -> bytes:
+    """A file whose payload is cut short but whose ``core:sha512`` is
+    recomputed to match: the hash check passes and only decompression
+    fails, so a metadata-only parse cannot see the fault."""
+    import hashlib
+    import io
+    import json
+    import tarfile
+    src = tarfile.open(fileobj=io.BytesIO(build_sigmf(truncate=True)))
+    members = {m.name: src.extractfile(m).read() for m in src.getmembers()}
+    meta_name = next(n for n in members if n.endswith(".sigmf-meta"))
+    data = next(v for n, v in members.items() if n.endswith(".sigmf-data"))
+    meta = json.loads(members[meta_name])
+    meta["global"]["core:sha512"] = hashlib.sha512(data).hexdigest()
+    members[meta_name] = json.dumps(meta).encode()
+    buf = io.BytesIO()
+    with tarfile.TarFile(fileobj=buf, mode="w") as tar:
+        for name, blob in members.items():
+            info = tarfile.TarInfo(name)
+            info.size = len(blob)
+            tar.addfile(info, io.BytesIO(blob))
+    return buf.getvalue()
+
+
+def _canon(pdf):
+    """Column names plus the sorted reprs of a frame's rows (arrays as
+    lists), so two reads compare row for row whatever their order."""
+    cols = [[v.tolist() if isinstance(v, np.ndarray) else v
+             for v in pdf[c].tolist()] for c in pdf.columns]
+    return list(pdf.columns), sorted(repr(r) for r in zip(*cols))
+
+
+def test_one_failed_file_rule_for_every_reader(spark, tmp_path_factory):
+    """The lazy dict and the eager read apply one rule to a file that
+    fails decode: every lazy table raises on it under errors='raise', and
+    under errors='log' every lazy table equals the eager read's table.
+    Nothing is left persisted."""
+    d = tmp_path_factory.mktemp("poison_lzma")
+    (d / "ok.sigmf").write_bytes(build_sigmf())
+    (d / "lzbad.sigmf").write_bytes(_lzma_bad_sigmf())
+    jsc = spark.sparkContext._jsc
+    persisted = jsc.getPersistentRDDs().size()
+
+    sdfs = api.read_seamf_zipfile_as_sdf(spark, str(d))
+    assert set(sdfs) == {"psd", "pvt", "pfp", "apd", "apd_raw",
+                         "channel_metadata", "sweep_metadata",
+                         "sensor_metadata"}
+    for name, df in sdfs.items():
+        with pytest.raises(Exception, match="decode failed"):
+            df.count()
+
+    lazy = api.read_seamf_zipfile_as_sdf(spark, str(d), errors="log")
+    eager = api.read_seamf_zipfile(spark, str(d), errors="log")
+    assert set(lazy) == set(eager)
+    for name, df in lazy.items():
+        assert _canon(df.toPandas()) == _canon(eager[name]), name
+    assert len(eager["sweep_metadata"]) == 1
+    assert jsc.getPersistentRDDs().size() == persisted

@@ -463,3 +463,15 @@ def test_kmv_jaccard_tracks_planted_overlap(spark):
         ["g"], k).select(kmv_estimate_expr("kmv", k).alias("e")).first().e
     inter_est = row.j * union_est
     assert abs(inter_est - 10000) / 10000 < 0.2, inter_est
+
+
+def test_grouped_sketch_builds_without_warnings(spark):
+    """Both grouped-map functions are fully annotated, so pyspark infers
+    their eval type instead of warning on every build."""
+    import warnings
+
+    df = spark.createDataFrame([("a", 1.0), ("b", 2.0)], "k string, v double")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        per_key = grouped_quantile_sketch(df, ["k"], "v")
+        merge_sketch_rows(per_key, per_key, ["k"])

@@ -4228,3 +4228,19 @@ def test_triangle_count_stream_parity_and_replay(spark, tmp_path):
         finally:
             q.stop()
             q.awaitTermination(30)
+
+
+def test_read_parquet_or_none_skips_missing_local_store(tmp_path):
+    """A local store dir that does not exist yet is answered without a
+    Spark read (which would log a stack trace before failing); a path with
+    a URI scheme is always left to Spark."""
+    from nasctn_sea_ingest_spark.streaming import _read_parquet_or_none
+
+    class _NoRead:
+        @property
+        def read(self):
+            raise AssertionError("spark.read was called")
+
+    assert _read_parquet_or_none(_NoRead(), str(tmp_path / "absent")) is None
+    with pytest.raises(AssertionError, match="spark.read"):
+        _read_parquet_or_none(_NoRead(), f"file:{tmp_path / 'absent'}")
