@@ -12,7 +12,7 @@ the storage-level equivalents SURVEY.md §1.5/§4 calls for:
 - decode runs as ``mapInPandas`` over the refs — one Spark task per ref
   batch, vectorized numpy inside, Arrow on the wire,
 - the Dask ``divisions``/1-day-``repartition`` trick becomes
-  ``partitionBy(date)`` parquet output with min/max stats, so time-range
+  date-partitioned parquet output with min/max stats, so time-range
   queries prune partitions for free,
 - per-file failures quarantine into an ``error`` column instead of killing
   the job (reference ``errors='log'``, ``ziparchive.py:424-440``).
@@ -25,14 +25,23 @@ metadata stages (the metadata-only fast path, S14), the one-pass
 ``_decode_files`` and the streaming ingest, and turns a failed file into
 one quarantine row; the ``partition_func`` hook runs it too.
 
-``ingest()`` and the API's zip reads take every table of a file from one
-decode: ``_decode_files`` emits the file's trace rows, channel rows and
-sweep row (or only its quarantine row) into one frame. ``ingest()``
-persists it once and writes all four tables from it; the lazy API dict
-splits it per table, uncached. A separate metadata pass is not free even
-though its parse is: every Python task pays a fixed worker set-up cost of
-about 0.045 s CPU (24 one-row tasks, ``local[3]``, 4-core host), so each
-extra ``mapInPandas`` stage costs CPU however little it does. The cost was
+Every table of a file comes from one decode (``_file_tables``: verify,
+decompress and plan once). ``ingest()`` runs it in one Python stage whose
+tasks also write the four tables with pyarrow (``_stage_tables``), the way
+the reference's Dask workers decode a sweep and write it from the same
+worker: the driver only commits the files the tasks name, so the float
+trace arrays never enter the JVM. Taking them in there, caching them and
+having parquet-mr re-encode them element by element was 5.7 s of the
+8.3 s CPU of one traced 48-file, 7,920-trace-row ingest (``local[3]``,
+4-core host; 0.4 of 1.9 s now); pyarrow builds, sorts and writes the
+same rows in about 0.25 s of CPU. The API's zip reads take the same
+decode through
+``_decode_files``, which emits a file's trace, channel and sweep rows (or
+only its quarantine row) into one frame that the lazy dict splits per
+table, uncached. A separate metadata pass is not free even though its
+parse is: every Python task pays a fixed worker set-up cost of about
+0.045 s CPU (24 one-row tasks, ``local[3]``, 4-core host), so each extra
+``mapInPandas`` stage costs CPU however little it does. The cost was
 about 0.25 s per task until local sessions forked their workers from the
 package's daemon (``_daemon``): pyspark's per-task import-cache reset
 re-read the zipped pyspark library's central directory once per importer.
@@ -48,15 +57,23 @@ from __future__ import annotations
 
 import glob
 import os
+import shutil
+import uuid
 import zipfile
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from .sigmf import _planned, _trace_tuples, decode_sigmf, \
+from .sigmf import TRACE_TABLES, _planned, _trace_tuples, decode_sigmf, \
     decode_sigmf_meta, decode_sigmf_trace_records
 
 # --------------------------------------------------------------------------
@@ -488,17 +505,24 @@ _AS_CHANNEL = _widener("channel", CHANNEL_META_SCHEMA)
 _AS_SWEEP = _widener("sweep", SWEEP_META_SCHEMA)
 
 
+def _file_tables(raw: bytes, source: str, tz: str | None,
+                 hash_check: bool) -> tuple:
+    """One file's rows from ONE decode: verify, decompress and plan once,
+    then (its trace tuples by table, its channel rows, its sweep row) of
+    that one plan. Whatever raises raises before any row is returned, so a
+    failed file has no row in any table."""
+    plan, payload = _planned(raw, tz, hash_check)
+    return (_trace_tuples(plan, payload, source),
+            _channel_rows(plan, source), _sweep_rows(plan, source))
+
+
 def _file_rows(raw: bytes, source: str, tz: str | None,
                hash_check: bool) -> list[list]:
-    """Every output row of one file from ONE decode: verify, decompress and
-    plan once, then the trace rows, the channel rows and the sweep row of
-    that one plan. Whatever raises raises before any row is returned, so a
-    failed file yields only its quarantine row."""
-    plan, payload = _planned(raw, tz, hash_check)
-    rows = [_AS_TRACE(t) for table in
-            _trace_tuples(plan, payload, source).values() for t in table]
-    rows += map(_AS_CHANNEL, _channel_rows(plan, source))
-    rows += map(_AS_SWEEP, _sweep_rows(plan, source))
+    """Every _DECODE_SCHEMA row of one file (``_file_tables``), or none."""
+    traces, channel, sweep = _file_tables(raw, source, tz, hash_check)
+    rows = [_AS_TRACE(t) for table in traces.values() for t in table]
+    rows += map(_AS_CHANNEL, channel)
+    rows += map(_AS_SWEEP, sweep)
     return rows
 
 
@@ -522,6 +546,155 @@ def _rows_of(decoded: DataFrame, kind: str,
 # ingest job: decode → partitioned parquet warehouse
 # --------------------------------------------------------------------------
 
+_QUARANTINE_SCHEMA = T.StructType([TRACE_SCHEMA["source_file"],
+                                   TRACE_SCHEMA["error"]])
+
+# the four tables ingest() writes: (the Spark schema its rows are built in,
+# its partition columns, the Arrow schema of its data files: the Spark
+# schema less the partition columns and, but for the quarantine, ``error``)
+_TABLES = {
+    name: (schema, parts, to_arrow_schema(T.StructType(
+        [f for f in schema.fields if f.name not in parts
+         and (f.name != "error" or name == "quarantine")])))
+    for name, schema, parts in (
+        ("traces", TRACE_SCHEMA, ("table", "date")),
+        ("channel_metadata", CHANNEL_META_SCHEMA, ("date",)),
+        ("sweep_metadata", SWEEP_META_SCHEMA, ()),
+        ("quarantine", _QUARANTINE_SCHEMA, ()))}
+
+# the stage's rows: a staged file (table, its path under the table), a
+# failed file (its source) or a batch (its ref count)
+_STAGED_SCHEMA = T.StructType([
+    T.StructField("table", T.StringType(), True),
+    T.StructField("path", T.StringType(), True),
+    T.StructField("failed", T.StringType(), True),
+    T.StructField("n_files", T.LongType(), True),
+])
+
+_BLOCK_BYTES = 128 << 20    # parquet-mr's default row-group size
+
+
+def _arrow_rows(rows: list[tuple], table: str) -> pa.Table:
+    """Row tuples in ``table``'s Spark schema order as an Arrow table of
+    its data-file columns. Trace arrays (float32 numpy) go in as one
+    buffer; naive timestamps are UTC, as the decode emits them."""
+    spark_schema, _, schema = _TABLES[table]
+    cols = dict(zip(spark_schema.names, zip(*rows)))
+    arrays = []
+    for f in schema:
+        col = cols[f.name]
+        if f.name == "values":
+            offsets = np.zeros(len(col) + 1, np.int32)
+            np.cumsum([len(v) for v in col], out=offsets[1:])
+            arrays.append(pa.ListArray.from_arrays(
+                offsets, np.concatenate(col), type=f.type))
+        elif pa.types.is_timestamp(f.type):
+            us = np.array(col, "datetime64[us]")
+            arrays.append(pa.array(us, mask=np.isnat(us)).cast(f.type))
+        else:
+            arrays.append(pa.array(col, f.type))
+    return pa.Table.from_arrays(arrays, schema=schema)
+
+
+def _date_runs(tbl: pa.Table, tz: str) -> Iterator[tuple[str, pa.Table]]:
+    """``tbl`` sorted by (datetime, frequency) — stable, nulls first, as
+    Spark's ascending sort — split into its ``date`` partitions: the date
+    of ``datetime`` in the session time zone ``tz``, as ``F.to_date``
+    gives it (the date never falls as the instant rises, so each
+    partition is one run of the sorted rows)."""
+    tbl = tbl.sort_by([("datetime", "ascending"), ("frequency", "ascending")],
+                      null_placement="at_start")
+    dates = pc.cast(pc.local_timestamp(
+        tbl["datetime"].cast(pa.timestamp("us", tz))), pa.date32())
+    for d in pc.unique(dates).to_pylist():
+        keep = pc.is_null(dates) if d is None else pc.equal(dates, d)
+        yield ("__HIVE_DEFAULT_PARTITION__" if d is None else d.isoformat(),
+               tbl.filter(keep))
+
+
+def _write_parquet(tbl: pa.Table, path: str) -> None:
+    """One parquet file as the warehouse stores it: Spark's default codec,
+    the page index parquet-mr writes for page pruning, no Arrow schema
+    blob in the footer, and row groups near parquet-mr's block size so a
+    large file still splits for readers."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    pq.write_table(tbl, path, compression="snappy", write_page_index=True,
+                   store_schema=False, row_group_size=max(
+                       1, tbl.num_rows * _BLOCK_BYTES // max(tbl.nbytes, 1)))
+
+
+def _stage_tables(refs: DataFrame, staging: str, tz: str | None,
+                  hash_check: bool, session_tz: str) -> DataFrame:
+    """The ingest stage: per ref batch, decode each file once
+    (``_file_tables``) and write one parquet file per (table, partition)
+    under ``staging/<table>/`` from this task; yield only _STAGED_SCHEMA
+    rows. A file name carries a fresh uuid, so a retried or speculative
+    attempt never overwrites a file another attempt reports."""
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        task = TaskContext.get().partitionId()
+        zcache: dict = {}
+        n_out = 0
+        for b in batches:
+            traces: dict[str, list] = {t: [] for t in TRACE_TABLES}
+            channel, sweep, failed = [], [], []
+            for src, got, err in _each_file(b, zcache, _file_tables, tz=tz,
+                                            hash_check=hash_check):
+                if err is not None:
+                    failed.append((src, err))
+                    continue
+                for t, rows in got[0].items():
+                    traces[t] += rows
+                channel += got[1]
+                sweep += got[2]
+            groups = [("traces", f"table={t}", rows)
+                      for t, rows in traces.items()]
+            groups += [("channel_metadata", "", channel),
+                       ("sweep_metadata", "", sweep),
+                       ("quarantine", "", failed)]
+            recs = []
+            for table, sub, rows in groups:
+                if not rows:
+                    continue
+                tbl = _arrow_rows(rows, table)
+                runs = (_date_runs(tbl, session_tz)
+                        if "date" in _TABLES[table][1] else [(None, tbl)])
+                for date, part in runs:
+                    rel = os.path.join(
+                        sub, "" if date is None else f"date={date}",
+                        f"part-{task:05d}-{uuid.uuid4()}-c{n_out:03d}"
+                        ".snappy.parquet")
+                    _write_parquet(part, os.path.join(staging, table, rel))
+                    n_out += 1
+                    recs.append((table, rel, None, None))
+            recs += [(None, None, src, None) for src, _ in failed]
+            recs.append((None, None, None, len(b)))
+            yield pd.DataFrame(recs, columns=_STAGED_SCHEMA.names)
+
+    return refs.mapInPandas(run, _STAGED_SCHEMA)
+
+
+def _assemble(staging: str, table: str, files: list[str]) -> str:
+    """A new ``table`` directory under ``staging`` holding exactly
+    ``files`` (paths under ``staging/<table>``) and ``_SUCCESS``. With no
+    file, one empty file of the table's schema, partition columns
+    included, so the table still reads (Spark's writer leaves one for an
+    unpartitioned table)."""
+    new = os.path.join(staging, "_commit", table)
+    os.makedirs(new)
+    for rel in files:
+        os.makedirs(os.path.dirname(os.path.join(new, rel)), exist_ok=True)
+        os.rename(os.path.join(staging, table, rel), os.path.join(new, rel))
+    if not files:
+        _, parts, schema = _TABLES[table]
+        for c in parts:
+            schema = schema.append(
+                pa.field(c, pa.date32() if c == "date" else pa.string()))
+        _write_parquet(schema.empty_table(), os.path.join(
+            new, f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"))
+    open(os.path.join(new, "_SUCCESS"), "wb").close()
+    return new
+
+
 def ingest(spark: SparkSession, paths: str | list[str], out_dir: str,
            tz: str | None = None, hash_check: bool = True,
            allow: int | None = None,
@@ -532,60 +705,55 @@ def ingest(spark: SparkSession, paths: str | list[str], out_dir: str,
 
     - ``{out}/traces``            partitioned by (table, date), rows sorted
       within files by (datetime, frequency) for min/max-stat row pruning
-    - ``{out}/channel_metadata``  partitioned by date
+    - ``{out}/channel_metadata``  partitioned by date, sorted the same way
     - ``{out}/sweep_metadata``    one file-level row each
     - ``{out}/quarantine``        refs that failed decode, with the error
     - ``{out}/ingest_log``        one appended row of counts per run
 
-    Each file is decoded once (``_decode_files``): the one frame holds its
-    trace, channel and sweep rows, or only its quarantine row when any
-    step of its decode fails, so a quarantined file has no row in any
-    table. The frame is persisted (MEMORY_AND_DISK) for the four writes
-    and the log counts, and released on every exit. One Python stage per
-    ingest matters here: each Python task costs about 0.045 s CPU of
-    worker set-up before it decodes anything (0.25 s before the package
-    daemon, see ``_daemon``), so a second pass over the same files would
-    cost more than its parse.
+    ``date`` is the capture's date in ``spark.sql.session.timeZone``.
+
+    One Python stage does the work (``_stage_tables``): each task decodes
+    its files once and writes all four tables' parquet files with pyarrow
+    — one file per (table, partition) per batch, as Spark's
+    dynamic-partition writer leaves them — under
+    ``{out}/_staging-<uuid>``, and returns only their paths, the failed
+    sources and its file count. A file that fails any step of its decode
+    has only its quarantine row. The driver collects those rows once,
+    assembles each table from exactly the files they name (plus
+    ``_SUCCESS``; one empty file of the table's schema when no task wrote
+    one), then swaps the four into place, and removes the staging
+    directory on every exit, so files of a failed or speculative attempt
+    go with it. The trace arrays never
+    enter the JVM, which spent most of an ingest's CPU taking them in and
+    re-encoding them with parquet-mr (the module docstring has the
+    numbers).
+
+    Tasks write to ``out_dir`` with plain file I/O, so it must be a local
+    path every executor sees (as the listing requires of ``paths``).
 
     Returns {logical name: path}.
     """
+    if "://" in out_dir or out_dir.startswith("file:"):
+        raise ValueError(f"ingest() writes to a local path, got {out_dir!r}")
     refs = list_sigmf_refs(spark, paths, allow=allow, batch_size=batch_size)
-    decoded = _decode_files(refs, tz=tz, hash_check=hash_check).persist()
+    staging = os.path.join(out_dir, f"_staging-{uuid.uuid4()}")
+    os.makedirs(staging)
     try:
+        staged = _stage_tables(
+            refs, staging, tz, hash_check,
+            spark.conf.get("spark.sql.session.timeZone")).collect()
+        new = {t: _assemble(staging, t, [r.path for r in staged
+                                         if r.table == t]) for t in _TABLES}
         out = {}
-        tr_path = out["traces"] = os.path.join(out_dir, "traces")
-        (_rows_of(decoded, "trace", TRACE_SCHEMA)
-         .withColumn("date", F.to_date("datetime"))
-         .sortWithinPartitions("datetime", "frequency")
-         .write.mode("overwrite").partitionBy("table", "date")
-         .parquet(tr_path))
-
-        q_path = out["quarantine"] = os.path.join(out_dir, "quarantine")
-        (decoded.where(F.col("error").isNotNull())
-         .select("source_file", "error")
-         .write.mode("overwrite").parquet(q_path))
-
-        ch_path = out["channel_metadata"] = os.path.join(out_dir,
-                                                         "channel_metadata")
-        (_rows_of(decoded, "channel", CHANNEL_META_SCHEMA)
-         .withColumn("date", F.to_date("datetime"))
-         .sortWithinPartitions("datetime", "frequency")
-         .write.mode("overwrite").partitionBy("date").parquet(ch_path))
-
-        sw_path = out["sweep_metadata"] = os.path.join(out_dir,
-                                                       "sweep_metadata")
-        _rows_of(decoded, "sweep", SWEEP_META_SCHEMA) \
-            .write.mode("overwrite").parquet(sw_path)
-
-        # every file left one sweep row or one quarantine row
-        failed = F.col("error").isNotNull()
-        n = (decoded.where((F.col("row_kind") == "sweep") | failed)
-             .agg(F.count(F.lit(1)).alias("files"),
-                  F.countDistinct(F.when(failed, F.col("source_file")))
-                  .alias("bad"))
-             .first())
+        for table, path in new.items():
+            out[table] = os.path.join(out_dir, table)
+            if os.path.isdir(out[table]):
+                shutil.rmtree(out[table])
+            os.rename(path, out[table])
     finally:
-        decoded.unpersist()
+        shutil.rmtree(staging, ignore_errors=True)
+    n_files = sum(r.n_files for r in staged if r.n_files is not None)
+    n_bad = len({r.failed for r in staged if r.failed is not None})
 
     # structured run log (S16 analog of the reference's eliot JSON sink):
     # one row per ingest run with the counts an operator monitors
@@ -593,9 +761,9 @@ def ingest(spark: SparkSession, paths: str | list[str], out_dir: str,
     log_df = spark.createDataFrame(
         pd.DataFrame([{
             "run_at": pd.Timestamp.utcnow().tz_localize(None),
-            "n_files": n.files,
-            "n_quarantined": n.bad,
-            "n_ok": n.files - n.bad,
+            "n_files": n_files,
+            "n_quarantined": n_bad,
+            "n_ok": n_files - n_bad,
             "out_dir": out_dir,
         }]))
     log_df.write.mode("append").parquet(log_path)
@@ -664,7 +832,6 @@ def compact_warehouse(spark: SparkSession, dataset_dir: str,
     Returns a log frame (partition, n_files_before, n_files_after, bytes).
     """
     import math
-    import shutil
 
     leaves: list[str] = []
     for root, dirs, files in os.walk(dataset_dir):
@@ -674,13 +841,13 @@ def compact_warehouse(spark: SparkSession, dataset_dir: str,
 
     log = []
     for leaf in sorted(leaves):
-        pq = [os.path.join(leaf, f) for f in os.listdir(leaf)
-              if f.endswith(".parquet")]
-        nbytes = sum(os.path.getsize(f) for f in pq)
+        parts = [os.path.join(leaf, f) for f in os.listdir(leaf)
+                 if f.endswith(".parquet")]
+        nbytes = sum(os.path.getsize(f) for f in parts)
         k = max(1, math.ceil(nbytes / target_file_bytes))
-        if len(pq) <= k:
+        if len(parts) <= k:
             log.append((os.path.relpath(leaf, dataset_dir),
-                        len(pq), len(pq), nbytes))
+                        len(parts), len(parts), nbytes))
             continue
         df = spark.read.parquet(leaf)
         sort_by = sort_cols or [c for c in ("datetime", "frequency")
@@ -694,6 +861,7 @@ def compact_warehouse(spark: SparkSession, dataset_dir: str,
         os.rename(leaf, old)
         os.rename(tmp, leaf)
         shutil.rmtree(old)
-        log.append((os.path.relpath(leaf, dataset_dir), len(pq), k, nbytes))
+        log.append((os.path.relpath(leaf, dataset_dir), len(parts), k,
+                    nbytes))
     return pd.DataFrame(log, columns=["partition", "n_files_before",
                                       "n_files_after", "bytes"])

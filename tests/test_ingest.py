@@ -1,13 +1,24 @@
 """Distributed ingest tests: listing (files + zip), mapInPandas decode,
 quarantine, partitioned warehouse layout, and partition pruning."""
 
+import datetime
 import os
+import struct
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 import pyspark.sql.functions as F
 
 from nasctn_sea_ingest_spark.sources.ingest import (
+    CHANNEL_META_SCHEMA,
+    SWEEP_META_SCHEMA,
+    TRACE_SCHEMA,
+    _decode_files,
+    _rows_of,
+    backfill_partitions,
+    compact_warehouse,
     decode_channel_metadata,
     decode_dir,
     decode_sweep_metadata,
@@ -158,12 +169,11 @@ def test_warehouse_metadata_matches_standalone_stages(spark, landing,
 
 
 def test_ingest_job_count(spark, landing, tmp_path):
-    """One ingest() over the landing fixture runs 11 Spark jobs: the
-    listing's range sample, the decode that fills the cached frame with
-    the traces write, the quarantine, channel_metadata and sweep_metadata
-    writes (with their planned sorts), the log counts and the log write.
-    A re-added per-file pass adds jobs and fails here. The cached frame
-    is released afterwards."""
+    """One ingest() over the landing fixture runs 4 Spark jobs: the
+    listing's range sample, the shuffle that batches the refs, the
+    collect of the stage that decodes and writes all four tables, and the
+    log write. A re-added per-file pass or a Spark-side table write adds
+    jobs and fails here. No persisted RDD is left behind."""
     sc = spark.sparkContext
     persisted = sc._jsc.getPersistentRDDs().size()
     group = f"ingest-jobs-{tmp_path.name}"
@@ -173,7 +183,7 @@ def test_ingest_job_count(spark, landing, tmp_path):
                str(tmp_path / "wh"))
     finally:
         sc.setJobGroup("", "")
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 11
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
     assert sc._jsc.getPersistentRDDs().size() == persisted
 
 
@@ -186,6 +196,194 @@ def test_ingest_failure_releases_cache(spark, landing, tmp_path):
     with pytest.raises(Exception):
         ingest(spark, landing, str(blocker / "wh"))
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+
+
+def _spark_written(refs, out: str) -> None:
+    """The four tables as Spark's writer leaves them from the one-pass
+    decode: partitioned by (table, date) / date, sorted within files by
+    (datetime, frequency)."""
+    decoded = _decode_files(refs)
+    for name, kind, schema, parts in (
+            ("traces", "trace", TRACE_SCHEMA, ("table", "date")),
+            ("channel_metadata", "channel", CHANNEL_META_SCHEMA, ("date",))):
+        (_rows_of(decoded, kind, schema)
+         .withColumn("date", F.to_date("datetime"))
+         .sortWithinPartitions("datetime", "frequency")
+         .write.partitionBy(*parts).parquet(os.path.join(out, name)))
+    _rows_of(decoded, "sweep", SWEEP_META_SCHEMA).write.parquet(
+        os.path.join(out, "sweep_metadata"))
+    (decoded.where(F.col("error").isNotNull()).select("source_file", "error")
+     .write.parquet(os.path.join(out, "quarantine")))
+
+
+def _stored_rows(path: str) -> tuple:
+    """A parquet file's (column names, rows in file order): timestamps as
+    UTC microseconds, doubles and float arrays as their bytes."""
+    tbl = pq.read_table(path, partitioning=None)
+    cols = []
+    for col in tbl.columns:
+        t = col.type
+        if pa.types.is_timestamp(t):
+            vals = col.cast(pa.timestamp("us")).cast(pa.int64()).to_pylist()
+        elif pa.types.is_list(t):
+            dtype = np.float32 if pa.types.is_float32(t.value_type) \
+                else np.float64
+            vals = [None if v is None else np.asarray(v, dtype).tobytes()
+                    for v in col.to_pylist()]
+        elif pa.types.is_floating(t):
+            vals = [None if v is None else struct.pack("<d", v)
+                    for v in col.to_pylist()]
+        elif pa.types.is_map(t):
+            vals = [None if v is None else sorted(v) for v in col.to_pylist()]
+        else:
+            vals = col.to_pylist()
+        cols.append(vals)
+    return tuple(tbl.column_names), list(zip(*cols))
+
+
+def _leaves(table_dir: str) -> dict:
+    """{leaf dir under the table: its files' ``_stored_rows``, sorted}"""
+    out: dict = {}
+    for d, _, fs in os.walk(table_dir):
+        for f in fs:
+            if f.endswith(".parquet"):
+                out.setdefault(os.path.relpath(d, table_dir), []).append(
+                    _stored_rows(os.path.join(d, f)))
+    return {k: sorted(v, key=repr) for k, v in out.items()}
+
+
+def _assert_sorted_files(table_dir: str) -> None:
+    """Each file's rows are sorted by (datetime, frequency)."""
+    for files in _leaves(table_dir).values():
+        for names, rows in files:
+            i, j = names.index("datetime"), names.index("frequency")
+            keys = [(r[i], struct.unpack("<d", r[j])[0]) for r in rows]
+            assert keys == sorted(keys), table_dir
+
+
+def test_ingest_matches_spark_writer(spark, landing, warehouse, tmp_path):
+    """ingest() writes with pyarrow from its decode tasks; Spark's writer
+    over the same one-pass decode leaves the same warehouse: the same
+    partition directories and files per leaf, the same dtypes read back,
+    the same rows in the same order (floats compared by their bytes), each
+    traces and channel file sorted by (datetime, frequency)."""
+    ref = str(tmp_path / "spark_written")
+    _spark_written(list_sigmf_refs(
+        spark, [landing, os.path.join(landing, "day2.zip")]), ref)
+    for table in ("traces", "channel_metadata", "sweep_metadata",
+                  "quarantine"):
+        got = _leaves(warehouse[table])
+        want = _leaves(os.path.join(ref, table))
+        assert sorted(got) == sorted(want), table
+        assert {k: len(v) for k, v in got.items()} \
+            == {k: len(v) for k, v in want.items()}, table
+        assert got == want, table
+        assert spark.read.parquet(warehouse[table]).dtypes \
+            == spark.read.parquet(os.path.join(ref, table)).dtypes, table
+        if table in ("traces", "channel_metadata"):
+            _assert_sorted_files(warehouse[table])
+    log = spark.read.parquet(warehouse["ingest_log"]).first()
+    assert (log.n_files, log.n_quarantined, log.n_ok) == (14, 2, 12)
+
+
+def test_ingest_empty_tables_read_back(spark, warehouse, tmp_path):
+    """A table no task wrote to still reads, with its schema: the
+    quarantine of an all-good ingest, and the traces, channel and sweep
+    tables of an all-poisoned one."""
+    good, bad = tmp_path / "good", tmp_path / "bad"
+    good.mkdir()
+    bad.mkdir()
+    build_sweep_series(str(good), 2)
+    (bad / "bad_hash.sigmf").write_bytes(build_sigmf(bad_hash=True))
+    (bad / "truncated.sigmf").write_bytes(build_sigmf(truncate=True))
+
+    q = spark.read.parquet(ingest(spark, str(good),
+                                  str(tmp_path / "wh_good"))["quarantine"])
+    assert q.count() == 0
+    assert q.columns == ["source_file", "error"]
+
+    out = ingest(spark, str(bad), str(tmp_path / "wh_bad"))
+    for table in ("traces", "channel_metadata", "sweep_metadata"):
+        df = spark.read.parquet(out[table])
+        assert df.count() == 0, table
+        assert df.dtypes == spark.read.parquet(warehouse[table]).dtypes, table
+    assert spark.read.parquet(out["quarantine"]).count() == 2
+    assert read_product(spark, str(tmp_path / "wh_bad"), "psd").count() == 0
+
+
+def test_ingest_failed_commit_leaves_no_staging(spark, landing, tmp_path):
+    """A commit that fails (a table path taken by a regular file) raises
+    and leaves no staging directory and no persisted RDD behind; an
+    ``out_dir`` that is not a local path is refused up front."""
+    out = tmp_path / "wh"
+    out.mkdir()
+    (out / "traces").write_bytes(b"")
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with pytest.raises(OSError):
+        ingest(spark, landing, str(out))
+    assert [p for p in os.listdir(out) if p.startswith("_staging-")] == []
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+    with pytest.raises(ValueError, match="local path"):
+        ingest(spark, landing, f"file://{tmp_path}/wh2")
+
+
+def test_ingest_date_in_session_time_zone(spark, tmp_path):
+    """``date`` is the capture's date in the session time zone, the value
+    ``F.to_date`` gives: captures at 2023-09-17T00:0xZ fall on
+    2023-09-16 in America/Denver. The files' names list them out of time
+    order, and each file is still sorted by (datetime, frequency)."""
+    src = tmp_path / "src"
+    src.mkdir()
+    build_sweep_series(str(src), 2, start_iso="2023-09-17T00:05:00.000Z",
+                       prefix="a")
+    build_sweep_series(str(src), 2, prefix="b")     # 00:00Z and 00:01:30Z
+    conf = "spark.sql.session.timeZone"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, "America/Denver")
+    try:
+        out = ingest(spark, str(src), str(tmp_path / "wh"))
+        for table in ("traces", "channel_metadata"):
+            got = {tuple(r) for r in spark.read.parquet(out[table])
+                   .select("date", F.to_date("datetime")).distinct().collect()}
+            assert got == {(datetime.date(2023, 9, 16),) * 2}, table
+            _assert_sorted_files(out[table])
+    finally:
+        spark.conf.set(conf, before)
+
+
+def test_backfill_into_ingested_traces(spark, landing, tmp_path):
+    """One table, both writers: Spark's writer backfills a corrected day
+    into an ingest-written ``traces`` dir and appends a late file into an
+    ingest-written leaf; ``read_product`` reads ``datetime`` as a
+    timestamp with the expected counts, and ``compact_warehouse`` of the
+    mixed leaf keeps every row."""
+    zpath = os.path.join(landing, "day2.zip")
+    wh = str(tmp_path / "wh")
+    traces = ingest(spark, [landing, zpath], wh)["traces"]
+
+    def spark_rows(paths, allow=None):
+        return (_rows_of(_decode_files(list_sigmf_refs(spark, paths,
+                                                       allow=allow)),
+                         "trace", TRACE_SCHEMA)
+                .withColumn("date", F.to_date("datetime")))
+
+    backfill_partitions(spark_rows(zpath, allow=5), traces)   # day 2, 5 of 6
+    (spark_rows(os.path.join(landing, "sweep_0001.sigmf"))
+     .where(F.col("table") == "psd")
+     .write.mode("append").partitionBy("table", "date").parquet(traces))
+
+    psd = read_product(spark, wh, "psd")
+    assert dict(psd.dtypes)["datetime"] == "timestamp"
+    per_day = {r.date: r["count"] for r in psd.groupBy("date").count()
+               .collect()}
+    assert per_day == {datetime.date(2023, 9, 17): 7 * N_CH * 2,
+                       datetime.date(2023, 9, 18): 5 * N_CH * 2}
+
+    leaf = os.path.join(traces, "table=psd", "date=2023-09-17")
+    before = sorted(map(repr, spark.read.parquet(leaf).collect()))
+    compact_warehouse(spark, traces, target_file_bytes=1 << 30)
+    assert len([f for f in os.listdir(leaf) if f.endswith(".parquet")]) == 1
+    assert sorted(map(repr, spark.read.parquet(leaf).collect())) == before
 
 
 def test_partition_pruning(spark, warehouse):
