@@ -41,6 +41,7 @@ from .sources.ingest import (
     TRACE_SCHEMA,
     _decode_files,
     _rows_of,
+    _timestamp_cols,
     list_sigmf_refs,
     map_decoded_partitions,
     write_partitions,
@@ -202,8 +203,21 @@ class SparkDelayed:
         if self._pf is not None:
             sdfs = _sdfs_from_refs(refs, tz=self._tz, errors=self._errors,
                                    partition_func=self._pf)
-            return {k: df.toPandas() for k, df in sdfs.items()}
+            return {k: _to_pandas(df) for k, df in sdfs.items()}
         return _collect(refs, self._tz, self._errors)
+
+
+def _to_pandas(df: DataFrame) -> pd.DataFrame:
+    """``df.toPandas()`` with timestamps as the decode gives them, naive
+    UTC: ``toPandas`` renders them in the session time zone instead. They
+    travel as ``unix_micros``, so no zone's DST hour folds two instants
+    into one."""
+    stamps = _timestamp_cols(df.schema)
+    pdf = df.select(*[F.unix_micros(c).alias(c) if c in stamps else c
+                      for c in df.columns]).toPandas()
+    for c in stamps:
+        pdf[c] = pd.to_datetime(pdf[c], unit="us")
+    return pdf
 
 
 def _collect(refs: DataFrame, tz: str | None,
@@ -214,7 +228,7 @@ def _collect(refs: DataFrame, tz: str | None,
     (ziparchive.py:265-277). A file that fails any step of its decode has
     only its quarantine row, so ``errors='log'`` drops it from every table.
     Nothing is cached."""
-    rows = _decode_files(refs, tz=tz).toPandas()
+    rows = _to_pandas(_decode_files(refs, tz=tz))
     bad = rows["error"].notnull()
     if errors == "raise" and bad.any():
         f = rows.loc[bad].iloc[0]

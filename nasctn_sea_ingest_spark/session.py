@@ -12,9 +12,17 @@ so the same logical plans scale to a multi-executor cluster:
 - On a ``local[...]`` master, Python workers fork from the package's daemon
   (``_daemon``): pyspark's own daemon, started after a fix that stops each
   task re-reading the zipped pyspark library's central directory (about
-  0.2 s CPU per Python task before any work, on Python 3.10-3.12). Other
-  masters keep pyspark's daemon: it starts before a task's ``--py-files``
-  are added, so the package may not be importable there.
+  0.2 s CPU per Python task before any work, on Python 3.10-3.12) and
+  after importing the decode path (``sources.ingest``: numpy, pandas,
+  pyarrow) and pyspark's Arrow serializers, then freezing them out of the
+  garbage collector's reach. A freshly forked worker does not spend
+  0.3-0.5 s CPU importing them on its first Arrow task, and pyspark's
+  ``gc.collect()`` after each task no longer walks them (about 0.04 s CPU
+  per task). The daemon's only other thread at a fork is pyarrow's jemalloc
+  background thread, which jemalloc's own ``pthread_atfork`` handlers
+  make safe (``_daemon`` has the details). Other masters keep pyspark's
+  daemon: it starts before a task's ``--py-files`` are added, so the
+  package may not be importable there.
 """
 
 from __future__ import annotations

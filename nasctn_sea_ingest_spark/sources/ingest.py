@@ -39,12 +39,18 @@ decode through
 ``_decode_files``, which emits a file's trace, channel and sweep rows (or
 only its quarantine row) into one frame that the lazy dict splits per
 table, uncached. A separate metadata pass is not free even though its
-parse is: every Python task pays a fixed worker set-up cost of about
-0.045 s CPU (24 one-row tasks, ``local[3]``, 4-core host), so each extra
-``mapInPandas`` stage costs CPU however little it does. The cost was
-about 0.25 s per task until local sessions forked their workers from the
-package's daemon (``_daemon``): pyspark's per-task import-cache reset
-re-read the zipped pyspark library's central directory once per importer.
+parse is: every Python task pays a fixed worker set-up cost, so each
+extra ``mapInPandas`` stage costs CPU however little it does. On local
+sessions the package's daemon (``_daemon``) keeps that cost down (24
+one-row tasks, ``local[3]``, 4-core host): it was about 0.25 s CPU per
+task while pyspark's per-task import-cache reset re-read the zipped
+pyspark library's central directory once per importer, 0.045 s once the
+daemon stopped that, and about 0.005 s since the daemon also imports
+numpy, pandas, pyarrow and this module and freezes them before it forks,
+so pyspark's per-task ``gc.collect()`` skips them. A freshly forked
+worker (one per ``ingest()`` after a ``limit`` read has stopped a worker
+early) no longer spends 0.3-0.5 s importing them on its first Arrow
+task.
 
 At 100 TB scale the refs DataFrame is the only driver-side state (a few
 bytes per file); decode parallelism = number of ref partitions, and the
@@ -214,7 +220,7 @@ def list_sigmf_refs(spark: SparkSession, paths: str | list[str],
     # a Python-RDD that runs a Python task per partition on EVERY action —
     # measured ~0.5-1 s/task of pure overhead under pyspark's own daemon.
     # Local sessions now fork workers from the package's daemon (about
-    # 0.045 s/task, session.py); other masters keep pyspark's, which
+    # 0.005 s/task, session.py); other masters keep pyspark's, which
     # starts before a task's --py-files, so there the cost stays.
     pdf = pd.DataFrame(refs, columns=["path", "member", "size"])
     pdf["seq"] = range(len(pdf))
@@ -266,15 +272,35 @@ def _each_file(batch: pd.DataFrame, zcache: dict, decode, **kw):
         yield src, out, err
 
 
+def _timestamp_cols(schema: T.StructType) -> list[str]:
+    return [f.name for f in schema.fields
+            if isinstance(f.dataType, T.TimestampType)]
+
+
+def _as_utc(pdf: pd.DataFrame, names: list[str]) -> pd.DataFrame:
+    """``pdf`` with its timestamp columns ``names`` UTC-aware: naive ones
+    are UTC, as the decode means them (an aware one keeps its instant).
+    Spark reads a naive datetime from pandas as wall-clock time in
+    ``spark.sql.session.timeZone``, so under any other zone every instant
+    would shift by the zone's offset."""
+    for c in names:
+        pdf[c] = pd.DatetimeIndex(
+            np.array(pdf[c], "datetime64[us]")).tz_localize("UTC")
+    return pdf
+
+
 def _decode_stage(files: DataFrame, schema: T.StructType, decode,
                   **kw) -> DataFrame:
     """``mapInPandas`` over ``_each_file``, whose ``decode`` returns a list
     of ``schema`` rows per file; a failed file becomes one quarantine row:
-    the source, nulls, and the error text in the last column (S15). Each
-    use is one Python stage, with the per-task cost the module docstring
+    the source, nulls, and the error text in the last column (S15).
+    Timestamps go to Spark UTC-aware (``_as_utc``), so every session time
+    zone stores the same instants, the ones ``ingest()`` stores. Each use
+    is one Python stage, with the per-task cost the module docstring
     gives."""
     cols = [f.name for f in schema.fields]
     n_fill = len(cols) - 2
+    stamps = _timestamp_cols(schema)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         zcache: dict = {}
@@ -285,7 +311,7 @@ def _decode_stage(files: DataFrame, schema: T.StructType, decode,
                     recs.extend(rows)
                 else:
                     recs.append((src, *([None] * n_fill), err))
-            yield pd.DataFrame(recs, columns=cols)
+            yield _as_utc(pd.DataFrame(recs, columns=cols), stamps)
 
     return files.mapInPandas(run, schema)
 
@@ -361,9 +387,10 @@ def map_decoded_partitions(refs: DataFrame, partition_func,
             continue  # reference keeps scalar/dict values driver-side
         schema = spark.createDataFrame(pdf.head(10)).schema
         cols = [f.name for f in schema.fields]
+        stamps = _timestamp_cols(schema)
 
-        def run(batches: Iterator[pd.DataFrame], _key=key, _cols=cols
-                ) -> Iterator[pd.DataFrame]:
+        def run(batches: Iterator[pd.DataFrame], _key=key, _cols=cols,
+                _stamps=stamps) -> Iterator[pd.DataFrame]:
             zc: dict = {}
             for b in batches:
                 dicts = []
@@ -382,7 +409,7 @@ def map_decoded_partitions(refs: DataFrame, partition_func,
                     raise ValueError("partition_func must return a dict")
                 got = r.get(_key)
                 if got is not None and len(got):
-                    yield got[_cols]
+                    yield _as_utc(got[_cols].copy(), _stamps)
 
         out[key] = refs.mapInPandas(run, schema)
     return out
@@ -760,7 +787,7 @@ def ingest(spark: SparkSession, paths: str | list[str], out_dir: str,
     log_path = out["ingest_log"] = os.path.join(out_dir, "ingest_log")
     log_df = spark.createDataFrame(
         pd.DataFrame([{
-            "run_at": pd.Timestamp.utcnow().tz_localize(None),
+            "run_at": pd.Timestamp.now("UTC"),
             "n_files": n_files,
             "n_quarantined": n_bad,
             "n_ok": n_files - n_bad,
@@ -803,7 +830,9 @@ def backfill_partitions(df: DataFrame, dataset_dir: str,
             raise ValueError("df carries no partition columns")
     sort_cols = [c for c in ("datetime", "frequency") if c in df.columns]
     if sort_cols:
-        df = df.sortWithinPartitions(*sort_cols)
+        # led by the partition columns: Spark's partitioned writer sorts by
+        # them and replaces a sort that does not start with them
+        df = df.sortWithinPartitions(*partition_cols, *sort_cols)
     (df.write.mode("overwrite")
        .option("partitionOverwriteMode", "dynamic")
        .partitionBy(*partition_cols).parquet(dataset_dir))

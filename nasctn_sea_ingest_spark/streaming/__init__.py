@@ -145,7 +145,10 @@ def stream_to_warehouse(spark: SparkSession, landing_dir: str, out_dir: str,
         try:
             good = (batch_df.where(F.col("error").isNull()).drop("error")
                     .withColumn("date", F.to_date("datetime")))
-            (good.sortWithinPartitions("datetime", "frequency")
+            # led by the partition columns, or the writer's own sort on
+            # them replaces it (as in ingest.backfill_partitions)
+            (good.sortWithinPartitions("table", "date", "datetime",
+                                       "frequency")
                  .write.mode("append").partitionBy("table", "date")
                  .parquet(tr_path))
             bad = batch_df.where(F.col("error").isNotNull()) \

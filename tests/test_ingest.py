@@ -201,14 +201,15 @@ def test_ingest_failure_releases_cache(spark, landing, tmp_path):
 def _spark_written(refs, out: str) -> None:
     """The four tables as Spark's writer leaves them from the one-pass
     decode: partitioned by (table, date) / date, sorted within files by
-    (datetime, frequency)."""
+    (datetime, frequency) behind the partition columns, as
+    ``backfill_partitions`` sorts."""
     decoded = _decode_files(refs)
     for name, kind, schema, parts in (
             ("traces", "trace", TRACE_SCHEMA, ("table", "date")),
             ("channel_metadata", "channel", CHANNEL_META_SCHEMA, ("date",))):
         (_rows_of(decoded, kind, schema)
          .withColumn("date", F.to_date("datetime"))
-         .sortWithinPartitions("datetime", "frequency")
+         .sortWithinPartitions(*parts, "datetime", "frequency")
          .write.partitionBy(*parts).parquet(os.path.join(out, name)))
     _rows_of(decoded, "sweep", SWEEP_META_SCHEMA).write.parquet(
         os.path.join(out, "sweep_metadata"))
@@ -351,6 +352,65 @@ def test_ingest_date_in_session_time_zone(spark, tmp_path):
         spark.conf.set(conf, before)
 
 
+def test_every_reader_stores_the_capture_instant(spark, tmp_path):
+    """Under a non-UTC session every decode path stores the capture's own
+    instant, not its UTC wall clock read as session-local time:
+    ``unix_micros`` of ``datetime`` from the lazy dict, ``decode_traces``,
+    ``decode_dir`` and ``stream_to_warehouse`` equals the decode's own
+    micros and an ``ingest()`` warehouse's, the lazy metadata tables'
+    timestamps equal the warehouse's, and the eager read still returns
+    the decode's naive-UTC datetimes."""
+    from nasctn_sea_ingest_spark.api import read_seamf_zipfile, \
+        read_seamf_zipfile_as_sdf
+    from nasctn_sea_ingest_spark.streaming import stream_to_warehouse
+
+    src = tmp_path / "src"
+    src.mkdir()
+    build_sweep_series(str(src), 2)
+
+    def naive_us(values) -> list:
+        return sorted(np.asarray(values, "datetime64[us]").astype(np.int64)
+                      .tolist())
+
+    want = naive_us(np.concatenate([
+        decode_sigmf(str(f))["psd"]["datetime"].to_numpy()
+        for f in sorted(src.iterdir())]))
+
+    def us(df, col="datetime") -> list:
+        return sorted(-1 if r[0] is None else r[0]
+                      for r in df.select(F.unix_micros(col)).collect())
+
+    def psd(df):
+        return df.where(F.col("table") == "psd")
+
+    conf = "spark.sql.session.timeZone"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, "America/Denver")
+    try:
+        lazy = read_seamf_zipfile_as_sdf(spark, str(src))
+        assert us(lazy["psd"]) == want
+        assert us(psd(decode_traces(list_sigmf_refs(spark, str(src))))) \
+            == want
+        assert us(psd(decode_dir(spark, str(src)))) == want
+        out = ingest(spark, str(src), str(tmp_path / "wh"))
+        assert us(read_product(spark, str(tmp_path / "wh"), "psd")) == want
+        for table, cols in (
+                ("channel_metadata", ("datetime", "cal_datetime")),
+                ("sweep_metadata", ("schedule_start_datetime",
+                                    "diagnostics_datetime"))):
+            stored = spark.read.parquet(out[table])
+            for c in cols:
+                assert us(lazy[table], c) == us(stored, c), (table, c)
+        q = stream_to_warehouse(spark, str(src), str(tmp_path / "swh"),
+                                str(tmp_path / "ckpt"), available_now=True)
+        q.awaitTermination(120)
+        assert us(read_product(spark, str(tmp_path / "swh"), "psd")) == want
+        eager = read_seamf_zipfile(spark, str(src))["psd"]
+        assert naive_us(eager["datetime"]) == want
+    finally:
+        spark.conf.set(conf, before)
+
+
 def test_backfill_into_ingested_traces(spark, landing, tmp_path):
     """One table, both writers: Spark's writer backfills a corrected day
     into an ingest-written ``traces`` dir and appends a late file into an
@@ -460,6 +520,29 @@ def test_backfill_partitions(spark, tmp_path_factory):
 
     backfill_partitions(fix, out)                            # idempotent
     assert spark.read.parquet(out).count() == 3
+
+
+def test_backfill_sorts_each_file(spark, tmp_path):
+    """Rows listed out of time order come out of ``backfill_partitions``
+    sorted by (datetime, frequency) in every file: its sort leads with the
+    partition columns, which Spark's partitioned writer sorts by, and
+    would otherwise sort by alone."""
+    import pandas as pd
+
+    n = 48
+    order = np.random.default_rng(7).permutation(n)
+    df = spark.createDataFrame(pd.DataFrame({
+        "table": ["psd", "pvt"] * (n // 2),
+        "datetime": pd.date_range("2023-09-16 20:00", periods=n,
+                                  freq="13min")[order],
+        "frequency": 3.5e9 + 1e7 * (order % 3),
+        "power": np.arange(n, dtype=float),
+    })).withColumn("date", F.to_date("datetime")).coalesce(1)
+    out = str(tmp_path / "traces")
+    backfill_partitions(df, out)
+    assert sum(len(v) for v in _leaves(out).values()) == 4  # 2 tables x 2 days
+    assert spark.read.parquet(out).count() == n
+    _assert_sorted_files(out)
 
 
 def test_decode_dir_binaryfile(spark, tmp_path_factory):
